@@ -60,7 +60,7 @@ def test_minhash_estimates_track_true_jaccard(spark, sf_dir):
     strong_pairs = {
         (r["doc_a"], r["doc_b"]) for r in true_rows if r["jaccard"] >= 0.8
     }
-    est = minhash_lsh_pairs(docs, hash_mode="xxhash64").collect()
+    est = minhash_lsh_pairs(docs).collect()
     est_pairs = {(r["doc_a"], r["doc_b"]) for r in est if r["est_jaccard"] >= 0.5}
     assert strong_pairs, "generator should plant near-dups"
     recall = len(strong_pairs & est_pairs) / len(strong_pairs)
@@ -87,10 +87,10 @@ def test_ann_lsh_recall(spark, sf_dir):
     assert recall >= 0.7, f"ANN recall too low: {recall}"
 
 
-def test_simhash_xxhash64_mode(spark):
-    """The dictionary-free scale path: identical texts get identical
-    fingerprints, fingerprints stay within 16 bits, and dissimilar texts
-    do not collide on the tiny fixture."""
+def test_simhash_identical_texts_collide(spark):
+    """Identical texts get identical fingerprints, fingerprints stay
+    within 16 bits, and dissimilar texts do not collide on the tiny
+    fixture."""
     from thisishappening_spark.operators.dedup import simhash
 
     docs = spark.createDataFrame(
@@ -101,17 +101,16 @@ def test_simhash_xxhash64_mode(spark):
         ],
         "doc_id bigint, text string",
     )
-    fp = {r["doc_id"]: r["simhash"] for r in simhash(docs, hash_mode="xxhash64").collect()}
+    fp = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
     assert fp[1] == fp[2]
     assert all(0 <= v < (1 << 16) for v in fp.values())
     assert fp[1] != fp[3]
 
 
-def test_doc_fingerprint_xxhash64_mode(spark):
-    """The dictionary-free scale path for doc_fingerprint: identical texts
-    get identical fingerprints, near-identical texts sharing a window keep
-    the shared min when it is the minimum, and the plan contains no global
-    row_number sort (the dictionary mode's single-partition bottleneck)."""
+def test_doc_fingerprint_identical_texts_collide(spark):
+    """Identical texts get identical fingerprints, different texts do not
+    collide on the tiny fixture, and a text shorter than the window has a
+    NULL fingerprint."""
     from thisishappening_spark.operators.textstats import doc_fingerprint
 
     docs = spark.createDataFrame(
@@ -123,15 +122,10 @@ def test_doc_fingerprint_xxhash64_mode(spark):
         ],
         "doc_id bigint, text string",
     )
-    df = doc_fingerprint(docs)  # xxhash64 is the default
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "row_number" not in plan, "scale mode must not rank a dictionary"
-    fp = {r["doc_id"]: r["fingerprint"] for r in df.collect()}
+    fp = {r["doc_id"]: r["fingerprint"] for r in doc_fingerprint(docs).collect()}
     assert fp[1] == fp[2]
     assert fp[1] != fp[3]
     assert fp[4] is None
-    with pytest.raises(ValueError):
-        doc_fingerprint(docs, hash_mode="nope")
 
 
 def test_dedup_ops_leave_no_cache_behind(spark, sf_dir):
@@ -156,19 +150,19 @@ def test_hyperplane_buckets_diverse(spark, sf_dir):
     """The deterministic hyperplane lattice must actually partition the
     corpus: many distinct buckets, and no single bucket hoarding the
     vectors (a degenerate lattice collapses everything into ~2 buckets,
-    which silently turns ANN into brute force)."""
-    from pyspark.sql import functions as F
-
+    which silently turns ANN into brute force). Tables 0 and 1 of the ANN
+    operator's bucket UDF together are the lattice's first 8 planes, so
+    bucket[0] + 16 * bucket[1] is the 8-bit sign code of those planes."""
     from thisishappening_spark.operators.similarity import (
         as_double_vec,
-        hyperplane_signature,
+        lsh_buckets_udf,
     )
     from thisishappening_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     buckets = (
-        emb.select(as_double_vec("embedding").alias("v"))
-        .select(hyperplane_signature("v").alias("bucket"))
+        emb.select(lsh_buckets_udf()(as_double_vec("embedding")).alias("b"))
+        .selectExpr("b[0] + 16 * b[1] AS bucket")
         .groupBy("bucket")
         .count()
         .collect()

@@ -36,22 +36,25 @@ def test_ranked_dictionary_matches_global_row_number(spark, sf_dir):
 
 
 def test_ranked_dictionary_edge_keys(spark):
-    """Empty strings, keys shorter than the bucket prefix, shared prefixes,
-    multibyte codepoints — the order-preserving-prefix argument must hold
-    for all of them."""
+    """NULL, empty strings, keys shorter than the bucket prefix, shared
+    prefixes, multibyte codepoints — the order-preserving-prefix argument
+    must hold for all of them, and a NULL key ranks first as it does under
+    ORDER BY."""
     rows = [
-        ("",), ("a",), ("ab",), ("abc",), ("abcd",), ("abcde",), ("abce",),
-        ("zzzz zzz",), ("éclair",), ("écla",), ("日本語テスト",), ("日本",),
-        ("THE the",), ("the",), ("[",), ("{",),
+        (None,), ("",), ("a",), ("ab",), ("abc",), ("abcd",), ("abcde",),
+        ("abce",), ("zzzz zzz",), ("éclair",), ("écla",), ("日本語テスト",),
+        ("日本",), ("THE the",), ("the",), ("[",), ("{",),
     ]
     df = spark.createDataFrame(rows + rows, "k string")  # with duplicates
-    new = sorted(ranked_dictionary(df, "k", "kid").collect())
-    old = sorted(
-        df.select("k")
+    # keyed by id: None does not sort against str
+    new = {r["kid"]: r["k"] for r in ranked_dictionary(df, "k", "kid").collect()}
+    old = {
+        r["kid"]: r["k"]
+        for r in df.select("k")
         .distinct()
         .withColumn("kid", F.row_number().over(Window.orderBy("k")))
         .collect()
-    )
+    }
     assert new == old
 
 

@@ -1,2 +1,2 @@
-"""Relational + analytic operators (admission filter, windows, KDE,
-clustering, dedup, similarity, text stats, retention)."""
+"""Operators: admission filter, ingest projection, dedup, similarity
+search and text statistics."""

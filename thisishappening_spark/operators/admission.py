@@ -81,9 +81,8 @@ def _ignore_words_pattern(words: tuple[str, ...]) -> str:
     the reference blocks after transliteration ('errór' → 'error') is
     admitted here, and (c) ellipsis-truncated tokens the reference drops
     are matched here. The raw-body predicate is the scan-pushdown-friendly
-    pre-filter; exact parity is available by re-running the predicate over
-    `functions.text.clean_text_column` output (see operators/tokens.py) as
-    a second-stage filter."""
+    pre-filter; exact parity would need a second-stage filter over
+    clean_text()-normalized tokens, which this package does not build."""
     return "(?i)(" + "|".join(words) + ")"
 
 

@@ -7,35 +7,26 @@ as DataFrame transformations whose shuffles are bounded by design:
 - **Exact dedup** shuffles one 32-hex-char key per document (never the
   text): normalize → ``md5`` → groupBy(hash) → keep min(doc_id).
 - **N-gram Jaccard** uses the inverted-index pattern: explode distinct
-  shingles, equi-join on the shingle, count per pair. The join key is the
-  shingle, so only documents *sharing* a shingle ever meet — no all-pairs
-  cross join. ``max_shingle_df`` drops stop-shingles (doc frequency above
-  a cap) before the join, which bounds the worst-case pair fan-out the
-  same way common-token filtering does in production minhash systems.
+  shingles, group them into per-shingle postings lists, pair the
+  documents within each list and count per pair. Only documents *sharing*
+  a shingle ever meet — no all-pairs cross join. ``max_shingle_df`` drops
+  stop-shingles (doc frequency above a cap) before pairing, which bounds
+  the worst-case pair fan-out the same way common-token filtering does in
+  production minhash systems.
 - **MinHash/LSH** reduces each document to a K-integer signature, then
-  band-buckets signatures so candidate pairs come from an equi-join on
-  (band index, band key) — candidate generation is O(candidates), not
-  O(n²).
+  groups signatures by (band index, band key) and pairs documents within
+  each bucket — candidate generation is O(candidates), not O(n²).
 - **SimHash** reduces each document to one small integer fingerprint via
   per-bit weighted majorities; near-dup candidates share a fingerprint
   nibble (pigeonhole on Hamming distance), again an equi-join.
 
-Two hashing modes:
-
-- ``dictionary`` (opt-in, used by the registry's correctness entries):
-  shingle/token IDs come
-  from a rank over the distinct-shingle dictionary, and MinHash permutes
-  IDs with fixed ``(a*id + b) % p`` parameters. Every step is plain
-  integer arithmetic, so a SQL oracle (DuckDB) reproduces it bit-for-bit.
-  The dictionary rank is a global sort of *distinct* shingles — fine up to
-  dictionary sizes that sort comfortably (hundreds of millions), and the
-  deterministic choice for differential testing.
-- ``xxhash64`` (the DEFAULT, and the scale path): shingle IDs come from
-  Spark's built-in ``xxhash64`` — no dictionary, no global sort,
-  embarrassingly parallel. Not oracle-reproducible (DuckDB's hash
-  differs), covered by pytest. The dictionary mode's global row_number
-  sort over distinct shingles is a single-partition bottleneck at corpus
-  scale, so it must never be the default a user copies.
+Token ids: MinHash, SimHash (and textstats.doc_fingerprint) number each
+shingle/token by its rank in the sorted distinct dictionary
+(:func:`ranked_dictionary`), and MinHash permutes ids with fixed
+``(a*id + b) % p`` parameters. Every step is plain integer arithmetic, so
+a SQL oracle (DuckDB) reproduces it bit-for-bit. The rank is two-phase —
+a sort partitioned by key prefix plus an offset table of one row per
+prefix bucket — so no key row crosses a single-partition exchange.
 
 Reference parity note: the reference app has no dedup; this module covers
 the brief's training-pipeline surface (SURVEY.md §2 extension).
@@ -49,7 +40,7 @@ from pyspark.sql import functions as F
 # Modulus and fixed (a, b) parameters for the MinHash permutation family
 # h_i(x) = (a_i * x + b_i) % MINHASH_P. Any fixed odd multipliers work; these
 # are arbitrary primes well below 2^31 so a*id stays far from BIGINT overflow
-# (ids are dictionary ranks or xxhash64 folded to 31 bits).
+# (ids are dictionary ranks, far below 2^31).
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 MINHASH_PARAMS: list[tuple[int, int]] = [
     (1_000_000_007, 12_345),
@@ -119,9 +110,9 @@ def doc_shingles(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    distinct: bool = True,
 ) -> DataFrame:
-    """(doc_id, shingle) pairs: word n-grams over a whitespace split.
+    """Distinct (doc_id, shingle) pairs: word n-grams over a whitespace
+    split.
 
     Stays JVM-side: split + transform(sequence) + explode, no Python UDF.
     The token array is materialized as its own projection first so the
@@ -151,9 +142,7 @@ def doc_shingles(
         f"ELSE transform(sequence(1, size(__toks) - {n - 1}), "
         f"i -> concat_ws(' ', {parts})) END"
     )
-    if distinct:
-        grams = f"array_distinct({grams})"
-    return base.select("doc_id", F.expr(f"explode({grams}) AS shingle"))
+    return base.select("doc_id", F.expr(f"explode(array_distinct({grams})) AS shingle"))
 
 
 # Bucket width (in characters) for the two-phase dictionary rank. A fixed-
@@ -172,16 +161,15 @@ def ranked_dictionary(keys: DataFrame, key_col: str, id_col: str) -> DataFrame:
     in sorted order — the same value ``row_number() OVER (ORDER BY key)``
     assigns, WITHOUT a single-partition sort of the dictionary.
 
-    The r21 verdict flagged the global-window rank as the one remaining
-    scale-killer-shaped node in the dictionary hash mode (a row_number
-    over a Window with no PARTITION BY is a single-partition Exchange +
-    Sort of every distinct key). Two-phase replacement (guide §2.2/§2.5 —
-    parallelize the sort, shuffle only metadata for the cross-partition
-    fix-up):
+    A row_number over a Window with no PARTITION BY would be a
+    single-partition Exchange + Sort of every distinct key. Instead, two
+    phases parallelize the sort and shuffle only metadata for the
+    cross-partition fix-up (guide §2.2/§2.5):
 
     1. bucket = first ``DICT_BUCKET_CHARS`` chars of the key (order-
        preserving, deterministic — unlike range partitioning, whose
-       sampled boundaries would add a sampling job);
+       sampled boundaries would add a sampling job), with a NULL key in
+       the ``''`` bucket;
     2. ``row_number() OVER (PARTITION BY bucket ORDER BY key)`` — the big
        sort now runs one task per bucket;
     3. global offset per bucket = running sum of bucket sizes in bucket
@@ -189,11 +177,10 @@ def ranked_dictionary(keys: DataFrame, key_col: str, id_col: str) -> DataFrame:
        rows, the only remaining single-partition step), broadcast back;
     4. id = offset + per-bucket row number.
 
-    Both consumers of the distinct-key exchange (the per-bucket rank and
-    the bucket counts) read the identical subtree, so the physical planner
-    reuses one shuffle (same ReusedExchange pattern jaccard_pairs pins).
+    A NULL key ranks first, as under ``ORDER BY key``: ``''`` is the
+    smallest bucket, and the per-bucket sort puts NULLs first.
     """
-    b = f"substring({key_col}, 1, {DICT_BUCKET_CHARS})"
+    b = f"coalesce(substring({key_col}, 1, {DICT_BUCKET_CHARS}), '')"
     rw = keys.select(key_col).distinct().selectExpr(
         key_col,
         f"{b} AS __b",
@@ -218,24 +205,10 @@ def shingle_dictionary(shingles: DataFrame) -> DataFrame:
 
     Deterministic-integer IDs so the SQL oracle can reproduce MinHash
     exactly. Ranked by the two-phase bucketed rank (see
-    :func:`ranked_dictionary`) — identical ids to the old global
-    row_number, no single-partition sort of the dictionary. For the
-    non-differential scale path use ``hash_mode='xxhash64'`` in
-    :func:`minhash_signatures` and skip the dictionary entirely.
+    :func:`ranked_dictionary`), so the dictionary is never sorted in a
+    single partition.
     """
     return ranked_dictionary(shingles, "shingle", "sid")
-
-
-def _shingle_ids(shingles: DataFrame, hash_mode: str) -> DataFrame:
-    if hash_mode == "dictionary":
-        d = shingle_dictionary(shingles)
-        return shingles.join(d, "shingle").select("doc_id", "sid")
-    if hash_mode == "xxhash64":
-        # Fold to 31 bits so (a * sid) stays far below BIGINT overflow.
-        return shingles.select(
-            "doc_id", F.expr(f"pmod(xxhash64(shingle), {MINHASH_P}) AS sid")
-        )
-    raise ValueError(f"unknown hash_mode {hash_mode!r}")
 
 
 def minhash_signatures(
@@ -243,7 +216,6 @@ def minhash_signatures(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Per-document MinHash signature: columns mh0..mh{K-1}.
 
@@ -251,7 +223,8 @@ def minhash_signatures(
     (map-side partial min per component), so the shuffle carries K ints per
     document regardless of document size.
     """
-    ids = _shingle_ids(doc_shingles(docs, n, text_col, id_col), hash_mode)
+    shingles = doc_shingles(docs, n, text_col, id_col)
+    ids = shingles.join(shingle_dictionary(shingles), "shingle").select("doc_id", "sid")
     # One parsed string per component instead of ~8 Py4J round trips each
     # (same expression: CAST(a AS BIGINT) * sid + b, then % p).
     aggs = [
@@ -283,36 +256,11 @@ def _band_table(signatures: DataFrame) -> DataFrame:
     ).select("doc_id", "sig", F.expr("bk.band AS band"), F.expr("bk.band_key AS band_key"))
 
 
-def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
-    """Band the K-component signature into LSH_BANDS buckets and emit
-    candidate pairs (doc_a < doc_b) that collide in ≥1 band.
-
-    Candidate generation is an equi-join on (band, key): documents never
-    pair up unless a whole band matches, so the pair count tracks the
-    number of real near-dups, not n². At 100 TB the band table is
-    (LSH_BANDS × n_docs) rows of small strings — a normal shuffle join.
-    """
-    bands = _band_table(signatures)
-    left = bands.alias("l")
-    right = bands.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
     max_bucket_df: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs with the estimated Jaccard (fraction of equal
@@ -346,7 +294,7 @@ def minhash_lsh_pairs(
     signature arrays carried through the bucket structs (a 16-term
     zip_with), so no join back to the signatures is needed.
     """
-    sigs = minhash_signatures(docs, n, text_col, id_col, hash_mode)
+    sigs = minhash_signatures(docs, n, text_col, id_col)
     bands = _band_table(sigs)
     buckets = (
         bands.groupBy("band", "band_key")
@@ -396,8 +344,9 @@ def jaccard_pairs(
     (collect_list of doc ids, bounded by the cap → bounded group memory),
     the cap is a free filter on the group size, and both the per-doc
     shingle counts and the candidate pairs re-derive from the *same*
-    postings subtree (``ReusedExchange`` replays the groupBy(shingle)
-    shuffle for the second consumer). Pair generation is bucket-local: two
+    postings subtree: the executed plan replays the groupBy(shingle)
+    shuffle for the second consumer as a ``ReusedExchange``
+    (test_ngram_jaccard_reuses_postings_exchange pins it). Pair generation is bucket-local: two
     chained ``explode`` s of the posting array (codegen Generate
     operators) with ``doc_a < doc_b`` — no self-join and no interpreted
     nested-``transform``; the blow-up per posting is bounded by the df
@@ -439,7 +388,6 @@ def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Per-document SimHash fingerprint (SIMHASH_BITS bits) over unigram
     tokens weighted by occurrence count.
@@ -454,13 +402,7 @@ def simhash(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.col(text_col), " ")).alias("tok"),
     )
-    if hash_mode == "dictionary":
-        d = ranked_dictionary(toks, "tok", "tid")
-        ids = toks.join(d, "tok").select("doc_id", "tid")
-    elif hash_mode == "xxhash64":
-        ids = toks.select("doc_id", F.expr(f"pmod(xxhash64(tok), {MINHASH_P}) AS tid"))
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    ids = toks.join(ranked_dictionary(toks, "tok", "tid"), "tok").select("doc_id", "tid")
     params = MINHASH_PARAMS[:SIMHASH_BITS]
     # Parsed-string form of the same expressions (see doc_shingles note):
     # the Column form of these 16 majorities + the fingerprint fold was

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from thisishappening_spark.operators.dedup import ranked_dictionary
+
 # Minimal English function-word list for the stopword-ratio heuristic.
 # (A deliberately small, public list — the heuristic needs a stable set,
 # not linguistic completeness.)
@@ -144,21 +146,14 @@ def doc_fingerprint(
     text_col: str = "text",
     id_col: str = "doc_id",
     window: int = 3,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Rolling-hash document fingerprint: min over token-trigram window
     hashes h = (tid1·31² + tid2·31 + tid3) mod p.
 
-    Two token-ID modes, mirroring operators/dedup.py:
-
-    - ``xxhash64`` (default, the scale path): tid = xxhash64(tok) folded
-      to 31 bits — no dictionary, no global sort, embarrassingly
-      parallel. Not oracle-reproducible (DuckDB hashes differ);
-      pytest-covered.
-    - ``dictionary`` (differential-testing opt-in): tid = rank of the
-      token in the sorted distinct-token dictionary; engine-portable
-      integer arithmetic the DuckDB oracle reproduces bit-for-bit. The
-      global row_number is a single-partition sort — never the default.
+    tid is the rank of the token in the sorted distinct-token dictionary
+    (:func:`~thisishappening_spark.operators.dedup.ranked_dictionary`, the
+    same ids dedup.simhash uses): engine-portable integer arithmetic the
+    DuckDB oracle reproduces bit-for-bit.
 
     The min-of-window-hashes is the 1-fingerprint special case of
     winnowing.
@@ -167,17 +162,9 @@ def doc_fingerprint(
         F.col(id_col).alias("doc_id"),
         F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
     )
-    if hash_mode == "dictionary":
-        from thisishappening_spark.operators.dedup import ranked_dictionary
-
-        d = ranked_dictionary(toks, "tok", "tid")
-        ids = toks.join(d, "tok").select("doc_id", "pos", "tid")
-    elif hash_mode == "xxhash64":
-        ids = toks.select(
-            "doc_id", "pos", F.expr(f"pmod(xxhash64(tok), {FP_P}) AS tid")
-        )
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    ids = toks.join(ranked_dictionary(toks, "tok", "tid"), "tok").select(
+        "doc_id", "pos", "tid"
+    )
     seq = ids.groupBy("doc_id").agg(
         F.expr(
             "transform(array_sort(collect_list(struct(pos, tid))), s -> s.tid)"

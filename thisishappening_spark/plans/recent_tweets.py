@@ -1,17 +1,15 @@
 """The reference's most-called query path as parameterized DataFrame plans.
 
 `get_recent_tweets` (reference data_base.py:307-382) is called 4× per
-arriving tweet; `count_tweets` (:276-305), `get_recent_events` (:90-116),
-`get_most_recent_*`/`get_oldest_tweet` (:118-130, :384-416) round out the
-surface. Each builder here composes the exact predicate stack (Q1-Q8 in
+arriving tweet; `count_tweets` (:276-305), `get_recent_events` (:90-116)
+and the event PK lookup (:134-139) round out the surface. Each builder here composes the exact predicate stack (Q1-Q8 in
 SURVEY.md §2.2) onto any tweets-shaped DataFrame and lets Catalyst push
 every filter to the scan.
 
 Scale notes: every query carries a time bound (Q1), which on a
 date-partitioned table becomes partition pruning — the 100 TB plan reads
 only the window's partitions. The bbox (Q2) and flag predicates are
-parquet row-group min/max prunable. `most_recent`/`oldest` (W4/O3) compile
-to TakeOrderedAndProject (per-partition top-1 + merge), never a full sort.
+parquet row-group min/max prunable.
 """
 
 from __future__ import annotations
@@ -62,8 +60,8 @@ def recent_tweets(
     """Mirror of get_recent_tweets (reference data_base.py:307-382),
     newest-first (O1) when ``ordered``.
 
-    ``ordered=False`` skips the O1 sort for pipeline consumers (KDE
-    weighting, window counting) that don't need order — the unconditional
+    ``ordered=False`` skips the O1 sort for pipeline consumers
+    (weighting, window counting) that don't need order — the unconditional
     global range-partition sort would otherwise dominate the hot path at
     scale. The user-facing query keeps the reference's newest-first default.
 
@@ -140,26 +138,3 @@ def event_by_id(events: DataFrame, event_id: int, id_col: str = "id") -> DataFra
     """Q8 PK lookup (reference data_base.py:134-139)."""
     return events.filter(F.col(id_col) == F.lit(event_id))
 
-
-def most_recent_tweet(
-    tweets: DataFrame,
-    bounding_box: BoundingBox | None = None,
-    time_col: str = "created_at",
-) -> DataFrame:
-    """W4/O3 global top-1 by time desc (reference data_base.py:401-416)."""
-    df = tweets
-    if bounding_box is not None:
-        df = df.filter(inbounds_half_open("longitude", "latitude", bounding_box))
-    return df.orderBy(F.desc(time_col)).limit(1)
-
-
-def oldest_tweet(
-    tweets: DataFrame,
-    bounding_box: BoundingBox | None = None,
-    time_col: str = "created_at",
-) -> DataFrame:
-    """O3 global top-1 by time asc (reference data_base.py:384-399)."""
-    df = tweets
-    if bounding_box is not None:
-        df = df.filter(inbounds_half_open("longitude", "latitude", bounding_box))
-    return df.orderBy(F.asc(time_col)).limit(1)

@@ -192,10 +192,8 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash/LSH candidate pairs (16 hashes, 4 bands of 4 rows) with the
     signature-estimated Jaccard.
 
-    Scale: candidates come from an equi-join on (band, band_key) — never
-    an all-pairs comparison. Dictionary-ID hashing here is the
-    differential-testing mode; ``hash_mode='xxhash64'`` is the
-    dictionary-free scale path (pytest-covered).
+    Scale: candidates come from grouping on (band, band_key) — never an
+    all-pairs comparison.
 
     fan-out: REVERTED r22. The r21 round-robin exchange before the shingle
     transform measured 0.66× in the driver's environment; the r22
@@ -207,7 +205,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     it fixes is amortized over less downstream work per pass.
     """
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(docs, hash_mode="dictionary")
+    return dedup.minhash_lsh_pairs(docs)
 
 
 @query(
@@ -238,7 +236,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (equi-join, pigeonhole on Hamming ≤ 3).
     """
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash(docs, hash_mode="dictionary")
+    return dedup.simhash(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -454,10 +452,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash document fingerprint (min over token-trigram window
     hashes — the 1-fingerprint special case of winnowing).
 
-    Scale: per-doc array math after one explode/collect round-trip;
-    dictionary IDs here are the differential-testing opt-in (the
-    operator's default is the dictionary-free xxhash64 scale path,
-    pytest-covered).
+    Scale: per-doc array math after one explode/collect round-trip.
     """
     docs = load_table(spark, sf_dir, "documents")
-    return textstats.doc_fingerprint(docs, hash_mode="dictionary")
+    return textstats.doc_fingerprint(docs)

@@ -55,18 +55,3 @@ def dec(col: Column, scale: int = 2) -> Column:
 def dsum(col: Column, scale: int = 2) -> Column:
     return F.sum(dec(col, scale)).cast("double")
 
-
-def qsum(col: Column, quant_scale: int = 15, round_to: int = 6) -> Column:
-    """Order-independent sum of a transcendental double expression: quantize
-    each term to DECIMAL(28,quant_scale), sum exactly, round the total.
-    The per-term quantization makes the sum independent of partial-agg
-    order; the final round absorbs last-ulp libm differences between
-    engines (Spark's Math.exp vs DuckDB's std::exp)."""
-    return F.round(F.sum(col.cast(f"decimal(28,{quant_scale})")).cast("double"), round_to)
-
-
-def qsum_sql(expr: str, quant_scale: int = 15, round_to: int = 6) -> str:
-    """DuckDB-side twin of qsum."""
-    return (
-        f"ROUND(CAST(SUM(CAST({expr} AS DECIMAL(28,{quant_scale}))) AS DOUBLE), {round_to})"
-    )

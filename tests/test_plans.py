@@ -7,27 +7,22 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from thisishappening_spark.functions.geo import BoundingBox
 from thisishappening_spark.plans.recent_tweets import recent_tweets
 from thisishappening_spark.sources.tweets_view import load_tweets
 
+from tests.executed_plans import executed_plan, final_plan, reused_bucket_exchanges
+
 BBOX = BoundingBox(west=-71.15, south=42.25, east=-70.95, north=42.45)
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def _final_plan(spark, sf_dir, name: str) -> str:
-    """Run a registry query, then return the final section of its AQE plan
-    (the plan that actually executed, not the pre-execution one)."""
+    """The final AQE plan of a registry query, after running it."""
     from thisishappening_spark.queries import REGISTRY
 
-    df = REGISTRY[name].fn(spark, sf_dir)
-    df.collect()
-    plan = _plan(df)
-    assert "isFinalPlan=true" in plan, plan
-    return plan.split("== Initial Plan ==")[0]
+    return final_plan(REGISTRY[name].fn(spark, sf_dir))
 
 
 def test_recent_tweets_unordered_has_no_sort(spark, sf_dir):
@@ -39,20 +34,20 @@ def test_recent_tweets_unordered_has_no_sort(spark, sf_dir):
         bounding_box=BBOX,
         ordered=False,
     )
-    assert "Sort" not in _plan(df)
+    assert "Sort" not in executed_plan(df)
 
 
 def test_recent_tweets_ordered_keeps_o1_sort(spark, sf_dir):
     tw = load_tweets(spark, sf_dir)
     df = recent_tweets(tw, timestamp=dt.datetime(2024, 1, 10, 12), hours=48)
-    assert "Sort" in _plan(df)
+    assert "Sort" in executed_plan(df)
 
 
 def test_sliding_window_counts_no_nested_loop(spark, sf_dir):
     from thisishappening_spark.queries import REGISTRY
 
     df = REGISTRY["q_sliding_window_counts"].fn(spark, sf_dir)
-    assert "NestedLoop" not in _plan(df)
+    assert "NestedLoop" not in executed_plan(df)
 
 
 def test_ann_dedup_keys_on_ids_not_vectors(spark, sf_dir):
@@ -67,3 +62,12 @@ def test_q01_fans_out_narrow_lineitem_scan(spark, sf_dir):
     session's cores, so q01 round-robins the scan before aggregating."""
     plan = _final_plan(spark, sf_dir, "q01_pricing_summary")
     assert "RoundRobinPartitioning" in plan, plan
+
+
+@pytest.mark.parametrize("name", ["q_simhash", "q_minhash_lsh_pairs", "q_doc_fingerprint"])
+def test_dictionary_rank_reuses_bucket_exchange(spark, sf_dir, name):
+    """The bucket offsets come from the same bucket exchange as the
+    per-bucket rank: the final plan reads it back as a ReusedExchange
+    instead of scanning and shingling the corpus a second time."""
+    plan = _final_plan(spark, sf_dir, name)
+    assert reused_bucket_exchanges(plan) == 1, plan

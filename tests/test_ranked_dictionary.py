@@ -15,9 +15,7 @@ from thisishappening_spark.operators.dedup import (
 )
 from thisishappening_spark.sources.tables import load_table
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.executed_plans import final_plan
 
 
 def test_ranked_dictionary_matches_global_row_number(spark, sf_dir):
@@ -60,11 +58,11 @@ def test_ranked_dictionary_edge_keys(spark):
 
 def test_shingle_dictionary_rank_is_partitioned(spark, sf_dir):
     """The scale guard: the dictionary-key sort must not be a global
-    window. The only SinglePartition exchange allowed in the plan is the
-    O(buckets) count/offset table (carries the __c count column), never
-    the key rows themselves."""
+    window. The only SinglePartition exchange allowed in the executed
+    (final AQE) plan is the O(buckets) count/offset table (carries the __c
+    count column), never the key rows themselves."""
     docs = load_table(spark, sf_dir, "documents")
-    plan = _plan(shingle_dictionary(doc_shingles(docs)))
+    plan = final_plan(shingle_dictionary(doc_shingles(docs)))
     # row_number runs partitioned by the bucket prefix:
     assert "row_number()" in plan
     for frag in plan.split("Exchange SinglePartition")[1:]:

@@ -124,3 +124,21 @@ def test_invalidate_relation_cache_picks_up_rewritten_data(spark, sf_dir, tmp_pa
     fresh = load_table(spark, other, "documents")
     assert fresh is not first, "invalidate must drop the pinned relation"
     assert fresh.count() == 5
+
+
+def test_invalidate_relation_cache_keeps_sibling_sharing_the_prefix(spark, sf_dir, tmp_path):
+    """Invalidating sf0.1 drops what was loaded from it, never the relations
+    of a sibling directory whose name extends it (sf0.10)."""
+    from thisishappening_spark.sources.tables import invalidate_relation_cache
+
+    base = load_table(spark, sf_dir, "documents")
+    for d in ("sf0.1", "sf0.10"):
+        base.limit(3).write.mode("overwrite").parquet(str(tmp_path / d / "documents.parquet"))
+    target = load_table(spark, str(tmp_path / "sf0.1"), "documents")
+    sibling = load_table(spark, str(tmp_path / "sf0.10"), "documents")
+
+    invalidate_relation_cache(spark, str(tmp_path / "sf0.1"))
+    assert load_table(spark, str(tmp_path / "sf0.1"), "documents") is not target
+    assert load_table(spark, str(tmp_path / "sf0.10"), "documents") is sibling, (
+        "invalidating sf0.1 dropped the cached sf0.10 relation"
+    )

@@ -188,8 +188,10 @@ def invalidate_relation_cache(
     ``spark=None`` clears every session's entries; ``path=None`` clears
     every path for the given session. ``path`` may name the table file/dir
     itself or the sf_dir the table was loaded from (both resolve by
-    absolute-path prefix). Also refreshes Spark's own per-path file-index
-    cache via ``catalog.refreshByPath`` so the re-read re-lists.
+    absolute path: the path itself and everything under it, never a
+    sibling such as ``sf0.10`` for ``sf0.1``). Also refreshes Spark's own
+    per-path file-index cache via ``catalog.refreshByPath`` so the re-read
+    re-lists.
     """
     sessions = [spark] if spark is not None else list(_RELATION_CACHE.keys())
     for s in sessions:
@@ -200,8 +202,11 @@ def invalidate_relation_cache(
             per_session.clear()
             continue
         abs_path = os.path.abspath(path)
-        for key in [k for k in per_session if k.split("::")[0].startswith(abs_path)]:
-            del per_session[key]
+        under = os.path.join(abs_path, "")  # a sibling sharing the prefix is not under it
+        for key in list(per_session):
+            table = key.split("::")[0]
+            if table == abs_path or table.startswith(under):
+                del per_session[key]
         try:
             s.catalog.refreshByPath(abs_path)
         except Exception:

@@ -13,7 +13,7 @@ CODEGEN_TOTALS = pytest.StashKey[tuple[int, float]]()
 def spark(request):
     from thisishappening_spark.session import get_spark
 
-    spark = get_spark(app_name="tih-tests", shuffle_partitions=8)
+    spark = get_spark(app_name="tih-tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield spark
     # Janino compilations this run: a count far above the distinct plans
     # the tests build means the generated-code cache is thrashing.

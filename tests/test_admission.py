@@ -7,11 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from thisishappening_spark.functions.geo import BoundingBox
-from thisishappening_spark.operators.admission import (
-    AdmissionColumns,
-    AdmissionConfig,
-    admission_checks,
-)
+from thisishappening_spark.operators.admission import AdmissionConfig, admission_check_exprs
 
 RING = [[-71.10, 42.30], [-71.10, 42.40], [-71.00, 42.40], [-71.00, 42.30], [-71.10, 42.30]]
 
@@ -25,6 +21,12 @@ def _df(spark, rows):
         "is_reply_status boolean, friends_count long, followers_count long, "
         "place_ring array<array<double>>",
     )
+
+
+def check(df, cfg, name):
+    """The named admission check evaluated on every row of ``df``."""
+    expr = admission_check_exprs(df, cfg)[name]
+    return [r.ok for r in df.select(F.expr(expr).alias("ok")).collect()]
 
 
 def base_row(**kw):
@@ -51,7 +53,6 @@ def base_row(**kw):
 def test_place_bbox_containment(spark):
     """P2: point inside the polygon's min/max bbox passes; outside fails;
     no ring or no coords → vacuously true (tweet_utils.py:227-229)."""
-    cfg = AdmissionConfig(columns=AdmissionColumns(place_ring="place_ring"))
     df = _df(
         spark,
         [
@@ -61,10 +62,11 @@ def test_place_bbox_containment(spark):
             base_row(longitude=-70.50, has_coords=False),  # no coords → vacuous
         ],
     )
-    out = df.select(
-        admission_checks(cfg)["in_place_bounding_box"].alias("ok")
-    ).collect()
-    assert [r.ok for r in out] == [True, False, True, True]
+    assert check(df, AdmissionConfig(), "in_place_bounding_box") == [True, False, True, True]
+    # a frame without the ring column has no P2 check at all
+    assert "in_place_bounding_box" not in admission_check_exprs(
+        df.drop("place_ring"), AdmissionConfig()
+    )
 
 
 def test_lat_lon_quirk_compat(spark):
@@ -81,12 +83,10 @@ def test_lat_lon_quirk_compat(spark):
     df = _df(spark, rows)
 
     intent = AdmissionConfig(ignore_lon_lat=blocked)
-    out = df.select(admission_checks(intent)["valid_lat_lon"].alias("ok")).collect()
-    assert [r.ok for r in out] == [False, True, True]
+    assert check(df, intent, "valid_lat_lon") == [False, True, True]
 
     quirk = AdmissionConfig(ignore_lon_lat=blocked, lat_lon_quirk_compat=True)
-    out = df.select(admission_checks(quirk)["valid_lat_lon"].alias("ok")).collect()
-    assert [r.ok for r in out] == [False, False, True]
+    assert check(df, quirk, "valid_lat_lon") == [False, False, True]
 
 
 def test_full_conjunction_drops_each_violation(spark):
@@ -103,7 +103,6 @@ def test_full_conjunction_drops_each_violation(spark):
         ignore_reply_status=True,
         min_friends_count=2,
         min_followers_count=2,
-        columns=AdmissionColumns(place_ring="place_ring"),
     )
     rows = [
         base_row(),  # passes everything

@@ -4,6 +4,8 @@ express."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 from tests.oracle import compare
@@ -27,7 +29,7 @@ def test_differential(spark, sf_dir, name):
 
 
 def test_exact_dedup_collapses_duplicates(spark):
-    from thisishappening_spark.operators.dedup import exact_dedup, exact_dedup_groups
+    from thisishappening_spark.operators.dedup import exact_dedup_groups
 
     docs = spark.createDataFrame(
         [
@@ -41,8 +43,6 @@ def test_exact_dedup_collapses_duplicates(spark):
     )
     groups = {r["keep_doc_id"]: r["n_docs"] for r in exact_dedup_groups(docs).collect()}
     assert groups == {1: 2, 3: 2, 5: 1}
-    kept = sorted(r["doc_id"] for r in exact_dedup(docs).collect())
-    assert kept == [1, 3, 5]
 
 
 def test_minhash_estimates_track_true_jaccard(spark, sf_dir):
@@ -83,7 +83,7 @@ def test_ann_lsh_recall(spark, sf_dir):
     }
     recall = len(exact & approx) / len(exact)
     # Deterministic lattice + fixed data → deterministic result; measured
-    # 0.93 at the default 8×4-bit tables with Hamming-1 probes.
+    # 0.93 with the 8×4-bit tables and Hamming-1 probes.
     assert recall >= 0.7, f"ANN recall too low: {recall}"
 
 
@@ -256,3 +256,60 @@ def test_ann_dedups_candidates_before_rerank(spark, sf_dir):
         "exact rerank runs below the candidate dedup — every bucket "
         "collision pays the decimal dot again"
     )
+
+
+def test_ann_scores_are_exact_cosines(spark, sf_dir):
+    """Every q_ann_lsh_topk row carries the exact cosine of its (query,
+    neighbor) pair, computed by DuckDB with q_cosine_topk's decimal
+    formula, and ranks follow (cos_sim desc, neighbor_id) within a query.
+    The recall test checks which neighbors come back; this checks their
+    scores and order."""
+    from tests.oracle import duckdb_conn
+    from thisishappening_spark.operators.similarity import EMB_DIM
+    from thisishappening_spark.queries import REGISTRY
+
+    rows = REGISTRY["q_ann_lsh_topk"].fn(spark, sf_dir).collect()
+    assert rows
+    pairs = ", ".join(f"({r.query_id}, {r.neighbor_id})" for r in rows)
+    con = duckdb_conn(sf_dir)
+    exact = con.sql(f"""
+        WITH pos AS (SELECT unnest(range(1, {EMB_DIM + 1})) AS i),
+        pairs AS (SELECT * FROM (VALUES {pairs}) p(query_id, neighbor_id)),
+        vecs AS (
+          SELECT vec_id, embedding FROM embeddings
+          WHERE vec_id IN (SELECT query_id FROM pairs UNION SELECT neighbor_id FROM pairs)
+        ),
+        norms AS (
+          SELECT vec_id,
+                 SUM(CAST(CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
+                     AS DECIMAL(28,15))) AS n2
+          FROM vecs, pos GROUP BY vec_id
+        ),
+        dots AS (
+          SELECT p.query_id, p.neighbor_id,
+                 SUM(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
+                     AS DECIMAL(28,15))) AS dot
+          FROM pairs p
+          JOIN vecs q ON q.vec_id = p.query_id
+          JOIN vecs e ON e.vec_id = p.neighbor_id, pos
+          GROUP BY 1, 2
+        )
+        SELECT dots.query_id, dots.neighbor_id,
+               ROUND(CAST(dot AS DOUBLE)
+                     / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nn.n2 AS DOUBLE))), 6)
+        FROM dots
+        JOIN norms nq ON dots.query_id = nq.vec_id
+        JOIN norms nn ON dots.neighbor_id = nn.vec_id
+    """).fetchall()
+    want = {(q, n): cos for q, n, cos in exact}
+    assert len(want) == len(rows), "a (query, neighbor) pair repeats"
+    for r in rows:
+        cos = want[(r.query_id, r.neighbor_id)]
+        assert math.isclose(r.cos_sim, cos, rel_tol=1e-9, abs_tol=1e-9), (
+            f"query {r.query_id} neighbor {r.neighbor_id}: cos_sim {r.cos_sim} != {cos}"
+        )
+    for q in {r.query_id for r in rows}:
+        ranked = sorted((r for r in rows if r.query_id == q), key=lambda r: r.rank)
+        assert [r.rank for r in ranked] == list(range(1, len(ranked) + 1)), q
+        keys = [(-r.cos_sim, r.neighbor_id) for r in ranked]
+        assert keys == sorted(keys), f"query {q}: ranks do not follow (cos desc, id): {ranked}"

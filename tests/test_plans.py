@@ -57,13 +57,6 @@ def test_ann_dedup_keys_on_ids_not_vectors(spark, sf_dir):
     assert "knownfloatingpointnormalized" not in plan, plan
 
 
-def test_q01_fans_out_narrow_lineitem_scan(spark, sf_dir):
-    """lineitem is one parquet row group at the test SF, fewer than the
-    session's cores, so q01 round-robins the scan before aggregating."""
-    plan = _final_plan(spark, sf_dir, "q01_pricing_summary")
-    assert "RoundRobinPartitioning" in plan, plan
-
-
 @pytest.mark.parametrize("name", ["q_simhash", "q_minhash_lsh_pairs", "q_doc_fingerprint"])
 def test_dictionary_rank_reuses_bucket_exchange(spark, sf_dir, name):
     """The bucket offsets come from the same bucket exchange as the

@@ -8,11 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from thisishappening_spark.operators.dedup import (
-    doc_shingles,
-    ranked_dictionary,
-    shingle_dictionary,
-)
+from thisishappening_spark.operators.dedup import doc_shingles, ranked_dictionary
 from thisishappening_spark.sources.tables import load_table
 
 from tests.executed_plans import final_plan
@@ -62,7 +58,7 @@ def test_shingle_dictionary_rank_is_partitioned(spark, sf_dir):
     (final AQE) plan is the O(buckets) count/offset table (carries the __c
     count column), never the key rows themselves."""
     docs = load_table(spark, sf_dir, "documents")
-    plan = final_plan(shingle_dictionary(doc_shingles(docs)))
+    plan = final_plan(ranked_dictionary(doc_shingles(docs), "shingle", "sid"))
     # row_number runs partitioned by the bucket prefix:
     assert "row_number()" in plan
     for frag in plan.split("Exchange SinglePartition")[1:]:

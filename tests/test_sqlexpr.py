@@ -70,17 +70,14 @@ def test_admission_empty_place_types_compiles(spark):
     """valid_place_types=() previously rendered 'IN ()' — a ParseException
     (ADVICE r21). It must compile to isin([]) semantics: keep only rows
     with coordinates."""
-    from thisishappening_spark.operators.admission import (
-        AdmissionConfig,
-        admission_predicate,
-    )
+    from thisishappening_spark.operators.admission import AdmissionConfig, admit
 
     df = spark.createDataFrame(
         [(1, "body", True, "city", 5, 5), (2, "body", False, "city", 5, 5)],
         "id INT, tweet_body STRING, has_coords BOOLEAN, place_type STRING, "
         "friends_count INT, followers_count INT",
     )
-    kept = df.filter(admission_predicate(AdmissionConfig(valid_place_types=())))
+    kept = admit(df, AdmissionConfig(valid_place_types=()))
     assert [r.id for r in kept.collect()] == [1]
 
 

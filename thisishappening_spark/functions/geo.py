@@ -20,10 +20,6 @@ class BoundingBox:
     east: float
     north: float
 
-    @classmethod
-    def from_list(cls, bbox: list[float]) -> "BoundingBox":
-        return cls(west=bbox[0], south=bbox[1], east=bbox[2], north=bbox[3])
-
 
 def inbounds_closed(lon: str, lat: str, bbox: BoundingBox) -> str:
     """P1: closed-interval bbox containment (reference data_utils.py:43-46).

@@ -42,20 +42,18 @@ def coord_key(lon: str, lat: str) -> str:
 
 def with_activity_weight(
     df: DataFrame,
-    weighted: bool = True,
     weight_factor_user: float | None = None,
     reduce_weight_lon_lat: list[tuple[str, str]] | None = None,
     weight_factor_lon_lat: float | None = None,
     weight_factor_no_coords: float | None = None,
     user_col: str = "user_id_str",
     time_col: str = "created_at",
-    lon_col: str = "longitude",
-    lat_col: str = "latitude",
-    has_coords_col: str = "has_coords",
-    weight_col: str = "weight",
     order_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Mirror of set_activity_weight (reference data_utils.py:91-145).
+    """Mirror of set_activity_weight (reference data_utils.py:91-145): adds
+    the ``weight`` column. W2 reads ``longitude``/``latitude`` and W3 reads
+    ``has_coords``, the tweet-record columns; a factor left ``None`` skips
+    its step.
 
     `reduce_weight_lon_lat` is a list of ("%.5f"-formatted lon, lat) string
     pairs, matching the reference's config representation (app.py:200-209).
@@ -68,14 +66,12 @@ def with_activity_weight(
     # words) worked under F.col() and must keep working under the string
     # convention. ident() resolves to the identical attribute.
     user_col, time_col = ident(user_col), ident(time_col)
-    lon_col, lat_col = ident(lon_col), ident(lat_col)
-    has_coords_col = ident(has_coords_col)
     order_cols = tuple(ident(o) for o in order_cols)
 
     w = flit(1.0)
 
-    if weighted and reduce_weight_lon_lat and weight_factor_lon_lat is not None:
-        key = coord_key(lon_col, lat_col)
+    if reduce_weight_lon_lat and weight_factor_lon_lat is not None:
+        key = coord_key("longitude", "latitude")
         blocked = "array(" + ", ".join(
             f"named_struct('lon_key', {sql_str(lo)}, 'lat_key', {sql_str(la)})"
             for lo, la in reduce_weight_lon_lat
@@ -85,15 +81,15 @@ def with_activity_weight(
             f"THEN {compute_weight(w, '1', weight_factor_lon_lat)} ELSE {w} END"
         )
 
-    if weighted and weight_factor_no_coords is not None:
+    if weight_factor_no_coords is not None:
         w = (
-            f"CASE WHEN NOT {has_coords_col} "
+            "CASE WHEN NOT has_coords "
             f"THEN {compute_weight(w, '1', weight_factor_no_coords)} ELSE {w} END"
         )
 
-    if weighted and weight_factor_user is not None:
+    if weight_factor_user is not None:
         order = ", ".join((time_col,) + tuple(order_cols))
         rank0 = f"row_number() OVER (PARTITION BY {user_col} ORDER BY {order}) - 1"
         w = compute_weight(w, rank0, weight_factor_user)
 
-    return df.withColumn(weight_col, F.expr(w))
+    return df.withColumn("weight", F.expr(w))

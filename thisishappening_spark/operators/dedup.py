@@ -9,16 +9,20 @@ as DataFrame transformations whose shuffles are bounded by design:
 - **N-gram Jaccard** uses the inverted-index pattern: explode distinct
   shingles, group them into per-shingle postings lists, pair the
   documents within each list and count per pair. Only documents *sharing*
-  a shingle ever meet — no all-pairs cross join. ``max_shingle_df`` drops
-  stop-shingles (doc frequency above a cap) before pairing, which bounds
-  the worst-case pair fan-out the same way common-token filtering does in
-  production minhash systems.
+  a shingle ever meet — no all-pairs cross join. Stop-shingles (doc
+  frequency above ``MAX_SHINGLE_DF``) are dropped before pairing, which
+  bounds the worst-case pair fan-out the same way common-token filtering
+  does in production minhash systems.
 - **MinHash/LSH** reduces each document to a K-integer signature, then
   groups signatures by (band index, band key) and pairs documents within
   each bucket — candidate generation is O(candidates), not O(n²).
 - **SimHash** reduces each document to one small integer fingerprint via
   per-bit weighted majorities; near-dup candidates share a fingerprint
   nibble (pigeonhole on Hamming distance), again an equi-join.
+
+Every operator reads a ``documents``-shaped frame: ``doc_id`` and
+``text``, with shingles the word trigrams (``SHINGLE_N``) the DuckDB
+oracles also build.
 
 Token ids: MinHash, SimHash (and textstats.doc_fingerprint) number each
 shingle/token by its rank in the sorted distinct dictionary
@@ -68,6 +72,10 @@ LSH_ROWS = MINHASH_K // LSH_BANDS
 # the parity of ((a_j * id + b_j) % p).
 SIMHASH_BITS = 16
 
+SHINGLE_N = 3  # word n-gram length of every shingle
+# Stop-shingle cap of jaccard_pairs: a shingle in more documents is dropped.
+MAX_SHINGLE_DF = 100
+
 
 def normalize_text(col: Column) -> Column:
     """Whitespace-collapse + trim + lowercase — the canonical form exact
@@ -75,7 +83,7 @@ def normalize_text(col: Column) -> Column:
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup: one row per distinct normalized text with the surviving
     doc id (min id = keep-first) and the group size.
 
@@ -83,35 +91,17 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
     shuffles. Map-side partial aggregation applies to both min and count.
     """
     return (
-        docs.select(
-            F.md5(normalize_text(F.col(text_col))).alias("text_hash"),
-            F.col(id_col),
-        )
+        docs.select(F.md5(normalize_text(F.col("text"))).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).alias("keep_doc_id"),
+            F.min("doc_id").alias("keep_doc_id"),
             F.count(F.lit(1)).alias("n_docs"),
         )
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup applied: keep one row per distinct normalized text (the
-    lowest id). Semi-join back so the full rows survive without shuffling
-    document bodies through the aggregate."""
-    keep = exact_dedup_groups(docs, text_col, id_col).select(
-        F.col("keep_doc_id").alias(id_col)
-    )
-    return docs.join(keep, on=id_col, how="left_semi")
-
-
-def doc_shingles(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Distinct (doc_id, shingle) pairs: word n-grams over a whitespace
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, shingle) pairs: word trigrams over a whitespace
     split.
 
     Stays JVM-side: split + transform(sequence) + explode, no Python UDF.
@@ -120,9 +110,9 @@ def doc_shingles(
     the split inlined, interpreted higher-order eval re-splits the text
     once per shingle position (~n_tokens× redundant work per row).
 
-    Each shingle is built as ``concat_ws(" ", t[i], …, t[i+n-1])`` rather
-    than ``array_join(slice(toks, i, n))``: identical strings (verified
-    element-wise r21), but no per-position n-element array allocation
+    Each shingle is built as ``concat_ws(" ", t[i], t[i+1], t[i+2])``
+    rather than ``array_join(slice(toks, i, 3))``: identical strings
+    (verified element-wise r21), but no per-position array allocation
     inside the interpreted ``transform`` lambda (higher-order functions
     are CodegenFallback, so every saved allocation is an interpreted-path
     saving; guide §4.1 "prefer built-ins", applied inside the lambda).
@@ -133,9 +123,8 @@ def doc_shingles(
     *construction* inside py4j send_command), and the bench pays
     construction on every timed run. Same expression tree either way.
     """
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("__toks")
-    )
+    base = docs.select("doc_id", F.split(F.col("text"), " ").alias("__toks"))
+    n = SHINGLE_N
     parts = ", ".join(f"element_at(__toks, i + {j})" for j in range(n))
     grams = (
         f"CASE WHEN size(__toks) < {n} THEN CAST(array() AS ARRAY<STRING>) "
@@ -200,31 +189,17 @@ def ranked_dictionary(keys: DataFrame, key_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingle_dictionary(shingles: DataFrame) -> DataFrame:
-    """(shingle, sid) with sid = rank of the shingle in sorted order.
-
-    Deterministic-integer IDs so the SQL oracle can reproduce MinHash
-    exactly. Ranked by the two-phase bucketed rank (see
-    :func:`ranked_dictionary`), so the dictionary is never sorted in a
-    single partition.
-    """
-    return ranked_dictionary(shingles, "shingle", "sid")
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """Per-document MinHash signature: columns mh0..mh{K-1}.
 
     One aggregate over the exploded shingles computes all K mins at once
     (map-side partial min per component), so the shuffle carries K ints per
-    document regardless of document size.
+    document regardless of document size. Shingle ids are dictionary
+    ranks (:func:`ranked_dictionary`), which the SQL oracle reproduces.
     """
-    shingles = doc_shingles(docs, n, text_col, id_col)
-    ids = shingles.join(shingle_dictionary(shingles), "shingle").select("doc_id", "sid")
+    shingles = doc_shingles(docs)
+    sids = ranked_dictionary(shingles, "shingle", "sid")
+    ids = shingles.join(sids, "shingle").select("doc_id", "sid")
     # One parsed string per component instead of ~8 Py4J round trips each
     # (same expression: CAST(a AS BIGINT) * sid + b, then % p).
     aggs = [
@@ -256,18 +231,12 @@ def _band_table(signatures: DataFrame) -> DataFrame:
     ).select("doc_id", "sig", F.expr("bk.band AS band"), F.expr("bk.band_key AS band_key"))
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket_df: int | None = None,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, max_bucket_df: int | None = None) -> DataFrame:
     """LSH candidate pairs with the estimated Jaccard (fraction of equal
     signature components). Output: (doc_a, doc_b, est_jaccard).
 
     ``max_bucket_df`` is the production skew/memory guard, analogous to
-    ``max_shingle_df`` in :func:`jaccard_pairs`: buckets whose size
+    ``MAX_SHINGLE_DF`` in :func:`jaccard_pairs`: buckets whose size
     exceeds the cap are dropped entirely (a bucket of df docs would emit
     O(df²) pairs and hold df (doc_id, 16-int sig) structs in one
     aggregation buffer — a single giant duplicate cluster is the one
@@ -294,7 +263,7 @@ def minhash_lsh_pairs(
     signature arrays carried through the bucket structs (a 16-term
     zip_with), so no join back to the signatures is needed.
     """
-    sigs = minhash_signatures(docs, n, text_col, id_col)
+    sigs = minhash_signatures(docs)
     bands = _band_table(sigs)
     buckets = (
         bands.groupBy("band", "band_key")
@@ -320,25 +289,17 @@ def minhash_lsh_pairs(
     )
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_shingle_df: int | None = 100,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
+def jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact trigram Jaccard similarity for pairs sharing ≥1 shingle.
 
     Inverted-index join (key = shingle), then |A∩B| via group-count and
     |A∪B| = |A| + |B| − |A∩B|. The Jaccard value is an exact ratio of two
     BIGINTs — deterministic across engines with no quantization needed.
 
-    ``max_shingle_df`` drops shingles whose document frequency exceeds the
-    cap — the standard stop-shingle guard that keeps the pair fan-out
-    linear in the number of true near-dups at corpus scale. Bounded by
-    default (a hot shingle would otherwise produce O(df²) pairs); pass
-    ``None`` only for small differential fixtures.
+    Shingles whose document frequency exceeds ``MAX_SHINGLE_DF`` are
+    dropped — the standard stop-shingle guard that keeps the pair fan-out
+    linear in the number of true near-dups at corpus scale (a hot shingle
+    would otherwise produce O(df²) pairs).
 
     Plan shape: ONE groupBy(shingle) builds the postings list
     (collect_list of doc ids, bounded by the cap → bounded group memory),
@@ -352,10 +313,12 @@ def jaccard_pairs(
     nested-``transform``; the blow-up per posting is bounded by the df
     cap (≤ cap²/2 pairs).
     """
-    sh = doc_shingles(docs, n, text_col, id_col)
-    groups = sh.groupBy("shingle").agg(F.expr("collect_list(doc_id) AS ds"))
-    if max_shingle_df is not None:
-        groups = groups.filter(f"size(ds) <= {max_shingle_df}")
+    sh = doc_shingles(docs)
+    groups = (
+        sh.groupBy("shingle")
+        .agg(F.expr("collect_list(doc_id) AS ds"))
+        .filter(f"size(ds) <= {MAX_SHINGLE_DF}")
+    )
     sizes = (
         groups.select(F.expr("explode(ds) AS doc_id"))
         .groupBy("doc_id")
@@ -384,11 +347,7 @@ def jaccard_pairs(
     )
 
 
-def simhash(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """Per-document SimHash fingerprint (SIMHASH_BITS bits) over unigram
     tokens weighted by occurrence count.
 
@@ -398,10 +357,7 @@ def simhash(
     candidates then share a fingerprint nibble at the same position
     (pigeonhole over Hamming distance ≤ 3 for 16 bits / 4 nibbles).
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
-    )
+    toks = docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
     ids = toks.join(ranked_dictionary(toks, "tok", "tid"), "tok").select("doc_id", "tid")
     params = MINHASH_PARAMS[:SIMHASH_BITS]
     # Parsed-string form of the same expressions (see doc_shingles note):

@@ -138,10 +138,11 @@ def lon_lat(s: str) -> tuple[str, str, str]:
     return lon, lat, f"{point} IS NOT NULL"
 
 
-def project_status(df: DataFrame, raw_col: str = "raw") -> DataFrame:
+def project_status(df: DataFrame) -> DataFrame:
     """get_tweet_info as one typed projection (reference tweet_utils.py:
-    137-178). Output schema = the 19 TweetInfo fields (deleted_at always
-    NULL at ingest, data_base.py:254).
+    137-178) of the raw status JSON string column ``raw``. Output schema =
+    the 19 TweetInfo fields (deleted_at always NULL at ingest,
+    data_base.py:254).
 
     The projection is expressed as ONE ``selectExpr`` over a pre-parsed
     struct column: the Column-operator form of these 23 fields (getField
@@ -152,7 +153,7 @@ def project_status(df: DataFrame, raw_col: str = "raw") -> DataFrame:
     from_json, same coalesce/CASE/centroid semantics (F1-F3, P14 — see
     the helpers above, which now build SQL expression strings)."""
     lon, lat, has_coords = lon_lat("s")
-    return df.select(F.from_json(F.col(raw_col), STATUS_SCHEMA).alias("s")).selectExpr(
+    return df.select(F.from_json(F.col("raw"), STATUS_SCHEMA).alias("s")).selectExpr(
         "s.id_str AS status_id_str",
         "s.user.screen_name AS user_screen_name",
         "s.user.id_str AS user_id_str",

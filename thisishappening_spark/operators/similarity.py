@@ -15,6 +15,9 @@ Two tiers, per the training-pipeline brief:
   formula (no RNG state) so the operator is reproducible across runs and
   engines.
 
+Both read an ``embeddings``-shaped frame: ``vec_id`` and an ``EMB_DIM``-long
+``embedding``.
+
 Determinism discipline (registry rules, registry.py): dot products and
 norms quantize each double product to DECIMAL(28,15) and sum exactly, so
 Spark and DuckDB agree bit-for-bit; the final cosine divides doubles whose
@@ -38,6 +41,12 @@ from pyspark.sql import functions as F
 _HP_MULT = 2_654_435_761
 _HP_C = 12_345
 _HP_M = 2_147_483_647
+
+EMB_DIM = 64  # length of every embedding vector
+# The ANN index: LSH_TABLES tables of PLANES_PER_TABLE sign bits each, probed
+# at the query's own bucket and every bucket one bit away.
+LSH_TABLES = 8
+PLANES_PER_TABLE = 4
 
 
 def as_double_vec(col: str) -> Column:
@@ -75,10 +84,10 @@ def norm2_dec(a: str) -> str:
     return dot_dec(a, a)
 
 
-def cosine(dot: str, n2a: str, n2b: str, round_to: int = 6) -> str:
+def cosine(dot: str, n2a: str, n2b: str) -> str:
     return (
         f"round(CAST({dot} AS DOUBLE) / (sqrt(CAST({n2a} AS DOUBLE)) * "
-        f"sqrt(CAST({n2b} AS DOUBLE))), {round_to})"
+        f"sqrt(CAST({n2b} AS DOUBLE))), 6)"
     )
 
 
@@ -94,20 +103,14 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
     ).filter(f"rank <= {k}")
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
     """Top-k cosine neighbors for each query vector (excluding self).
 
     Output: (query_id, neighbor_id, cos_sim, rank). Queries are broadcast
     (tiny side), so the corpus scan never shuffles; ranking uses
     row_number over (cos desc, neighbor_id) for a deterministic tie-break.
     """
-    v = emb.select(F.col(id_col).alias("vid"), as_double_vec(vec_col).alias("v"))
+    v = emb.select(F.col("vec_id").alias("vid"), as_double_vec("embedding").alias("v"))
     norms = v.select("vid", "v", F.expr(f"{norm2_dec('v')} AS n2"))
     q = norms.filter(F.col("vid").isin(query_ids)).selectExpr(
         "vid AS query_id", "v AS qv", "n2 AS qn2"
@@ -131,9 +134,9 @@ def _lattice_matrix(n_planes: int, dim: int):
     return comp.reshape(n_planes, dim)
 
 
-def lsh_buckets_udf(n_tables: int = 8, planes_per_table: int = 4, dim: int = 64):
-    """Arrow-batched pandas UDF: vector → array of ``n_tables`` bucket
-    ids (one ``planes_per_table``-bit bucket per table). Table t uses
+def lsh_buckets_udf():
+    """Arrow-batched pandas UDF: vector → array of ``LSH_TABLES`` bucket
+    ids (one ``PLANES_PER_TABLE``-bit bucket per table). Table t uses
     global planes [t·k, (t+1)·k) of the deterministic lattice.
 
     Dense (batch × dim) @ (dim × planes) is exactly what numpy/BLAS is
@@ -146,47 +149,36 @@ def lsh_buckets_udf(n_tables: int = 8, planes_per_table: int = 4, dim: int = 64)
     """
     from pyspark.sql.functions import pandas_udf
 
-    H = _lattice_matrix(n_tables * planes_per_table, dim).T  # dim × planes
-    weights = 1 << np.arange(planes_per_table, dtype=np.int64)
+    H = _lattice_matrix(LSH_TABLES * PLANES_PER_TABLE, EMB_DIM).T  # dim × planes
+    weights = 1 << np.arange(PLANES_PER_TABLE, dtype=np.int64)
 
     @pandas_udf("array<int>")
     def buckets(vs: pd.Series) -> pd.Series:
         mat = np.vstack(vs.to_numpy())  # batch × dim
         proj = mat @ H  # batch × (tables·k)
         bits = (proj > 0).astype(np.int64)
-        bk = (bits.reshape(len(vs), n_tables, planes_per_table) * weights).sum(axis=2)
+        bk = (bits.reshape(len(vs), LSH_TABLES, PLANES_PER_TABLE) * weights).sum(axis=2)
         return pd.Series(list(bk.astype("int32")))
 
     return buckets
 
 
-def ann_lsh_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 3,
-    n_tables: int = 8,
-    planes_per_table: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multiprobe_hamming: int = 1,
-) -> DataFrame:
+def ann_lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
     """Approximate top-k via multi-table sign-LSH: score only candidates
-    that share a bucket with the query in ≥1 of ``n_tables`` tables
-    (expanded by ``multiprobe_hamming``-bit probes per table), then
-    exact-rerank with the same cosine as the brute-force path.
+    that share a bucket with the query in ≥1 of ``LSH_TABLES`` tables
+    (expanded by the probes one bit away per table), then exact-rerank
+    with the same cosine as the brute-force path.
 
-    Scale: the index is ``n_tables`` small (tbl, bucket) entries per
+    Scale: the index is ``LSH_TABLES`` small (tbl, bucket) entries per
     vector; candidate generation is an equi-join on (tbl, bucket), so the
     cost is Σ probed-bucket occupancies — not n². Recall follows the
     standard S-curve 1-(1-P_table)^L with per-bit p = 1-θ/π. Honest
     caveat: the synthetic test embeddings are isotropic random — the
     worst case for any ANN index (top-3 cosine ≈ 0.3, barely above
-    noise) — so the default config measured 0.93 recall@3 there only by
-    probing a large corpus fraction. On real embedding corpora, where
-    neighbors are genuinely close (p → 1), the same config is both
-    high-recall and selective; tune n_tables/planes_per_table to the
-    corpus. The pytest harness measures recall against
+    noise) — so this index measured 0.93 recall@3 there only by probing
+    a large corpus fraction. On real embedding corpora, where neighbors
+    are genuinely close (p → 1), the same index is both high-recall and
+    selective. The pytest harness measures recall against
     :func:`cosine_topk`.
 
     Rerank-cost note (r21): a (query, candidate) pair that collides in m
@@ -202,15 +194,13 @@ def ann_lsh_topk(
     (``knownfloatingpointnormalized(transform(v, …))``, which
     test_plans.py keeps out of the executed plan).
     """
-    v = emb.select(F.col(id_col).alias("vid"), as_double_vec(vec_col).alias("v"))
+    v = emb.select(F.col("vec_id").alias("vid"), as_double_vec("embedding").alias("v"))
     base = v.select("vid", "v", F.expr(f"{norm2_dec('v')} AS n2"))
-    buckets = lsh_buckets_udf(n_tables, planes_per_table, dim)
+    buckets = lsh_buckets_udf()
     ent = base.select(
         "vid", "v", "n2", F.posexplode(buckets(F.col("v"))).alias("tbl", "bucket")
     )
-    probes = ["bucket"]
-    if multiprobe_hamming >= 1:
-        probes += [f"bucket ^ {1 << j}" for j in range(planes_per_table)]
+    probes = ["bucket"] + [f"bucket ^ {1 << j}" for j in range(PLANES_PER_TABLE)]
     q = ent.filter(F.col("vid").isin(query_ids)).selectExpr(
         "vid AS query_id",
         "tbl AS q_tbl",

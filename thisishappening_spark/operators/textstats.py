@@ -7,7 +7,8 @@ divisions of BIGINT counts, so differential oracles need no quantization.
 
 These cover the training-pipeline text-analysis surface of the brief
 (language-ID heuristic, quality scoring, token counting, document
-fingerprinting); the reference app itself has no document corpus.
+fingerprinting); the reference app itself has no document corpus. Every
+operator reads a ``documents``-shaped frame: ``doc_id`` and ``text``.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from thisishappening_spark.operators.dedup import ranked_dictionary
+from thisishappening_spark.sqlexpr import in_list, sql_str
 
 # Minimal English function-word list for the stopword-ratio heuristic.
 # (A deliberately small, public list — the heuristic needs a stable set,
@@ -38,8 +40,8 @@ FR_STOPWORDS = [
 FP_P = 2_147_483_647  # fingerprint modulus (2^31-1)
 
 
-def _sql_list(words: list[str]) -> str:
-    return ", ".join(f"'{w}'" for w in words)
+def _is_word(col: str, words: list[str]) -> str:
+    return in_list(col, [sql_str(w) for w in words])
 
 
 def tokens(col: Column) -> Column:
@@ -60,23 +62,19 @@ def stopword_ratio(tok_col: str, stopwords: list[str]) -> str:
     operator form of this module cost ~1900 Py4J round trips per
     construction (profiled r21 — the bench times construction every run);
     the parsed strings build the identical expression trees."""
-    hits = f"size(filter({tok_col}, t -> t IN ({_sql_list(stopwords)})))"
+    hits = f"size(filter({tok_col}, t -> {_is_word('t', stopwords)}))"
     return f"CAST({hits} AS DOUBLE) / size({tok_col})"
 
 
-def doc_quality(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_cols: list[str] | None = None,
-) -> DataFrame:
-    """Per-document quality metrics + pass/fail decision.
+def doc_quality(docs: DataFrame) -> DataFrame:
+    """Per-document quality metrics + pass/fail decision, with the
+    document's ``source``.
 
     Metrics follow the usual corpus-filter recipe: token count bounds,
     mean token length bounds, stopword-ratio ceiling. One projection over
     the scan; no shuffle.
     """
-    t = f"split({text_col}, ' ')"
+    t = "split(text, ' ')"
     n_tok = f"size({t})"
     mean_len = (
         f"CAST(aggregate({t}, CAST(0 AS BIGINT), (acc, x) -> acc + length(x)) "
@@ -88,8 +86,8 @@ def doc_quality(
         f"AND ({mean_len}) <= 12.0D AND ({sw}) <= 0.5D"
     )
     return docs.selectExpr(
-        f"{id_col} AS doc_id",
-        *(keep_cols or []),
+        "doc_id",
+        "source",
         f"{n_tok} AS n_tokens",
         f"{mean_len} AS mean_token_len",
         f"{sw} AS stopword_ratio",
@@ -97,7 +95,7 @@ def doc_quality(
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: stopword-hit ratio per language, argmax with
     an 'unknown' floor. Deterministic ties break by language code order
     (en < es < fr by construction below).
@@ -108,14 +106,11 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     document. The earlier formulation — three higher-order ``filter``
     lambdas per row — fell out of codegen and re-tokenized each row ~7×.
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
-    )
+    toks = docs.select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
     hits = toks.groupBy("doc_id").agg(
         *[
             F.expr(
-                f"sum(CASE WHEN tok IN ({_sql_list(words)}) THEN 1 ELSE 0 END)"
+                f"sum(CASE WHEN {_is_word('tok', words)} THEN 1 ELSE 0 END)"
                 f" AS h_{code}"
             )
             for code, words in (
@@ -141,12 +136,7 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return scored.selectExpr("doc_id", f"{pred} AS pred_lang", "score_en")
 
 
-def doc_fingerprint(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 3,
-) -> DataFrame:
+def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprint: min over token-trigram window
     hashes h = (tid1·31² + tid2·31 + tid3) mod p.
 
@@ -158,10 +148,7 @@ def doc_fingerprint(
     The min-of-window-hashes is the 1-fingerprint special case of
     winnowing.
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
-    )
+    toks = docs.select("doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok"))
     ids = toks.join(ranked_dictionary(toks, "tok", "tid"), "tok").select(
         "doc_id", "pos", "tid"
     )
@@ -172,9 +159,9 @@ def doc_fingerprint(
         )
     )
     w = (
-        f"CASE WHEN size(tids) < {window} THEN CAST(array() AS ARRAY<BIGINT>) "
-        f"ELSE transform(sequence(1, size(tids) - {window - 1}), "
-        f"i -> (CAST(element_at(tids, i) AS BIGINT) * 961 "
+        "CASE WHEN size(tids) < 3 THEN CAST(array() AS ARRAY<BIGINT>) "
+        "ELSE transform(sequence(1, size(tids) - 2), "
+        "i -> (CAST(element_at(tids, i) AS BIGINT) * 961 "
         f"+ element_at(tids, i + 1) * 31 + element_at(tids, i + 2)) % {FP_P}) END"
     )
     return seq.select(

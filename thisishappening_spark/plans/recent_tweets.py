@@ -1,10 +1,11 @@
 """The reference's most-called query path as parameterized DataFrame plans.
 
 `get_recent_tweets` (reference data_base.py:307-382) is called 4× per
-arriving tweet; `count_tweets` (:276-305), `get_recent_events` (:90-116)
-and the event PK lookup (:134-139) round out the surface. Each builder here composes the exact predicate stack (Q1-Q8 in
-SURVEY.md §2.2) onto any tweets-shaped DataFrame and lets Catalyst push
-every filter to the scan.
+arriving tweet; `get_recent_events` (:90-116) and the event PK lookup
+(:134-139) round out the surface. Each builder here composes the exact
+predicate stack (Q1-Q8 in SURVEY.md §2.2) onto a tweets-shaped DataFrame
+(time column ``created_at``) or an events-shaped one (time column
+``timestamp``, key ``id``) and lets Catalyst push every filter to the scan.
 
 Scale notes: every query carries a time bound (Q1), which on a
 date-partitioned table becomes partition pruning — the 100 TB plan reads
@@ -54,7 +55,6 @@ def recent_tweets(
     include_quote_status: bool = True,
     include_reply_status: bool = True,
     include_deleted_status: bool = False,
-    time_col: str = "created_at",
     ordered: bool = True,
 ) -> DataFrame:
     """Mirror of get_recent_tweets (reference data_base.py:307-382),
@@ -74,7 +74,7 @@ def recent_tweets(
     - Q4/Q5 use `IS NOT TRUE` — NULL rows are KEPT (data_base.py:370-376).
     - Q6 `deleted_at IS NULL` (data_base.py:378-380).
     """
-    conds = [_time_window(time_col, timestamp, hours)]
+    conds = [_time_window("created_at", timestamp, hours)]
 
     if bounding_box is not None:
         conds.append(inbounds_half_open("longitude", "latitude", bounding_box))
@@ -101,21 +101,7 @@ def recent_tweets(
         conds.append("deleted_at IS NULL")
 
     df = tweets.filter(" AND ".join(f"({c})" for c in conds))
-    return df.orderBy(F.desc(time_col)) if ordered else df
-
-
-def count_tweets(
-    tweets: DataFrame,
-    timestamp: dt.datetime,
-    hours: float = 0,
-    bounding_box: BoundingBox | None = None,
-    time_col: str = "created_at",
-) -> DataFrame:
-    """A1: scalar count with Q1 + Q2 filters (reference data_base.py:276-305)."""
-    cond = _time_window(time_col, timestamp, hours)
-    if bounding_box is not None:
-        cond += " AND " + inbounds_half_open("longitude", "latitude", bounding_box)
-    return tweets.filter(cond).agg(F.expr("count(status_id_str) AS n_tweets"))
+    return df.orderBy(F.desc("created_at")) if ordered else df
 
 
 def recent_events(
@@ -123,18 +109,17 @@ def recent_events(
     timestamp: dt.datetime,
     hours: float = 1,
     event_type: list[str] | None = None,
-    time_col: str = "timestamp",
 ) -> DataFrame:
     """Q7: time window + `event_type IN (...) OR event_type IS NULL`
     (reference data_base.py:90-116), newest-first (O2)."""
-    cond = _time_window(time_col, timestamp, hours)
+    cond = _time_window("timestamp", timestamp, hours)
     if event_type is not None:
         types_pred = in_list("event_type", [sql_str(t) for t in event_type])
         cond = f"({cond}) AND ({types_pred} OR event_type IS NULL)"
-    return events.filter(cond).orderBy(F.desc(time_col))
+    return events.filter(cond).orderBy(F.desc("timestamp"))
 
 
-def event_by_id(events: DataFrame, event_id: int, id_col: str = "id") -> DataFrame:
+def event_by_id(events: DataFrame, event_id: int) -> DataFrame:
     """Q8 PK lookup (reference data_base.py:134-139)."""
-    return events.filter(F.col(id_col) == F.lit(event_id))
+    return events.filter(F.col("id") == F.lit(event_id))
 

@@ -21,11 +21,13 @@ from thisishappening_spark.operators import dedup, similarity, textstats
 from thisishappening_spark.operators.dedup import (
     LSH_BANDS,
     LSH_ROWS,
+    MAX_SHINGLE_DF,
     MINHASH_K,
     MINHASH_P,
     MINHASH_PARAMS,
     SIMHASH_BITS,
 )
+from thisishappening_spark.operators.similarity import EMB_DIM
 from thisishappening_spark.registry import query
 from thisishappening_spark.sources.tables import load_table
 
@@ -85,7 +87,6 @@ _ES_IN = ", ".join(f"'{w}'" for w in textstats.ES_STOPWORDS)
 _FR_IN = ", ".join(f"'{w}'" for w in textstats.FR_STOPWORDS)
 
 COSINE_QUERY_IDS = [0, 1, 2, 3, 4]
-EMB_DIM = 64
 
 
 # ---------------------------------------------------------------------------
@@ -114,15 +115,13 @@ def q_exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exact_dedup_groups(docs)
 
 
-JACCARD_MAX_SHINGLE_DF = 100
-
 @query(
     "q_ngram_jaccard_pairs",
     f"""
     WITH {_SHINGLES_CTE.strip()},
     rare AS (
       SELECT shingle FROM sh GROUP BY shingle
-      HAVING COUNT(*) <= {JACCARD_MAX_SHINGLE_DF}
+      HAVING COUNT(*) <= {MAX_SHINGLE_DF}
     ),
     shf AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN rare USING (shingle)),
     sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM shf GROUP BY doc_id),
@@ -158,9 +157,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings pipeline sits above it.
     """
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    return dedup.jaccard_pairs(
-        docs, n=3, threshold=0.5, max_shingle_df=JACCARD_MAX_SHINGLE_DF
-    )
+    return dedup.jaccard_pairs(docs, threshold=0.5)
 
 
 @query(
@@ -311,7 +308,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm_ops.py; rows-only check here.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ann_lsh_topk(emb, COSINE_QUERY_IDS, k=3, dim=EMB_DIM)
+    return similarity.ann_lsh_topk(emb, COSINE_QUERY_IDS, k=3)
 
 
 # ---------------------------------------------------------------------------
@@ -378,7 +375,7 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio so the pass/fail boundary is engine-stable.
     """
     docs = load_table(spark, sf_dir, "documents")
-    q = textstats.doc_quality(docs, keep_cols=["source"])
+    q = textstats.doc_quality(docs)
     return q.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.col("quality_pass"), 1).otherwise(0)).alias("n_pass"),

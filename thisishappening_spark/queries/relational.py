@@ -10,9 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from thisishappening_spark.registry import dec, dsum, query
+from thisishappening_spark.registry import dsum, query
 from thisishappening_spark.sources.tables import load_table
 
 # Shared decimal-exact revenue term (the oracle SQL twin appears in each
@@ -57,40 +56,24 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: single scan, map-side partial aggregation on a tiny key
     space (|returnflag × linestatus| ≤ 9) → the shuffle moves only partial
     aggregates, not rows. Filter and 7-column projection push to parquet.
-
-    fan_out (r22): the 8-decimal partial aggregation fuses into the scan,
-    and the test lineitem layout is one row group — the whole 600 k-row
-    decimal pass ran on a single task (driver scaling ratio 1.0 at 4× the
-    cores). Redistribute first, same mechanism as the driver-confirmed
-    q_cosine_topk fan-out; no-op on production row-group counts. 12-round
-    cold-session interleaved A/B: 1.67 vs 1.93 s median-of-medians,
-    1.13 vs 1.36 s min-of-all. (q_rollup_revenue deliberately does NOT
-    fan out — its A/B was within noise and the driver measured 0.83×.)
     """
-    li = load_table(spark, sf_dir, "lineitem", fan_out=True)
+    li = load_table(spark, sf_dir, "lineitem")
     # Parsed-string twins of the oracle SQL above — identical decimal
     # quantization chain, built in one round trip per aggregate instead of
     # ~570 for the Column-operator form (r21 construction profile).
-    disc_price = (
-        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) "
-        "* CAST(1 - l_discount AS DECIMAL(18,2)) AS DECIMAL(18,4))"
-    )
-    charge = f"CAST({disc_price} * CAST(1 + l_tax AS DECIMAL(18,2)) AS DECIMAL(18,6))"
-
-    def dsum_s(col: str) -> str:
-        return f"CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
+    charge = f"CAST({_REVENUE_DEC} * CAST(1 + l_tax AS DECIMAL(18,2)) AS DECIMAL(18,6))"
 
     return (
         li.filter("l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.expr(f"{dsum_s('l_quantity')} AS sum_qty"),
-            F.expr(f"{dsum_s('l_extendedprice')} AS sum_base_price"),
-            F.expr(f"CAST(SUM({disc_price}) AS DOUBLE) AS sum_disc_price"),
+            F.expr(f"{dsum('l_quantity')} AS sum_qty"),
+            F.expr(f"{dsum('l_extendedprice')} AS sum_base_price"),
+            F.expr(f"CAST(SUM({_REVENUE_DEC}) AS DOUBLE) AS sum_disc_price"),
             F.expr(f"CAST(SUM({charge}) AS DOUBLE) AS sum_charge"),
-            F.expr(f"{dsum_s('l_quantity')} / count(1) AS avg_qty"),
-            F.expr(f"{dsum_s('l_extendedprice')} / count(1) AS avg_price"),
-            F.expr(f"{dsum_s('l_discount')} / count(1) AS avg_disc"),
+            F.expr(f"{dsum('l_quantity')} / count(1) AS avg_qty"),
+            F.expr(f"{dsum('l_extendedprice')} / count(1) AS avg_price"),
+            F.expr(f"{dsum('l_discount')} / count(1) AS avg_disc"),
             F.expr("count(1) AS count_order"),
         )
     )
@@ -252,7 +235,7 @@ def q_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("count(DISTINCT user_id) AS n_users"),
         F.expr("CAST(min(value) AS DOUBLE) AS min_value"),
         F.expr("CAST(max(value) AS DOUBLE) AS max_value"),
-        F.expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value"),
+        F.expr(f"{dsum('value')} AS sum_value"),
     )
 
 
@@ -296,7 +279,7 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
-        dsum(F.col("l_extendedprice")).alias("sum_price"),
+        F.expr(f"{dsum('l_extendedprice')} AS sum_price"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -354,7 +337,7 @@ def q_window_lag_value_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("delta IS NOT NULL AND user_id < 30")
         .groupBy("user_id")
         .agg(
-            F.expr("CAST(SUM(CAST(delta AS DECIMAL(18,2))) AS DOUBLE) AS sum_abs_delta"),
+            F.expr(f"{dsum('delta')} AS sum_abs_delta"),
             F.expr("count(1) AS n_deltas"),
         )
     )
@@ -517,7 +500,7 @@ def q_time_bucket_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.expr("date_trunc('hour', ts) AS hour_bucket"))
         .agg(
             F.expr("count(1) AS n_events"),
-            F.expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value"),
+            F.expr(f"{dsum('value')} AS sum_value"),
         )
     )
 

@@ -14,7 +14,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from thisishappening_spark.functions.geo import BoundingBox
+from thisishappening_spark.functions.geo import BoundingBox, inbounds_half_open
 from thisishappening_spark.registry import query
 from thisishappening_spark.sources.tweets_view import load_tweets, tweets_cte
 
@@ -155,8 +155,8 @@ def q_count_tweets_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Parsed-string form of the same filter + conditional counts (the
     # Column form cost ~720 Py4J round trips per construction, r21); the
-    # strings deliberately mirror the oracle SQL above. `{x!r}D` renders
-    # the bbox float as a DOUBLE literal, matching F.lit(float) typing.
+    # strings deliberately mirror the oracle SQL above, with the Q2
+    # half-open bbox of recent_tweets.
     def win(start: str, end: str) -> str:
         return (
             f"count(CASE WHEN created_at >= TIMESTAMP '{start}' "
@@ -166,8 +166,7 @@ def q_count_tweets_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tw.filter(
         "created_at >= TIMESTAMP '2024-01-08 12:00:00' "
         "AND created_at <= TIMESTAMP '2024-01-10 12:00:00' "
-        f"AND longitude >= {BBOX.west!r}D AND longitude < {BBOX.east!r}D "
-        f"AND latitude >= {BBOX.south!r}D AND latitude < {BBOX.north!r}D"
+        f"AND {inbounds_half_open('longitude', 'latitude', BBOX)}"
     ).agg(
         F.expr(win("2024-01-10 11:00:00", "2024-01-10 12:00:00") + " AS n_curr_hour"),
         F.expr(win("2024-01-10 10:00:00", "2024-01-10 11:00:00") + " AS n_prev_hour"),

@@ -26,8 +26,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass
@@ -47,11 +46,9 @@ def query(name: str, oracle: str | None):
     return deco
 
 
-def dec(col: Column, scale: int = 2) -> Column:
-    """Cast to exact decimal for order-independent, cross-engine-exact sums."""
-    return col.cast(f"decimal(18,{scale})")
-
-
-def dsum(col: Column, scale: int = 2) -> Column:
-    return F.sum(dec(col, scale)).cast("double")
+def dsum(col: str) -> str:
+    """SUM of a column quantized to DECIMAL(18,2), as DOUBLE: an order-
+    independent sum that Spark and DuckDB compute bit-identically (rule 1).
+    A SQL string, spelled like the oracle SQL."""
+    return f"CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
 

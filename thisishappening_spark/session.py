@@ -7,7 +7,8 @@ config here is chosen to also hold on a real multi-executor cluster at
 - AQE on (runtime coalescing, skew-join splitting, dynamic join strategy
   switches) — at 100 TB static shuffle-partition counts are always wrong.
 - shuffle partitions default to cores locally; at cluster scale AQE's
-  coalesce makes the initial number mostly a ceiling.
+  coalesce makes the initial number mostly a ceiling. ``extra_conf``
+  overrides any setting here, the master and shuffle partitions included.
 - Arrow enabled so the few pandas-UDF operators batch through Arrow rather
   than pickling rows.
 - UTC session timezone: the reference stores naive-UTC timestamps and
@@ -40,16 +41,13 @@ CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
-    app_name: str = "thisishappening-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
+    app_name: str = "thisishappening-spark", extra_conf: dict[str, str] | None = None
 ) -> SparkSession:
     cpus = DEFAULT_CPUS
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -61,7 +59,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.spill.compress", "true")
         # Let the planner pick shuffled-hash join where its size bounds hold
         # (optimization guide §3.1: no sort on either side, faster than
         # sort-merge when a per-partition build side fits). No local plan

@@ -84,10 +84,12 @@ def compare(spark, sf_dir: str, name: str, rel_tol: float = 1e-9) -> None:
     sn = _normalize([{k.lower(): v for k, v in r.items()} for r in spark_rows])
     dn = _normalize(duck_rows)
     for i, (a, b) in enumerate(zip(sn, dn)):
-        for x, y in zip(a, b):
+        for col, x, y in zip(d_keys, a, b):
             if isinstance(x, float) and isinstance(y, float):
-                assert math.isclose(x, y, rel_tol=rel_tol, abs_tol=1e-9), (
-                    f"{name} row {i}: {x} != {y}\nspark={a}\nduck={b}"
-                )
+                same = math.isclose(x, y, rel_tol=rel_tol, abs_tol=1e-9)
             else:
-                assert x == y, f"{name} row {i}: {x!r} != {y!r}\nspark={a}\nduck={b}"
+                same = x == y
+            assert same, (
+                f"{name} row {i} column {col}: spark {x!r} != duckdb {y!r}"
+                f"\nspark={a}\nduck={b}"
+            )

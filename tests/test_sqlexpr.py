@@ -84,7 +84,7 @@ def test_admission_empty_place_types_compiles(spark):
 def test_recent_tweets_empty_type_lists_compile(spark):
     import datetime as dt
 
-    from thisishappening_spark.plans.recent_tweets import recent_events, recent_tweets
+    from thisishappening_spark.plans.recent_tweets import recent_tweets
 
     tweets = spark.createDataFrame(
         [(dt.datetime(2024, 1, 1, 12), "city", True, None)],
@@ -95,13 +95,6 @@ def test_recent_tweets_empty_type_lists_compile(spark):
         tweets, dt.datetime(2024, 1, 1, 13), place_type=[], has_coords=None,
     )
     assert got.count() == 0  # empty whitelist = always-false, like isin([])
-
-    events = spark.createDataFrame(
-        [(dt.datetime(2024, 1, 1, 12), None), (dt.datetime(2024, 1, 1, 12), "x")],
-        "timestamp TIMESTAMP, event_type STRING",
-    )
-    got = recent_events(events, dt.datetime(2024, 1, 1, 13), event_type=[])
-    assert got.count() == 1  # NULL event_type still kept (reference Q7 OR IS NULL)
 
 
 def test_ts_lit_aware_datetime_converts_to_utc(spark):

@@ -33,14 +33,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Deterministic pseudo-random hyperplane component for plane p, dim i:
-# seed = p*dim + i, comp = ((seed * KNUTH + C) mod M) / M - 0.5. The
-# multiplier is Knuth's multiplicative-hash constant (2654435761 = odd
+# seed = p*dim + i, comp = ((seed * HP_MULT + HP_C) mod HP_M) / HP_M - 0.5.
+# The multiplier is Knuth's multiplicative-hash constant (2654435761 = odd
 # ~golden-ratio * 2^32), so consecutive seeds wrap mod M many times over
 # and the components decorrelate across planes — fully reproducible, no
-# RNG state.
-_HP_MULT = 2_654_435_761
-_HP_C = 12_345
-_HP_M = 2_147_483_647
+# RNG state. Public because q_ann_lsh_topk's DuckDB oracle rebuilds the
+# lattice from them.
+HP_MULT = 2_654_435_761
+HP_C = 12_345
+HP_M = 2_147_483_647
 
 EMB_DIM = 64  # length of every embedding vector
 # The ANN index: LSH_TABLES tables of PLANES_PER_TABLE sign bits each, probed
@@ -130,7 +131,7 @@ def _lattice_matrix(n_planes: int, dim: int):
     seed = p·dim + i. int64 arithmetic is exact here (max seed·KNUTH ≈
     5.4e12 ≪ 2^63), so the matrix is reproducible anywhere."""
     seeds = np.arange(n_planes * dim, dtype=np.int64)
-    comp = ((seeds * _HP_MULT + _HP_C) % _HP_M) / _HP_M - 0.5
+    comp = ((seeds * HP_MULT + HP_C) % HP_M) / HP_M - 0.5
     return comp.reshape(n_planes, dim)
 
 

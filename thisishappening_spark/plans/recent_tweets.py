@@ -1,11 +1,11 @@
 """The reference's most-called query path as parameterized DataFrame plans.
 
 `get_recent_tweets` (reference data_base.py:307-382) is called 4× per
-arriving tweet; `get_recent_events` (:90-116) and the event PK lookup
-(:134-139) round out the surface. Each builder here composes the exact
-predicate stack (Q1-Q8 in SURVEY.md §2.2) onto a tweets-shaped DataFrame
-(time column ``created_at``) or an events-shaped one (time column
-``timestamp``, key ``id``) and lets Catalyst push every filter to the scan.
+arriving tweet; the event PK lookup (:134-139) rounds out the surface.
+Each builder here composes the exact predicate stack (Q1-Q6 and Q8 in
+SURVEY.md §2.2) onto a tweets-shaped DataFrame (time column
+``created_at``, key ``id``) and lets Catalyst push every filter to the
+scan.
 
 Scale notes: every query carries a time bound (Q1), which on a
 date-partitioned table becomes partition pruning — the 100 TB plan reads
@@ -33,15 +33,6 @@ def _ts_lit(t: dt.datetime) -> str:
     if t.tzinfo is not None:
         t = t.astimezone(dt.timezone.utc).replace(tzinfo=None)
     return f"TIMESTAMP '{t:%Y-%m-%d %H:%M:%S.%f}'"
-
-
-def _time_window(ts_col: str, timestamp: dt.datetime, hours: float) -> str:
-    """Q1: closed sliding interval `[timestamp - hours, timestamp]`
-    (reference data_base.py:334-342). SQL-string form (r21 convention,
-    sqlexpr.py — the Column build of this plan family cost ~400 Py4J
-    round trips per construction)."""
-    start = timestamp - dt.timedelta(hours=hours)
-    return f"{ts_col} >= {_ts_lit(start)} AND {ts_col} <= {_ts_lit(timestamp)}"
 
 
 def recent_tweets(
@@ -74,7 +65,12 @@ def recent_tweets(
     - Q4/Q5 use `IS NOT TRUE` — NULL rows are KEPT (data_base.py:370-376).
     - Q6 `deleted_at IS NULL` (data_base.py:378-380).
     """
-    conds = [_time_window("created_at", timestamp, hours)]
+    # Q1: closed sliding interval [timestamp - hours, timestamp]
+    # (data_base.py:334-342). Predicates are SQL strings (r21 convention,
+    # sqlexpr.py): the Column build of this plan cost ~400 Py4J round
+    # trips per construction.
+    start = timestamp - dt.timedelta(hours=hours)
+    conds = [f"created_at >= {_ts_lit(start)} AND created_at <= {_ts_lit(timestamp)}"]
 
     if bounding_box is not None:
         conds.append(inbounds_half_open("longitude", "latitude", bounding_box))
@@ -102,21 +98,6 @@ def recent_tweets(
 
     df = tweets.filter(" AND ".join(f"({c})" for c in conds))
     return df.orderBy(F.desc("created_at")) if ordered else df
-
-
-def recent_events(
-    events: DataFrame,
-    timestamp: dt.datetime,
-    hours: float = 1,
-    event_type: list[str] | None = None,
-) -> DataFrame:
-    """Q7: time window + `event_type IN (...) OR event_type IS NULL`
-    (reference data_base.py:90-116), newest-first (O2)."""
-    cond = _time_window("timestamp", timestamp, hours)
-    if event_type is not None:
-        types_pred = in_list("event_type", [sql_str(t) for t in event_type])
-        cond = f"({cond}) AND ({types_pred} OR event_type IS NULL)"
-    return events.filter(cond).orderBy(F.desc("timestamp"))
 
 
 def event_by_id(events: DataFrame, event_id: int) -> DataFrame:

@@ -5,8 +5,9 @@ analysis (stats, quality, language ID, fingerprints).
 
 Every oracle reproduces the Spark arithmetic exactly (see registry.py):
 integer dictionary IDs + fixed ``(a·x+b) mod p`` permutations make the
-hash family engine-portable; ratios divide BIGINTs; dot products quantize
-per-term to DECIMAL(28,15) before the exact sum.
+hash family engine-portable, and the ANN hyperplanes come from one integer
+formula; ratios divide BIGINTs; dot products quantize per-term to
+DECIMAL(28,15) before the exact sum.
 
 The operators live in ``operators/dedup.py`` / ``operators/similarity.py``
 / ``operators/textstats.py`` with the 100 TB shuffle story per docstring.
@@ -27,7 +28,14 @@ from thisishappening_spark.operators.dedup import (
     MINHASH_PARAMS,
     SIMHASH_BITS,
 )
-from thisishappening_spark.operators.similarity import EMB_DIM
+from thisishappening_spark.operators.similarity import (
+    EMB_DIM,
+    HP_C,
+    HP_M,
+    HP_MULT,
+    LSH_TABLES,
+    PLANES_PER_TABLE,
+)
 from thisishappening_spark.registry import query
 from thisishappening_spark.sources.tables import load_table
 
@@ -87,6 +95,61 @@ _ES_IN = ", ".join(f"'{w}'" for w in textstats.ES_STOPWORDS)
 _FR_IN = ", ".join(f"'{w}'" for w in textstats.FR_STOPWORDS)
 
 COSINE_QUERY_IDS = [0, 1, 2, 3, 4]
+_QUERY_IN = ", ".join(str(i) for i in COSINE_QUERY_IDS)
+
+
+def _cosine_top3_sql(pairs_ctes: str) -> str:
+    """Oracle for a cosine top-3 over candidate pairs: ``pairs_ctes``
+    defines CTEs ending in ``pairs(query_id, neighbor_id)``; each pair is
+    scored with the decimal-quantized cosine (registry rule 1) and ranked
+    by (cos_sim desc, neighbor_id) within its query."""
+    return f"""
+    WITH {pairs_ctes.strip()},
+    pos AS (SELECT unnest(range(1, {EMB_DIM + 1})) AS i),
+    norms AS (
+      SELECT vec_id,
+             SUM(CAST(CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
+                 AS DECIMAL(28,15))) AS n2
+      FROM embeddings, pos GROUP BY vec_id
+    ),
+    dots AS (
+      SELECT p.query_id, p.neighbor_id,
+             SUM(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
+                 AS DECIMAL(28,15))) AS dot
+      FROM pairs p
+      JOIN embeddings q ON q.vec_id = p.query_id
+      JOIN embeddings e ON e.vec_id = p.neighbor_id, pos
+      GROUP BY 1, 2
+    ),
+    scored AS (
+      SELECT query_id, neighbor_id,
+             ROUND(CAST(dot AS DOUBLE)
+                   / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nn.n2 AS DOUBLE))),
+                   6) AS cos_sim
+      FROM dots
+      JOIN norms nq ON dots.query_id = nq.vec_id
+      JOIN norms nn ON dots.neighbor_id = nn.vec_id
+    ),
+    ranked AS (
+      SELECT query_id, neighbor_id, cos_sim,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY cos_sim DESC, neighbor_id) AS rank
+      FROM scored
+    )
+    SELECT query_id, neighbor_id, cos_sim, CAST(rank AS INT) AS rank
+    FROM ranked WHERE rank <= 3
+    """
+
+
+# Projection of ``embedding`` on plane tbl·K + j of the hyperplane lattice
+# (similarity._lattice_matrix), products and left fold in IEEE double as in
+# the bucket UDF's matmul. Every operand is cast explicitly: DuckDB types a
+# bare 2147483647.0 as DECIMAL.
+_HP_DOT = (
+    f"list_reduce(list_transform(range(0, {EMB_DIM}), i -> CAST(embedding[i + 1] AS DOUBLE)"
+    f" * (CAST((((tbl * {PLANES_PER_TABLE} + j) * {EMB_DIM} + i) * {HP_MULT} + {HP_C})"
+    f" % {HP_M} AS DOUBLE) / CAST({HP_M} AS DOUBLE) - CAST(0.5 AS DOUBLE))), (a, y) -> a + y)"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -243,42 +306,13 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_cosine_topk",
-    f"""
-    WITH pos AS (SELECT unnest(range(1, {EMB_DIM + 1})) AS i),
-    norms AS (
-      SELECT vec_id,
-             SUM(CAST(CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-                 AS DECIMAL(28,15))) AS n2
-      FROM embeddings, pos GROUP BY vec_id
-    ),
-    q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-          WHERE vec_id IN ({", ".join(str(i) for i in COSINE_QUERY_IDS)})),
-    dots AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id,
-             SUM(CAST(CAST(q.qe[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
-                 AS DECIMAL(28,15))) AS dot
-      FROM q, embeddings e, pos
-      WHERE e.vec_id <> q.query_id
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             ROUND(CAST(dot AS DOUBLE)
-                   / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nn.n2 AS DOUBLE))),
-                   6) AS cos_sim
-      FROM dots
-      JOIN norms nq ON dots.query_id = nq.vec_id
-      JOIN norms nn ON dots.neighbor_id = nn.vec_id
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos_sim,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos_sim DESC, neighbor_id) AS rank
-      FROM scored
+    _cosine_top3_sql(f"""
+    pairs AS (
+      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
+      FROM embeddings q, embeddings e
+      WHERE q.vec_id IN ({_QUERY_IN}) AND e.vec_id <> q.vec_id
     )
-    SELECT query_id, neighbor_id, cos_sim, CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= 3
-    """,
+    """),
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-3 for 5 query vectors (ANN correctness
@@ -300,12 +334,38 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("rank", F.col("rank").cast("int"))
 
 
-@query("q_ann_lsh_topk", None)  # LSH probing is not SQL-expressible; rows-only
+@query(
+    "q_ann_lsh_topk",
+    _cosine_top3_sql(f"""
+    buckets AS (
+      SELECT vec_id, tbl,
+             list_reduce(list_transform(range(0, {PLANES_PER_TABLE}),
+                         j -> CASE WHEN {_HP_DOT} > 0 THEN (1 << j) ELSE 0 END),
+                         (a, y) -> a + y) AS bucket
+      FROM embeddings, (SELECT unnest(range(0, {LSH_TABLES})) AS tbl)
+    ),
+    probes AS (
+      SELECT vec_id AS query_id, tbl,
+             unnest([bucket] || list_transform(range(0, {PLANES_PER_TABLE}),
+                                               j -> xor(bucket, 1 << j))) AS probe
+      FROM buckets WHERE vec_id IN ({_QUERY_IN})
+    ),
+    pairs AS (
+      SELECT DISTINCT p.query_id, b.vec_id AS neighbor_id
+      FROM probes p JOIN buckets b ON b.tbl = p.tbl AND b.bucket = p.probe
+      WHERE b.vec_id <> p.query_id
+    )
+    """),
+)
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe hyperplane-LSH ANN top-3 (the n²-free scale path).
 
-    Recall vs the brute-force baseline is measured in
-    tests/test_llm_ops.py; rows-only check here.
+    The oracle rebuilds the same buckets and probes in DuckDB, so it
+    checks the exact rows. On the test data the smallest |projection| is
+    over 10⁷ times the fold's rounding bound, so numpy's and DuckDB's
+    summation orders agree on every sign bit. Recall against the
+    brute-force baseline, which the oracle cannot see, is measured in
+    tests/test_llm_ops.py.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ann_lsh_topk(emb, COSINE_QUERY_IDS, k=3)

@@ -1,9 +1,11 @@
 """Query registry shared by every query module.
 
 Each entry pairs a Spark DataFrame program with an equivalent ANSI-SQL
-oracle string (DuckDB dialect-compatible) over the same parquet tables.
-The driver executes both at sf=0.01 and hash-compares values, so every
-registered query follows three discipline rules:
+oracle string (DuckDB dialect-compatible) over the same parquet tables;
+every query has one, approximate ones included (the ANN oracle rebuilds
+the LSH buckets it probes). The driver, ``tests/oracle.compare`` and the
+benchmark execute both and compare values, so every registered query
+follows three discipline rules:
 
 1. **Deterministic cross-engine numerics.** Sums/averages over doubles are
    order-dependent in floating point, and Spark's partial aggregation order
@@ -32,13 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None → non-SQL-expressible, driver does rows-only check
+    oracle: str
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None):
+def query(name: str, oracle: str):
     def deco(fn):
         REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle)
         return fn

@@ -1,9 +1,32 @@
-"""LLM-data-pipeline operators: semantic unit tests that the DuckDB
-oracles (tests/test_queries_oracle.py) cannot express — dup collapse,
-MinHash and ANN recall against exact answers, lattice diversity — plus
-plan guards on the dedup and ANN operators."""
+"""LLM-data-pipeline operators: the LLM subset of the DuckDB oracle check,
+semantic unit tests that the oracles (tests/test_queries_oracle.py) cannot
+express — dup collapse, MinHash and ANN recall against exact answers,
+lattice diversity — plus plan guards on the dedup and ANN operators."""
 
 from __future__ import annotations
+
+import math
+
+import pytest
+
+from tests.oracle import compare
+
+DIFF_QUERIES = [
+    "q_exact_dedup_groups",
+    "q_ngram_jaccard_pairs",
+    "q_minhash_lsh_pairs",
+    "q_simhash",
+    "q_cosine_topk",
+    "q_doc_stats",
+    "q_quality_filter",
+    "q_lang_id_distribution",
+    "q_doc_fingerprint",
+]
+
+
+@pytest.mark.parametrize("name", DIFF_QUERIES)
+def test_differential(spark, sf_dir, name):
+    compare(spark, sf_dir, name)
 
 
 def test_exact_dedup_collapses_duplicates(spark):
@@ -235,3 +258,33 @@ def test_ann_dedups_candidates_before_rerank(spark, sf_dir):
         "exact rerank runs below the candidate dedup — every bucket "
         "collision pays the decimal dot again"
     )
+
+
+def test_ann_scores_are_exact_cosines(spark, sf_dir):
+    """Every q_ann_lsh_topk row carries the exact cosine of its (query,
+    neighbor) pair, and ranks follow (cos_sim desc, neighbor_id) within a
+    query. q_cosine_topk's decimal-cosine oracle, fed only the pairs the
+    ANN query returned, must give back exactly those rows. Unlike
+    test_oracle_match, this does not rebuild the LSH candidates, so a
+    score or rank fault is reported apart from a bucket fault."""
+    from tests.oracle import duckdb_conn
+    from thisishappening_spark.queries import REGISTRY
+    from thisishappening_spark.queries.llm import _cosine_top3_sql
+
+    rows = REGISTRY["q_ann_lsh_topk"].fn(spark, sf_dir).collect()
+    assert rows
+    pairs = ", ".join(f"({r.query_id}, {r.neighbor_id})" for r in rows)
+    con = duckdb_conn(sf_dir)
+    exact = con.sql(_cosine_top3_sql(f"""
+        pairs AS (SELECT * FROM (VALUES {pairs}) p(query_id, neighbor_id))
+    """)).fetchall()
+    want = {(q, n): (cos, rank) for q, n, cos, rank in exact}
+    assert len(want) == len(rows), "a (query, neighbor) pair repeats"
+    for r in rows:
+        cos, rank = want[(r.query_id, r.neighbor_id)]
+        assert math.isclose(r.cos_sim, cos, rel_tol=1e-9, abs_tol=1e-9), (
+            f"query {r.query_id} neighbor {r.neighbor_id}: cos_sim {r.cos_sim} != {cos}"
+        )
+        assert r.rank == rank, (
+            f"query {r.query_id} neighbor {r.neighbor_id}: rank {r.rank} != {rank}"
+        )

@@ -232,8 +232,8 @@ def test_minhash_bucket_cap_drops_oversized_buckets(spark):
 
 
 def test_ann_dedups_candidates_before_rerank(spark, sf_dir):
-    """r21: a (query, candidate) pair colliding in m probed buckets must
-    be deduped BEFORE the decimal-exact dot product (measured 3.1×
+    """A (query, candidate) pair colliding in m probed buckets must
+    be deduped BEFORE the exact dot product (measured 3.1×
     multiplicity on the fixture). In the executed plan the scoring
     projection (the zip_with dot) therefore sits ABOVE the distinct
     HashAggregate; if scoring moves back below the dedup this ordering
@@ -256,14 +256,14 @@ def test_ann_dedups_candidates_before_rerank(spark, sf_dir):
     assert "zip_with" in plan and "Aggregate" in plan
     assert plan.index("zip_with") < plan.index("Aggregate"), (
         "exact rerank runs below the candidate dedup — every bucket "
-        "collision pays the decimal dot again"
+        "collision pays the dot product again"
     )
 
 
 def test_ann_scores_are_exact_cosines(spark, sf_dir):
     """Every q_ann_lsh_topk row carries the exact cosine of its (query,
     neighbor) pair, and ranks follow (cos_sim desc, neighbor_id) within a
-    query. q_cosine_topk's decimal-cosine oracle, fed only the pairs the
+    query. q_cosine_topk's cosine oracle, fed only the pairs the
     ANN query returned, must give back exactly those rows. Unlike
     test_oracle_match, this does not rebuild the LSH candidates, so a
     score or rank fault is reported apart from a bucket fault."""
@@ -288,3 +288,44 @@ def test_ann_scores_are_exact_cosines(spark, sf_dir):
         assert r.rank == rank, (
             f"query {r.query_id} neighbor {r.neighbor_id}: rank {r.rank} != {rank}"
         )
+
+
+def test_cosine_fold_matches_duckdb_bit_for_bit(spark, sf_dir):
+    """Registry rule 1's second case: a fold inside one row runs in IEEE
+    double, because both engines fix its order. similarity.dot and the
+    oracle's DuckDB fold must return identical bits for every vector's
+    squared norm and every query × corpus dot — compared with ==, no
+    tolerance."""
+    from tests.oracle import duckdb_conn
+    from thisishappening_spark.operators.similarity import as_double_vec, dot
+    from thisishappening_spark.queries.llm import COSINE_QUERY_IDS, _emb_dot
+    from thisishappening_spark.sources.tables import load_table
+
+    v = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double_vec("embedding").alias("v")
+    )
+    q = v.filter(v.vec_id.isin(COSINE_QUERY_IDS)).selectExpr(
+        "vec_id AS query_id", "v AS qv"
+    )
+    rows = (
+        v.selectExpr("NULL", "vec_id", dot("v", "v")).collect()
+        + q.crossJoin(v).selectExpr("query_id", "vec_id", dot("qv", "v")).collect()
+    )
+    got = {(r[0], r[1]): r[2] for r in rows}
+    ids = ", ".join(map(str, COSINE_QUERY_IDS))
+    con = duckdb_conn(sf_dir)
+    want = {
+        (qi, i): d
+        for qi, i, d in con.sql(f"""
+            SELECT NULL, vec_id, {_emb_dot("embedding", "embedding")} FROM embeddings
+            UNION ALL
+            SELECT q.vec_id, e.vec_id, {_emb_dot("q.embedding", "e.embedding")}
+            FROM embeddings q, embeddings e WHERE q.vec_id IN ({ids})
+        """).fetchall()
+    }
+    assert got.keys() == want.keys()
+    diff = [(k, got[k], want[k]) for k in sorted(want, key=str) if got[k] != want[k]]
+    assert not diff, (
+        f"{len(diff)} of {len(want)} folds differ; first "
+        f"((query_id, or None for a norm, vec_id), spark, duckdb): {diff[0]}"
+    )

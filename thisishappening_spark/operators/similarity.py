@@ -18,11 +18,13 @@ Two tiers, per the training-pipeline brief:
 Both read an ``embeddings``-shaped frame: ``vec_id`` and an ``EMB_DIM``-long
 ``embedding``.
 
-Determinism discipline (registry rules, registry.py): dot products and
-norms quantize each double product to DECIMAL(28,15) and sum exactly, so
-Spark and DuckDB agree bit-for-bit; the final cosine divides doubles whose
-inputs are those exact decimals (sqrt and / are correctly rounded IEEE ops
-→ identical across engines), then rounds to 6 dp.
+Determinism discipline (registry rule 1, registry.py): a dot product or
+norm is a fold inside one row, so it runs in IEEE double: a left fold in
+element order, one rounded multiply and one rounded add per step. Both
+engines fix that order, so Spark and the DuckDB oracle's ``list_reduce``
+return identical bits (tests/test_llm_ops.py checks every norm and
+query×corpus dot). The cosine then divides by the product of the two
+square roots (correctly rounded IEEE ops) and rounds to 6 dp.
 """
 
 from __future__ import annotations
@@ -61,40 +63,33 @@ def as_double_vec(col: str) -> Column:
     return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
 
 
-def dot_dec(a: str, b: str) -> str:
-    """Decimal dot product: per-term quantize to DECIMAL(28,15), then a
-    sequential left fold. NOTE (corrected r22): each step's ``acc + t`` is
-    typed DECIMAL(38,14) by Spark's precision-loss adjustment (precision
-    39 → 38 drops one scale digit, HALF_UP) BEFORE the re-CAST to (38,15),
-    so the accumulator effectively lives at 14 dp and every result's 15th
-    digit is zero — deterministic (arrays fold in element order), but NOT
-    the exact 15 dp sum the r21 docstring claimed, and ~1e-14 away from
-    the oracle's exact decimal SUM; harmless because every compared output
-    rounds to 6 dp. An Arrow-batched bit-equal twin was built and rejected
-    in r22 (OPTIMIZATION_r22.md §4): at bench scale the per-task Python
-    worker handshakes of three ArrowEvalPython stages cost far more than
-    the interpreted HOF they replace. Returns a SQL string over the named
+def dot(a: str, b: str) -> str:
+    """Dot product of two array<double> columns: a left fold in element
+    order, one IEEE double op per step. Returns a SQL string over the named
     array columns."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x * y AS DECIMAL(28,15))), "
-        f"CAST(0 AS DECIMAL(38,15)), (acc, t) -> CAST(acc + t AS DECIMAL(38,15)))"
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, t) -> acc + t)"
+
+
+def _vectors(emb: DataFrame, query_ids: list[int]) -> tuple[DataFrame, DataFrame]:
+    """The corpus as (vid, v, n2), each vector in double with its squared
+    norm, and the query vectors among it as (query_id, qv, qn2)."""
+    v = emb.select(F.col("vec_id").alias("vid"), as_double_vec("embedding").alias("v"))
+    base = v.select("vid", "v", F.expr(f"{dot('v', 'v')} AS n2"))
+    q = base.filter(F.col("vid").isin(query_ids)).selectExpr(
+        "vid AS query_id", "v AS qv", "n2 AS qn2"
     )
+    return base, q
 
 
-def norm2_dec(a: str) -> str:
-    return dot_dec(a, a)
-
-
-def cosine(dot: str, n2a: str, n2b: str) -> str:
-    return (
-        f"round(CAST({dot} AS DOUBLE) / (sqrt(CAST({n2a} AS DOUBLE)) * "
-        f"sqrt(CAST({n2b} AS DOUBLE))), 6)"
+def _score_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Score (query_id, vid, v, n2, qv, qn2) pairs by cosine, rounded to
+    6 dp, and keep each query's top k by (cos desc, neighbor_id), a
+    deterministic tie-break."""
+    scored = pairs.selectExpr(
+        "query_id",
+        "vid AS neighbor_id",
+        f"round({dot('qv', 'v')} / (sqrt(qn2) * sqrt(n2)), 6) AS cos_sim",
     )
-
-
-def _topk(scored: DataFrame, k: int) -> DataFrame:
-    """Deterministic per-query top-k: row_number over (cos desc,
-    neighbor_id) — same window the Column form built, as one projection."""
     return scored.selectExpr(
         "query_id",
         "neighbor_id",
@@ -108,21 +103,10 @@ def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
     """Top-k cosine neighbors for each query vector (excluding self).
 
     Output: (query_id, neighbor_id, cos_sim, rank). Queries are broadcast
-    (tiny side), so the corpus scan never shuffles; ranking uses
-    row_number over (cos desc, neighbor_id) for a deterministic tie-break.
+    (tiny side) into a nested-loop join, so the corpus scan never shuffles.
     """
-    v = emb.select(F.col("vec_id").alias("vid"), as_double_vec("embedding").alias("v"))
-    norms = v.select("vid", "v", F.expr(f"{norm2_dec('v')} AS n2"))
-    q = norms.filter(F.col("vid").isin(query_ids)).selectExpr(
-        "vid AS query_id", "v AS qv", "n2 AS qn2"
-    )
-    pairs = norms.join(F.broadcast(q), F.col("vid") != F.col("query_id"))
-    scored = pairs.selectExpr(
-        "query_id",
-        "vid AS neighbor_id",
-        f"{cosine(dot_dec('qv', 'v'), 'qn2', 'n2')} AS cos_sim",
-    )
-    return _topk(scored, k)
+    base, q = _vectors(emb, query_ids)
+    return _score_topk(base.join(F.broadcast(q), F.col("vid") != F.col("query_id")), k)
 
 
 def _lattice_matrix(n_planes: int, dim: int):
@@ -182,21 +166,18 @@ def ann_lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
     selective. The pytest harness measures recall against
     :func:`cosine_topk`.
 
-    Rerank-cost note (r21): a (query, candidate) pair that collides in m
-    of the L·(1+probes) probed buckets used to be scored m times and
-    deduped on the scores; candidates are now deduped BEFORE the exact
-    rerank (measured multiplicity 3.1× on the sf0.1 fixture), so each
-    pair pays the decimal-exact dot product once.
-
-    Dedup keying: the dedup groups on the bare (query_id, vid) pair and
-    re-attaches (v, n2) with ``first()``. (v, n2) are functionally
-    determined by vid, so grouping hashes and compares two longs rather
-    than normalizing a 64-double array per collision row
-    (``knownfloatingpointnormalized(transform(v, …))``, which
-    test_plans.py keeps out of the executed plan).
+    Candidates are deduped on (query_id, vid) BEFORE the exact rerank, so a
+    pair that collides in m of the probed buckets is scored once, not m
+    times. The dedup groups on the two ids and re-attaches (v, n2) with
+    ``first()``: (v, n2) are functionally determined by vid, so grouping
+    hashes and compares two longs rather than normalizing a 64-double
+    array per collision row (``knownfloatingpointnormalized(transform(v,
+    …))``, which test_plans.py keeps out of the executed plan). Shuffling
+    only the candidates also beats an ids-only distinct re-joined to the
+    corpus, whose extra join stage cost more than the slimmer exchange
+    saved.
     """
-    v = emb.select(F.col("vec_id").alias("vid"), as_double_vec("embedding").alias("v"))
-    base = v.select("vid", "v", F.expr(f"{norm2_dec('v')} AS n2"))
+    base, qtab = _vectors(emb, query_ids)
     buckets = lsh_buckets_udf()
     ent = base.select(
         "vid", "v", "n2", F.posexplode(buckets(F.col("v"))).alias("tbl", "bucket")
@@ -211,22 +192,7 @@ def ann_lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
         F.broadcast(q),
         F.expr("tbl = q_tbl AND bucket = probe_bucket AND vid != query_id"),
     )
-    # Dedup before the rerank, keyed on (query_id, vid) (see docstring).
-    # r22 A/B (8 rounds/side): 1.99/1.28 vs 1.94/1.39 med-of-med/min —
-    # a wash on medians, min favors this; bit-identical at three SFs. An
-    # ids-only distinct + corpus re-join variant was also built and
-    # rejected (consistent ~0.85× locally: the extra join stage cost more
-    # than the slimmer exchange saved, and selective probing favors
-    # shuffling only candidate vectors at scale anyway).
     uniq = cand.groupBy("query_id", "vid").agg(
         F.first("v").alias("v"), F.first("n2").alias("n2")
     )
-    qtab = base.filter(F.col("vid").isin(query_ids)).selectExpr(
-        "vid AS query_id", "v AS qv", "n2 AS qn2"
-    )
-    scored = uniq.join(F.broadcast(qtab), "query_id").selectExpr(
-        "query_id",
-        "vid AS neighbor_id",
-        f"{cosine(dot_dec('qv', 'v'), 'qn2', 'n2')} AS cos_sim",
-    )
-    return _topk(scored, k)
+    return _score_topk(uniq.join(F.broadcast(qtab), "query_id"), k)

@@ -1,3 +1,2 @@
-"""Parameterized query builders — the reference's query surface
-(`RecentTweets.get_recent_tweets` and the event PK lookup) as DataFrame
-plan functions."""
+"""Parameterized query builders — the reference's most-called query
+(`RecentTweets.get_recent_tweets`) as a DataFrame plan function."""

@@ -1,11 +1,9 @@
-"""The reference's most-called query path as parameterized DataFrame plans.
+"""The reference's most-called query path as a parameterized DataFrame plan.
 
 `get_recent_tweets` (reference data_base.py:307-382) is called 4× per
-arriving tweet; the event PK lookup (:134-139) rounds out the surface.
-Each builder here composes the exact predicate stack (Q1-Q6 and Q8 in
-SURVEY.md §2.2) onto a tweets-shaped DataFrame (time column
-``created_at``, key ``id``) and lets Catalyst push every filter to the
-scan.
+arriving tweet. The builder here composes its exact predicate stack (Q1-Q6
+in SURVEY.md §2.2) onto a tweets-shaped DataFrame (time column
+``created_at``) and lets Catalyst push every filter to the scan.
 
 Scale notes: every query carries a time bound (Q1), which on a
 date-partitioned table becomes partition pruning — the 100 TB plan reads
@@ -45,7 +43,6 @@ def recent_tweets(
     place_type_or_coords: bool = True,
     include_quote_status: bool = True,
     include_reply_status: bool = True,
-    include_deleted_status: bool = False,
     ordered: bool = True,
 ) -> DataFrame:
     """Mirror of get_recent_tweets (reference data_base.py:307-382),
@@ -63,7 +60,9 @@ def recent_tweets(
     - Q3: when `place_type_or_coords` and BOTH args given, the two combine
       with OR; otherwise each applies independently (data_base.py:355-368).
     - Q4/Q5 use `IS NOT TRUE` — NULL rows are KEPT (data_base.py:370-376).
-    - Q6 `deleted_at IS NULL` (data_base.py:378-380).
+    - Q6 `deleted_at IS NULL` (data_base.py:378-380), always applied: the
+      reference's `include_deleted_status` defaults to False and no caller
+      sets it.
     """
     # Q1: closed sliding interval [timestamp - hours, timestamp]
     # (data_base.py:334-342). Predicates are SQL strings (r21 convention,
@@ -93,14 +92,8 @@ def recent_tweets(
         conds.append("NOT (is_quote_status <=> TRUE)")
     if not include_reply_status:
         conds.append("NOT (is_reply_status <=> TRUE)")
-    if not include_deleted_status:
-        conds.append("deleted_at IS NULL")
+    conds.append("deleted_at IS NULL")
 
     df = tweets.filter(" AND ".join(f"({c})" for c in conds))
     return df.orderBy(F.desc("created_at")) if ordered else df
-
-
-def event_by_id(events: DataFrame, event_id: int) -> DataFrame:
-    """Q8 PK lookup (reference data_base.py:134-139)."""
-    return events.filter(F.col("id") == F.lit(event_id))
 

@@ -6,8 +6,9 @@ analysis (stats, quality, language ID, fingerprints).
 Every oracle reproduces the Spark arithmetic exactly (see registry.py):
 integer dictionary IDs + fixed ``(a·x+b) mod p`` permutations make the
 hash family engine-portable, and the ANN hyperplanes come from one integer
-formula; ratios divide BIGINTs; dot products quantize per-term to
-DECIMAL(28,15) before the exact sum.
+formula; ratios divide BIGINTs; dot products and norms fold each row's
+array left to right in IEEE double, in the same order as Spark's
+``aggregate``, so both engines return the same bits.
 
 The operators live in ``operators/dedup.py`` / ``operators/similarity.py``
 / ``operators/textstats.py`` with the 100 TB shuffle story per docstring.
@@ -98,37 +99,34 @@ COSINE_QUERY_IDS = [0, 1, 2, 3, 4]
 _QUERY_IN = ", ".join(str(i) for i in COSINE_QUERY_IDS)
 
 
+def _fold(term: str) -> str:
+    """Sum of ``term`` over i = 0 .. EMB_DIM-1 as a left fold in element
+    order, one IEEE double add per step — the order of Spark's
+    ``aggregate`` in similarity.dot, so both engines return the same bits.
+    ``term`` must be DOUBLE; DuckDB types a bare 2147483647.0 as DECIMAL."""
+    return f"list_reduce(list_transform(range(0, {EMB_DIM}), i -> {term}), (a, y) -> a + y)"
+
+
+def _emb_dot(a: str, b: str) -> str:
+    """Dot product of two embedding columns, as similarity.dot computes it."""
+    return _fold(f"CAST({a}[i + 1] AS DOUBLE) * CAST({b}[i + 1] AS DOUBLE)")
+
+
 def _cosine_top3_sql(pairs_ctes: str) -> str:
     """Oracle for a cosine top-3 over candidate pairs: ``pairs_ctes``
     defines CTEs ending in ``pairs(query_id, neighbor_id)``; each pair is
-    scored with the decimal-quantized cosine (registry rule 1) and ranked
-    by (cos_sim desc, neighbor_id) within its query."""
+    scored with the double-fold cosine (registry rule 1) and ranked by
+    (cos_sim desc, neighbor_id) within its query."""
     return f"""
     WITH {pairs_ctes.strip()},
-    pos AS (SELECT unnest(range(1, {EMB_DIM + 1})) AS i),
-    norms AS (
-      SELECT vec_id,
-             SUM(CAST(CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-                 AS DECIMAL(28,15))) AS n2
-      FROM embeddings, pos GROUP BY vec_id
-    ),
-    dots AS (
+    scored AS (
       SELECT p.query_id, p.neighbor_id,
-             SUM(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
-                 AS DECIMAL(28,15))) AS dot
+             ROUND({_emb_dot("q.embedding", "e.embedding")}
+                   / (sqrt({_emb_dot("q.embedding", "q.embedding")})
+                      * sqrt({_emb_dot("e.embedding", "e.embedding")})), 6) AS cos_sim
       FROM pairs p
       JOIN embeddings q ON q.vec_id = p.query_id
-      JOIN embeddings e ON e.vec_id = p.neighbor_id, pos
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             ROUND(CAST(dot AS DOUBLE)
-                   / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nn.n2 AS DOUBLE))),
-                   6) AS cos_sim
-      FROM dots
-      JOIN norms nq ON dots.query_id = nq.vec_id
-      JOIN norms nn ON dots.neighbor_id = nn.vec_id
+      JOIN embeddings e ON e.vec_id = p.neighbor_id
     ),
     ranked AS (
       SELECT query_id, neighbor_id, cos_sim,
@@ -142,13 +140,13 @@ def _cosine_top3_sql(pairs_ctes: str) -> str:
 
 
 # Projection of ``embedding`` on plane tbl·K + j of the hyperplane lattice
-# (similarity._lattice_matrix), products and left fold in IEEE double as in
-# the bucket UDF's matmul. Every operand is cast explicitly: DuckDB types a
-# bare 2147483647.0 as DECIMAL.
-_HP_DOT = (
-    f"list_reduce(list_transform(range(0, {EMB_DIM}), i -> CAST(embedding[i + 1] AS DOUBLE)"
+# (similarity._lattice_matrix), products and sum in IEEE double as in the
+# bucket UDF's matmul (whose summation order q_ann_lsh_topk's docstring
+# shows cannot flip a sign bit on the test data).
+_HP_DOT = _fold(
+    f"CAST(embedding[i + 1] AS DOUBLE)"
     f" * (CAST((((tbl * {PLANES_PER_TABLE} + j) * {EMB_DIM} + i) * {HP_MULT} + {HP_C})"
-    f" % {HP_M} AS DOUBLE) / CAST({HP_M} AS DOUBLE) - CAST(0.5 AS DOUBLE))), (a, y) -> a + y)"
+    f" % {HP_M} AS DOUBLE) / CAST({HP_M} AS DOUBLE) - CAST(0.5 AS DOUBLE))"
 )
 
 
@@ -319,17 +317,17 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline).
 
     Scale: queries broadcast; dot product is a fused zip_with/aggregate
-    array pass in codegen; decimal-quantized terms make Spark and DuckDB
-    bit-identical before the final IEEE sqrt/divide/round.
+    array pass in codegen; the double folds are bit-identical on Spark and
+    DuckDB before the final IEEE sqrt/divide/round.
 
-    fan_out: the decimal dot products (interpreted HOF, the dominant
-    per-row cost) fuse into the corpus scan, so a narrow parquet layout
-    serializes them — redistribute first (r21; no-op at production row-
-    group counts). ann_lsh_topk deliberately does NOT fan out: its scan
-    stage only feeds the cheap Arrow signature UDF and the added exchange
-    measured net-negative (A/B medians 1.51 vs 2.11 s).
+    No fan-out: with double dot products the scan stage is cheap. On the
+    one-row-group sf0.1 embeddings (local[4], 4-vCPU host, two sessions of
+    15 interleaved warm runs per form), the round-robin exchange cost more
+    CPU in 29 of 30 pairs (medians 0.80 and 0.53 s with it, 0.55 and
+    0.36 s without) and saved no wall time (0.41 and 0.34 s with it, 0.40
+    and 0.32 s without).
     """
-    emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
+    emb = load_table(spark, sf_dir, "embeddings")
     df = similarity.cosine_topk(emb, COSINE_QUERY_IDS, k=3)
     return df.withColumn("rank", F.col("rank").cast("int"))
 

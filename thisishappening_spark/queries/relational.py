@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from thisishappening_spark.registry import dsum, query
+from thisishappening_spark.registry import dsum, qsum, query
 from thisishappening_spark.sources.tables import load_table
 
 # Shared decimal-exact revenue term (the oracle SQL twin appears in each
@@ -378,9 +378,7 @@ def q_decay_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_cols=("event_id",),
     )
     return weighted.groupBy("user_id").agg(
-        F.round(F.sum(F.col("weight").cast("decimal(28,15)")).cast("double"), 6).alias(
-            "total_weight"
-        ),
+        F.expr(f"{qsum('weight')} AS total_weight"),
         F.count(F.lit(1)).alias("n_events"),
     )
 

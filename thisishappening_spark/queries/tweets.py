@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from thisishappening_spark.functions.geo import BoundingBox, inbounds_half_open
-from thisishappening_spark.registry import query
+from thisishappening_spark.registry import qsum, query
 from thisishappening_spark.sources.tweets_view import load_tweets, tweets_cte
 
 BBOX = BoundingBox(west=-71.15, south=42.25, east=-70.95, north=42.45)
@@ -241,10 +241,8 @@ def q_pk_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 point lookup (reference data_base.py:134-139). At scale this is
     a parquet min/max-pruned scan — only row groups whose id range covers
     the key are read."""
-    from thisishappening_spark.plans.recent_tweets import event_by_id
-
     tw = load_tweets(spark, sf_dir)
-    return event_by_id(tw, 4242).select(
+    return tw.filter(F.col("id") == F.lit(4242)).select(
         "id", "status_id_str", "user_screen_name", "place_name", "created_at"
     )
 
@@ -293,9 +291,7 @@ def q_weighted_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_cols=("id",),
     )
     return weighted.groupBy("place_type").agg(
-        F.round(F.sum(F.col("weight").cast("decimal(28,15)")).cast("double"), 6).alias(
-            "total_weight"
-        ),
+        F.expr(f"{qsum('weight')} AS total_weight"),
         F.count(F.lit(1)).alias("n"),
     )
 

@@ -1,0 +1,171 @@
+"""get_spark starts the driver JVM from a class-data-sharing archive that it
+builds once (session.py, "Class-data-sharing archive").
+
+Each JVM here runs in its own Python process whose ``session.ARCHIVE_DIR``
+points at a temporary directory, so the checkout's archive is never
+touched. The module starts four JVMs: one that writes an archive, one that
+maps it, one over a truncated copy and one with another class path. The
+other tests stop at the launch decision and start none.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+import zipfile
+
+import pytest
+from pyspark.sql import SparkSession
+
+from thisishappening_spark import session
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+SCRIPT = """
+import json, sys
+from thisishappening_spark import session
+session.ARCHIVE_DIR = sys.argv[1]
+spark = session.get_spark(extra_conf=json.loads(sys.argv[2]))
+print(spark.range(10).count())
+"""
+
+
+def start(archive_dir, extra_conf: dict[str, str] | None = None) -> subprocess.CompletedProcess:
+    """Run SCRIPT in a new Python process. The JVM holds the output pipes
+    until it has exited, so this returns after any archive is written."""
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2")
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, env.get("PYTHONPATH")) if p)
+    proc = subprocess.run(
+        [sys.executable, "-c", SCRIPT, str(archive_dir), json.dumps(extra_conf or {})],
+        cwd=archive_dir, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return proc
+
+
+def archive_in(directory) -> str:
+    (archive,) = [os.path.join(directory, n) for n in os.listdir(directory) if n.endswith(".jsa")]
+    return archive
+
+
+def identity(path: str) -> tuple[int, int]:
+    st = os.stat(path)
+    return st.st_ino, st.st_mtime_ns
+
+
+@pytest.fixture(scope="module")
+def built(tmp_path_factory):
+    """An archive directory after the start that wrote its archive, and
+    that start's process."""
+    directory = tmp_path_factory.mktemp("jvm")
+    return str(directory), start(directory)
+
+
+def test_building_start_keeps_jvm_logs_off_stdout(built):
+    """The JVM that writes the archive logs hundreds of CDS warnings as it
+    exits; the caller's stdout must hold only what the script printed."""
+    directory, proc = built
+    assert proc.stdout == "10\n"
+    assert "[warning][cds]" in proc.stderr
+    assert session._complete(archive_in(directory))
+
+
+def test_later_start_maps_the_archive(built, tmp_path):
+    """A start after the building one loads Spark's classes from the
+    archive, also with a caller's own extraJavaOptions, and writes no new
+    archive."""
+    directory, _ = built
+    archive = archive_in(directory)
+    before = identity(archive)
+    log = tmp_path / "classes.log"
+    proc = start(directory, {"spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={log}"})
+    assert proc.stdout == "10\n"
+    text = log.read_text()
+    assert "org.apache.spark.SparkContext source: shared objects file (top)" in text
+    assert text.count("source: shared objects file (top)") >= 5000
+    assert identity(archive) == before
+
+
+def test_truncated_archive_is_rebuilt(built, tmp_path):
+    """JDK 17 maps a truncated dynamic archive and dies of SIGBUS, so
+    get_spark must not hand one to the JVM: it builds a new one instead."""
+    archive = archive_in(built[0])
+    truncated = tmp_path / os.path.basename(archive)
+    with open(archive, "rb") as f:
+        truncated.write_bytes(f.read(os.path.getsize(archive) // 2))
+    assert not session._complete(str(truncated))
+    assert start(tmp_path).stdout == "10\n"
+    assert session._complete(str(truncated))
+
+
+def test_archive_for_another_class_path_falls_back(built, tmp_path):
+    """A class path the archive was not built for makes the JVM reject it
+    and start normally (-Xshare:auto), with its one warning on stderr; the
+    archive is left as it is."""
+    directory, _ = built
+    archive = archive_in(directory)
+    before = identity(archive)
+    jar = tmp_path / "extra.jar"
+    with zipfile.ZipFile(jar, "w") as z:
+        z.writestr("extra.txt", "x")
+    proc = start(directory, {"spark.driver.extraClassPath": str(jar)})
+    assert proc.stdout == "10\n"
+    assert "Unable to use shared archive" in proc.stderr
+    assert identity(archive) == before
+
+
+def launch(monkeypatch) -> tuple[str | None, str | None]:
+    """Run get_spark without starting a JVM. Return ``SPARK_SUBMIT_OPTS``
+    and ``SPARK_CONF_DIR`` as the JVM launch would have seen them."""
+    seen = {}
+
+    def get_or_create(builder):
+        seen.update((k, os.environ.get(k)) for k in ("SPARK_SUBMIT_OPTS", "SPARK_CONF_DIR"))
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    session.get_spark()
+    return seen["SPARK_SUBMIT_OPTS"], seen["SPARK_CONF_DIR"]
+
+
+@pytest.mark.parametrize(
+    "conf_files, archived",
+    [(["spark-defaults.conf.template"], True),
+     (["spark-defaults.conf.template", "spark-defaults.conf"], False)],
+)
+def test_conf_dir_gate(monkeypatch, tmp_path, conf_files, archived):
+    """A conf dir holding only templates is swapped for the archive's empty
+    one for the launch; one holding a setting keeps the JVM off the archive,
+    so the setting is never hidden. A caller's SPARK_SUBMIT_OPTS is kept,
+    and both variables are restored after the launch."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    for name in conf_files:
+        (conf / name).write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    monkeypatch.setenv("SPARK_SUBMIT_OPTS", "-Dcaller=1")
+    monkeypatch.setattr(session, "ARCHIVE_DIR", str(tmp_path / "jvm"))
+    options, conf_dir = launch(monkeypatch)
+    if archived:
+        assert options.startswith("-Dcaller=1 -XX:ArchiveClassesAtExit=")
+        assert options.endswith(" -Xlog:all=warning:stderr")
+        assert conf_dir == str(tmp_path / "jvm" / "conf") and not os.listdir(conf_dir)
+    else:
+        assert options == "-Dcaller=1" and conf_dir == str(conf)
+    assert os.environ["SPARK_CONF_DIR"] == str(conf)
+    assert os.environ["SPARK_SUBMIT_OPTS"] == "-Dcaller=1"
+
+
+def test_garbage_archive_is_replaced(monkeypatch, tmp_path):
+    """A file under the archive's name that is not a whole archive is
+    removed and the next JVM builds the archive again; it is never mapped."""
+    monkeypatch.delenv("SPARK_SUBMIT_OPTS", raising=False)
+    monkeypatch.setattr(session, "ARCHIVE_DIR", str(tmp_path))
+    options, _ = launch(monkeypatch)
+    archive = options.split()[0].split("=", 1)[1]
+    with open(archive, "wb") as f:
+        f.write(os.urandom(1 << 20))
+    options, _ = launch(monkeypatch)
+    assert options.split()[0] == f"-XX:ArchiveClassesAtExit={archive}"
+    assert not os.path.exists(archive)

@@ -209,15 +209,15 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hot shingle could otherwise create; Jaccard is an exact BIGINT
     ratio (no quantization).
 
-    fan_out: the interpreted shingle transform fuses into the scan stage,
-    so a narrow parquet layout (fewer row groups than cores) serializes it
-    — redistribute first (r21; no-op on production-sized inputs).
-    Re-validated r22 under cold-session interleaved A/B (6 rounds/side):
-    kept — medians a wash (2.97 vs 2.84 s), min-of-all favors fan-out
-    (1.60 vs 2.17 s); here the exchange is paid once and the whole heavy
-    postings pipeline sits above it.
+    No fan-out: the shingle transform runs in the scan stage, on as many
+    tasks as the file has row groups. On the one-row-group sf0.1 documents
+    (local[4], 4-vCPU host, two sessions of 15 interleaved warm runs per
+    form), the round-robin exchange cost more CPU in 29 of 30 pairs
+    (medians 2.88 and 3.38 s with it, 2.49 and 3.11 s without). It did
+    spread the transform over the cores: wall time was lower with it in 30
+    of 30 pairs (1.29 and 1.42 s against 1.87 and 2.38 s).
     """
-    docs = load_table(spark, sf_dir, "documents", fan_out=True)
+    docs = load_table(spark, sf_dir, "documents")
     return dedup.jaccard_pairs(docs, threshold=0.5)
 
 
@@ -257,10 +257,9 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform measured 0.66× in the driver's environment; the r22
     cold-session interleaved A/B (6 rounds/side, fresh JVM, bench
     methodology) confirmed it: fan-out median-of-medians 8.67 s vs 3.57 s
-    without, min-of-all 3.82 vs 2.53 s. Unlike q_ngram_jaccard_pairs this
-    plan traverses the shingle subtree twice (ids + dictionary sides), so
-    the full-pass exchange is paid twice but the narrow-scan serialization
-    it fixes is amortized over less downstream work per pass.
+    without, min-of-all 3.82 vs 2.53 s. The plan traverses the shingle
+    subtree twice (ids + dictionary sides), so the exchange would be paid
+    twice.
     """
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(docs)

@@ -3,8 +3,9 @@
 Runs a registry query on Spark and its SQL oracle on DuckDB over the same
 parquet tables, then compares as (column-name-sorted, row-sorted) value
 matrices with exact equality for ints/strings and tight tolerance for
-floats (the registry's decimal-sum discipline should make most floats
-bit-equal; tolerance only covers round()-boundary noise).
+floats. Registry rule 1 makes most floats bit-equal: Spark sums integer
+units exactly while the oracles sum DECIMALs, and both fold arrays in
+double left to right; the tolerance only covers round()-boundary noise.
 """
 
 from __future__ import annotations

@@ -50,6 +50,14 @@ def test_sliding_window_counts_no_nested_loop(spark, sf_dir):
     assert "NestedLoop" not in executed_plan(df)
 
 
+def test_sliding_window_counts_scans_events_once(spark, sf_dir):
+    """Anchors and counts come from one scan of events: no second scan for
+    the distinct anchors and no join to put them back together."""
+    plan = _final_plan(spark, sf_dir, "q_sliding_window_counts")
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "Join" not in plan, plan
+
+
 def test_ann_dedup_keys_on_ids_not_vectors(spark, sf_dir):
     """The candidate dedup groups on (query_id, vid): no 64-double vector
     is normalized per collision row as a grouping key."""

@@ -4,7 +4,11 @@ The reference initializes every tweet's weight to 1.0 and then divides by
 exp(x·factor) three times (reference data_utils.py:86-145):
 
   W2  blocklisted exact coords  (x=1, factor_lon_lat)   — matched on the
-      "%.5f"-formatted string pair, preserved here via format_number
+      "%.5f"-formatted string pair via format_string, behind a numeric
+      guard: a double that formats to a blocklisted string lies within
+      5e-6 of it, so ``abs(lon - x) < 1e-4`` (and lat) first rules out
+      every point that cannot match, and the short-circuit AND runs the
+      formatter only near a blocklisted point
   W3  no point coords           (x=1, factor_no_coords)
   W1  per-user recency rank     (x=i, factor_user), i = 0,1,2,… by
       created_at ascending within user
@@ -61,10 +65,8 @@ def with_activity_weight(
     created_at sort (the reference relies on Python stable sort of
     insertion order; a distributed engine needs an explicit key).
     """
-    # Caller-supplied column names interpolate into parsed SQL, so quote
-    # them (ADVICE r21): names needing backticks (spaces, hyphens, reserved
-    # words) worked under F.col() and must keep working under the string
-    # convention. ident() resolves to the identical attribute.
+    # Caller-supplied column names interpolate into parsed SQL: quote them
+    # so names needing backticks keep working (same attribute as F.col()).
     user_col, time_col = ident(user_col), ident(time_col)
     order_cols = tuple(ident(o) for o in order_cols)
 
@@ -76,8 +78,13 @@ def with_activity_weight(
             f"named_struct('lon_key', {sql_str(lo)}, 'lat_key', {sql_str(la)})"
             for lo, la in reduce_weight_lon_lat
         ) + ")"
+        near = " OR ".join(
+            f"(abs(longitude - {flit(float(lo))}) < 1e-4D "
+            f"AND abs(latitude - {flit(float(la))}) < 1e-4D)"
+            for lo, la in reduce_weight_lon_lat
+        )
         w = (
-            f"CASE WHEN array_contains({blocked}, {key}) "
+            f"CASE WHEN ({near}) AND array_contains({blocked}, {key}) "
             f"THEN {compute_weight(w, '1', weight_factor_lon_lat)} ELSE {w} END"
         )
 

@@ -253,13 +253,9 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: candidates come from grouping on (band, band_key) — never an
     all-pairs comparison.
 
-    fan-out: REVERTED r22. The r21 round-robin exchange before the shingle
-    transform measured 0.66× in the driver's environment; the r22
-    cold-session interleaved A/B (6 rounds/side, fresh JVM, bench
-    methodology) confirmed it: fan-out median-of-medians 8.67 s vs 3.57 s
-    without, min-of-all 3.82 vs 2.53 s. The plan traverses the shingle
-    subtree twice (ids + dictionary sides), so the exchange would be paid
-    twice.
+    No fan-out: the plan traverses the shingle subtree twice (ids and
+    dictionary sides), so a round-robin exchange ahead of it is paid twice
+    (interleaved A/B medians 8.67 s with it, 3.57 s without).
     """
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(docs)

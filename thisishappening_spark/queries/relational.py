@@ -11,17 +11,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from thisishappening_spark.registry import dsum, qsum, query
+from thisishappening_spark.registry import dsum, isum, qsum, query, units
 from thisishappening_spark.sources.tables import load_table
 
-# Shared decimal-exact revenue term (the oracle SQL twin appears in each
-# query's oracle string): quantize price and (1 - discount) to
-# DECIMAL(18,2), multiply into DECIMAL(18,4). Kept as a parsed string —
-# the Column-operator form cost ~40 Py4J round trips per use (r21).
-_REVENUE_DEC = (
-    "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) "
-    "* CAST(1 - l_discount AS DECIMAL(18,2)) AS DECIMAL(18,4))"
-)
+# Shared revenue term in 10^-4 units: cents of price × cents of
+# (1 - discount), an exact BIGINT product (registry rule 1). The oracles
+# keep the DECIMAL(18,2) × DECIMAL(18,2) form.
+_REVENUE = f"{units('l_extendedprice', 2)} * {units('1 - l_discount', 2)}"
 
 
 # ---------------------------------------------------------------------------
@@ -58,10 +54,9 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, not rows. Filter and 7-column projection push to parquet.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # Parsed-string twins of the oracle SQL above — identical decimal
-    # quantization chain, built in one round trip per aggregate instead of
-    # ~570 for the Column-operator form (r21 construction profile).
-    charge = f"CAST({_REVENUE_DEC} * CAST(1 + l_tax AS DECIMAL(18,2)) AS DECIMAL(18,6))"
+    # Parsed strings, one round trip per aggregate instead of ~570 for the
+    # Column-operator form (r21 construction profile). Charge is scale 6.
+    charge = f"{_REVENUE} * {units('1 + l_tax', 2)}"
 
     return (
         li.filter("l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'")
@@ -69,8 +64,8 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.expr(f"{dsum('l_quantity')} AS sum_qty"),
             F.expr(f"{dsum('l_extendedprice')} AS sum_base_price"),
-            F.expr(f"CAST(SUM({_REVENUE_DEC}) AS DOUBLE) AS sum_disc_price"),
-            F.expr(f"CAST(SUM({charge}) AS DOUBLE) AS sum_charge"),
+            F.expr(f"{isum(_REVENUE, 4)} AS sum_disc_price"),
+            F.expr(f"{isum(charge, 6)} AS sum_charge"),
             F.expr(f"{dsum('l_quantity')} / count(1) AS avg_qty"),
             F.expr(f"{dsum('l_extendedprice')} / count(1) AS avg_price"),
             F.expr(f"{dsum('l_discount')} / count(1) AS avg_disc"),
@@ -117,7 +112,7 @@ def q03_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(o, F.expr("c_custkey = o_custkey"))
         .join(li, F.expr("l_orderkey = o_orderkey"))
         .groupBy("o_orderkey", F.col("o_orderdate").cast("date").alias("orderdate"))
-        .agg(F.expr(f"CAST(SUM({_REVENUE_DEC}) AS DOUBLE) AS revenue"))
+        .agg(F.expr(f"{isum(_REVENUE, 4)} AS revenue"))
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
         .limit(10)
     )
@@ -165,7 +160,7 @@ def q05_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(n, F.expr("s_nationkey = n_nationkey"))
         .join(r, F.expr("n_regionkey = r_regionkey"))
         .groupBy("n_name")
-        .agg(F.expr(f"CAST(SUM({_REVENUE_DEC}) AS DOUBLE) AS revenue"))
+        .agg(F.expr(f"{isum(_REVENUE, 4)} AS revenue"))
     )
 
 
@@ -268,14 +263,8 @@ def q_setop_click_not_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping-set aggregation (engine surface beyond reference, SURVEY §2.4).
 
-    fan_out REVERTED (r22): r21 fanned this scan out (Expand triples the
-    decimal partial-agg rows). The driver's ground truth measured it 0.83×
-    (0.99 → 1.19 s), and unlike the documents/embeddings sites the cost is
-    mechanistically plausible here — lineitem is 18× larger than the other
-    fanned tables, so the round-robin exchange moves ~10 MB plus the
-    sort-before-repartition of 600 k rows. The r22 cold-session A/B margin
-    (min 0.93 vs 1.04 s over 8 interleaved rounds per side) was within
-    noise, so the driver's number stands and the exchange is dropped.
+    No fan-out: a round-robin exchange of lineitem ahead of the Expand
+    measured slower (0.99 → 1.19 s).
     """
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
@@ -362,7 +351,7 @@ def q_decay_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     weight_i = exp(-i·factor), i = rank of the row within its user ordered
     by time — expressed as a window row_number, entirely JVM-side.
-    Each exp term is quantized to DECIMAL(28,15) before summing so the sum
+    Each exp term is quantized to 10^-15 units before summing so the sum
     is order-independent (Spark partial-agg order differs from DuckDB's);
     the final ROUND(...,6) absorbs last-ulp libm differences between
     engines.
@@ -517,27 +506,30 @@ def q_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 exact semantics: anchored sliding window `(anchor-24h, anchor]`
     (reference count_tweets data_base.py:276-305), one count per anchor.
 
-    Plan: because anchors are day-truncated and the window is exactly
-    24 h, each event contributes to exactly ONE anchor — the next day
-    boundary at or after its timestamp. Assigning that anchor as a
-    derived day key turns the range join into groupBy(day) + a tiny
-    EQUI-join of day keys (both sides ≤ #days rows). The naive
-    formulation — broadcast nested-loop anchors × events — tests every
-    event against every anchor and becomes a scan-multiplier at 100 TB
-    with years of anchors; this one scans events once, partial-aggregates
-    map-side, and shuffles only day-level counts.
+    Plan: anchors are day-truncated and the window is exactly 24 h, so
+    each event counts toward exactly ONE anchor, the next day boundary at
+    or after its timestamp. Each event becomes two rows, its own day
+    (which makes that day an anchor) and the anchor it counts toward; one
+    groupBy(anchor) keeps the days with an own row. Events are scanned
+    once, with no join (a nested-loop anchors × events join would
+    multiply the scan at 100 TB), and only day-level partials shuffle.
     """
     ev = load_table(spark, sf_dir, "events")
     day = "date_trunc('day', ts)"
     # (anchor-24h, anchor]: an event at exactly midnight belongs to its own
-    # day-start anchor (closed upper bound); all others to the next one.
+    # day-start anchor (closed upper bound); all others to the next one. A
+    # NULL ts counts toward no anchor (the oracle's join condition is NULL),
+    # but its NULL day is still an anchor with count 0.
     contrib = f"CASE WHEN ts = {day} THEN {day} ELSE {day} + INTERVAL 24 HOURS END"
-    per_day = ev.groupBy(F.expr(f"{contrib} AS anchor")).agg(
-        F.expr("count(event_id) AS cnt")
-    )
-    anchors = ev.select(F.expr(f"{day} AS anchor")).distinct()
-    return anchors.join(F.broadcast(per_day), "anchor", "left").selectExpr(
-        "anchor", "coalesce(cnt, CAST(0 AS BIGINT)) AS n_last_24h"
+    return (
+        ev.selectExpr(
+            f"inline(array(struct({day} AS anchor, true AS own, CAST(NULL AS BIGINT) AS e), "
+            f"struct({contrib} AS anchor, false AS own, IF(ts IS NULL, NULL, event_id) AS e)))"
+        )
+        .groupBy("anchor")
+        .agg(F.expr("count(e) AS n_last_24h"), F.expr("bool_or(own) AS own"))
+        .filter("own")
+        .select("anchor", "n_last_24h")
     )
 
 

@@ -276,7 +276,7 @@ def q_weighted_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1·W2·W3 composed (reference data_utils.py:91-145): blocklisted
     "%.5f"-coords down-weight, no-coords down-weight, per-user exponential
     recency decay — all multiplicative on an initial 1.0, summed per place
-    type with per-term decimal quantization (order-independent)."""
+    type with per-term integer quantization (order-independent)."""
     from thisishappening_spark.functions.weights import with_activity_weight
 
     tw = load_tweets(spark, sf_dir)

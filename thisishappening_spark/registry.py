@@ -11,11 +11,13 @@ follows three discipline rules:
    order-dependent, so a sum is exact across engines only where both fix
    its order:
 
-   - **A sum across rows quantizes.** Spark's partial-aggregation order
-     differs from DuckDB's, so money/quantity terms cast to DECIMAL before
-     the SUM (:func:`dsum`), and transcendental terms (exp weights) are
-     quantized per row to DECIMAL(28,15) and the total rounded to 6 dp
-     (:func:`qsum`). The result is cast back to DOUBLE.
+   - **A sum across rows uses integer units.** Spark's partial-aggregation
+     order differs from DuckDB's, so each term becomes a BIGINT count of
+     10^-s units (:func:`units`; a product multiplies units, so cents ×
+     cents is scale 4) that :func:`isum` sums exactly: s=2 for money and
+     quantities (:func:`dsum`), s=15 and a 6-dp total for exp weights
+     (:func:`qsum`). The oracles keep their DECIMAL sums, an independent
+     formula.
    - **A fold inside one row runs in double.** Both engines fold an array
      left to right in element order, one IEEE op per step, so a dot
      product or norm (``similarity.dot``, the oracle's ``list_reduce``)
@@ -55,17 +57,30 @@ def query(name: str, oracle: str):
     return deco
 
 
+def units(x: str, s: int) -> str:
+    """DOUBLE ``x`` as a BIGINT count of 10^-s units, rounded half up with
+    IEEE ops, valid SQL in Spark and DuckDB. On 2-dp data it equals
+    DuckDB's ``CAST(x AS DECIMAL(18,2)) * 100`` (tests/test_exact_sums.py)."""
+    return f"CAST(floor(({x}) * 1e{s} + 0.5) AS BIGINT)"
+
+
+def isum(u: str, s: int) -> str:
+    """Exact SUM of BIGINT units ``u`` of 10^-s, as DOUBLE: two plain BIGINT
+    sums split at bit 32, merged as DECIMAL(38,0) once per group (no
+    per-row BigDecimal). Exact up to 2^31 rows per group; past that, ANSI
+    mode raises ARITHMETIC_OVERFLOW rather than wrapping."""
+    return (
+        f"CAST(CAST(SUM(shiftright({u}, 32)) AS DECIMAL(38,0)) * 4294967296 "
+        f"+ SUM(({u}) & 4294967295) AS DOUBLE) / 1e{s}"
+    )
+
+
 def dsum(col: str) -> str:
-    """SUM of a column quantized to DECIMAL(18,2), as DOUBLE: an order-
-    independent sum that Spark and DuckDB compute bit-identically (rule 1).
-    A SQL string, spelled like the oracle SQL."""
-    return f"CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
+    """SUM of a 2-dp column in cents (rule 1), as DOUBLE."""
+    return isum(units(col, 2), 2)
 
 
 def qsum(col: str) -> str:
-    """SUM of per-row double terms quantized to DECIMAL(28,15), as DOUBLE
-    rounded to 6 dp: an order-independent sum of transcendental terms
-    whose last-ulp libm differences the rounding absorbs (rule 1). A SQL
-    string, spelled like the oracle SQL."""
-    return f"round(CAST(SUM(CAST({col} AS DECIMAL(28,15))) AS DOUBLE), 6)"
-
+    """SUM of per-row double terms in 10^-15 units, as DOUBLE rounded to
+    6 dp, which absorbs last-ulp libm differences between engines (rule 1)."""
+    return f"round({isum(units(col, 15), 15)}, 6)"

@@ -11,9 +11,14 @@ def executed_plan(df) -> str:
 
 def final_plan(df) -> str:
     """Run ``df``, then return the final section of its AQE plan (the plan
-    that actually executed, not the pre-execution one)."""
+    that actually executed, not the pre-execution one). A plan Spark did
+    not make adaptive (no exchange and no required distribution, such as a
+    scan under a ``TakeOrderedAndProject``) ran as it is and is returned
+    whole."""
     df.collect()
     plan = executed_plan(df)
+    if "AdaptiveSparkPlan" not in plan:
+        return plan
     assert "isFinalPlan=true" in plan, plan
     return plan.split("== Initial Plan ==")[0]
 

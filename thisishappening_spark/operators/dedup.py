@@ -145,7 +145,7 @@ def doc_shingles(docs: DataFrame) -> DataFrame:
 # sf0.1 tokens, but 7.5 % of ~9·10⁵ distinct word-trigram shingles over a
 # Zipf(s=1) vocabulary, because every shingle that starts with the most
 # frequent word shares its prefix. Splitting hot buckets is open
-# (ROADMAP item 3).
+# (ROADMAP item 5).
 DICT_BUCKET_CHARS = 4
 
 

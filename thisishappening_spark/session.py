@@ -9,6 +9,9 @@ config here is chosen to also hold on a real multi-executor cluster at
 - shuffle partitions default to cores locally; at cluster scale AQE's
   coalesce makes the initial number mostly a ceiling. ``extra_conf``
   overrides any setting here, the master and shuffle partitions included.
+  A one-row-group ``events`` table plans no shuffle at all:
+  ``sources/tables.py`` loads it as one partition, so these settings do
+  not reach the per-tweet requests that read it.
 - Arrow enabled so the few pandas-UDF operators batch through Arrow rather
   than pickling rows.
 - UTC session timezone: the reference stores naive-UTC timestamps and

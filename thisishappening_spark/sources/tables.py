@@ -8,6 +8,13 @@ pruning reach the scan via Catalyst, which replaces the Postgres planner
 date-partitioned parquet/Delta directories and `spark.read.parquet` picks
 up partition pruning automatically; nothing here assumes single-file
 tables.
+
+A one-task events scan is planned as one partition (``_load_events``), so
+the per-tweet requests above it run without a hash shuffle that AQE would
+only coalesce back into one partition; a table at scale keeps its
+exchanges. Only ``events`` takes this rule: the ``documents`` dedup plans
+rely on their bucket exchanges (``test_dictionary_rank_reuses_bucket_exchange``)
+and the n-gram Jaccard join cost more CPU on one task.
 """
 
 from __future__ import annotations
@@ -68,7 +75,8 @@ def _scan_row_groups(path: str, threshold: int) -> int:
     no Spark job:
 
     - a path with a scheme (``s3://`` …) or that is neither file nor
-      directory returns ``threshold``: no exchange on an unknown layout;
+      directory returns ``threshold``: an unknown layout is treated as
+      wide, with no fan-out exchange and no single-partition coalesce;
     - directories are walked recursively (date-partitioned tables nest),
       and both the walk and the footer reads stop once ``threshold`` is
       reached (every file has ≥ 1 row group), so a production-sized table
@@ -141,6 +149,17 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     never mutated. It must then stay set for the lifetime of the scan —
     Spark consults it at execution, not just plan time, so
     restore-after-read would break the returned DataFrame.
+
+    A table of fewer than 2 row groups is read by one task anyway, so the
+    scan is returned as ``coalesce(1)``: ``CoalesceExec(1)`` reports
+    ``SinglePartition``, which satisfies every distribution an aggregate,
+    window, sort or join asks for, so no exchange is planned above it,
+    while filters and column pruning still reach the scan. A table of ≥ 2
+    row groups or files, or a path ``_scan_row_groups`` cannot inspect (it
+    returns the threshold), is a plain scan and keeps its exchanges. The
+    decision is made once per relation and cached with it like the file
+    listing: no request pays a footer read, and a table rewritten with
+    more row groups is seen only after ``invalidate_relation_cache``.
     """
     import pyarrow.dataset as pa_ds
     import pyarrow.types as pa_types
@@ -152,6 +171,8 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
         if ts_field is not None and pa_types.is_timestamp(ts_field.type) and ts_field.type.unit == "ns":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
+    if _scan_row_groups(path, 2) < 2:
+        df = df.coalesce(1)
     ts_dtype = dict(df.dtypes).get("ts")
     if ts_dtype == "timestamp_ntz":
         # Session tz is pinned UTC, so NTZ→TIMESTAMP is value-preserving.

@@ -1,8 +1,9 @@
 """events.ts has shipped as parquet TIMESTAMP(NANOS), as naive microseconds
 (which Spark reads as TIMESTAMP_NTZ) and as UTC-adjusted microseconds.
 ``load_table`` must turn each into the same ``ts``/``ts_ns`` columns, both
-in a session built by ``get_spark`` and in one that reads nanos as
-timestamps, where ``_load_events`` switches ``nanosAsLong`` on itself."""
+in the session ``get_spark`` builds and in a new session of it with
+``nanosAsLong`` set off. Neither starts with it on, so ``_load_events``
+switches it on itself in both when the footer declares nanos."""
 
 from __future__ import annotations
 

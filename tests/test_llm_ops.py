@@ -53,7 +53,7 @@ def test_minhash_estimates_track_true_jaccard(spark, sf_dir):
     from thisishappening_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    true_rows = jaccard_pairs(docs, threshold=0.5).collect()
+    true_rows = jaccard_pairs(docs).collect()
     # LSH S-curve for 4 bands x 4 rows: P(candidate) = 1-(1-J^4)^4, which
     # is ~0.67 at J=0.7 but >=0.88 at J=0.8 — so only pairs with true
     # J>=0.8 carry a provably-high recall expectation. Measure recall on
@@ -76,11 +76,11 @@ def test_ann_lsh_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     exact = {
         (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk(emb, COSINE_QUERY_IDS, k=3).collect()
+        for r in cosine_topk(emb, COSINE_QUERY_IDS).collect()
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in ann_lsh_topk(emb, COSINE_QUERY_IDS, k=3).collect()
+        for r in ann_lsh_topk(emb, COSINE_QUERY_IDS).collect()
     }
     recall = len(exact & approx) / len(exact)
     # Deterministic lattice + fixed data → deterministic result; measured
@@ -141,7 +141,7 @@ def test_dedup_ops_leave_no_cache_behind(spark, sf_dir):
     from thisishappening_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    jaccard_pairs(docs, threshold=0.5).collect()
+    jaccard_pairs(docs).collect()
     minhash_lsh_pairs(docs).collect()
     n_cached = spark._jsparkSession.sharedState().cacheManager().cachedData().size()
     assert n_cached == 0, f"{n_cached} cached plans leaked"
@@ -203,7 +203,7 @@ def test_ngram_jaccard_reuses_postings_exchange(spark, sf_dir):
     from thisishappening_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    df = jaccard_pairs(docs, threshold=0.5)
+    df = jaccard_pairs(docs)
     df.collect()  # materialize so the AQE final plan (with reuse) exists
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan, (
@@ -244,7 +244,7 @@ def test_ann_dedups_candidates_before_rerank(spark, sf_dir):
     from thisishappening_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    df = ann_lsh_topk(emb, COSINE_QUERY_IDS, k=3)
+    df = ann_lsh_topk(emb, COSINE_QUERY_IDS)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     # AQE's toString prints the final plan followed by the initial plan —

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 import subprocess
 import sys
 import zipfile
@@ -88,13 +89,13 @@ def test_later_start_maps_the_archive(built, tmp_path):
     assert identity(archive) == before
 
 
-def test_truncated_archive_is_rebuilt(built, tmp_path):
+def test_truncated_archive_is_rebuilt(built, tmp_path, monkeypatch):
     """JDK 17 maps a truncated dynamic archive and dies of SIGBUS, so
     get_spark must not hand one to the JVM: it builds a new one instead."""
     archive = archive_in(built[0])
-    truncated = tmp_path / os.path.basename(archive)
-    with open(archive, "rb") as f:
-        truncated.write_bytes(f.read(os.path.getsize(archive) // 2))
+    truncated = chosen_archive(monkeypatch, tmp_path)
+    with open(archive, "rb") as f, open(truncated, "wb") as out:
+        out.write(f.read(os.path.getsize(archive) // 2))
     assert not session._complete(str(truncated))
     assert start(tmp_path).stdout == "10\n"
     assert session._complete(str(truncated))
@@ -129,6 +130,15 @@ def launch(monkeypatch) -> tuple[str | None, str | None]:
     return seen["SPARK_SUBMIT_OPTS"], seen["SPARK_CONF_DIR"]
 
 
+def chosen_archive(monkeypatch, archive_dir) -> str:
+    """The archive path a start under ``ARCHIVE_DIR=archive_dir`` names,
+    found without starting a JVM."""
+    monkeypatch.delenv("SPARK_SUBMIT_OPTS", raising=False)
+    monkeypatch.setattr(session, "ARCHIVE_DIR", str(archive_dir))
+    options, _ = launch(monkeypatch)
+    return options.split()[0].split("=", 1)[1]
+
+
 @pytest.mark.parametrize(
     "conf_files, archived",
     [(["spark-defaults.conf.template"], True),
@@ -160,12 +170,27 @@ def test_conf_dir_gate(monkeypatch, tmp_path, conf_files, archived):
 def test_garbage_archive_is_replaced(monkeypatch, tmp_path):
     """A file under the archive's name that is not a whole archive is
     removed and the next JVM builds the archive again; it is never mapped."""
-    monkeypatch.delenv("SPARK_SUBMIT_OPTS", raising=False)
-    monkeypatch.setattr(session, "ARCHIVE_DIR", str(tmp_path))
-    options, _ = launch(monkeypatch)
-    archive = options.split()[0].split("=", 1)[1]
+    archive = chosen_archive(monkeypatch, tmp_path)
     with open(archive, "wb") as f:
         f.write(os.urandom(1 << 20))
     options, _ = launch(monkeypatch)
     assert options.split()[0] == f"-XX:ArchiveClassesAtExit={archive}"
     assert not os.path.exists(archive)
+
+
+def test_copied_checkout_builds_its_own_archive(monkeypatch, tmp_path):
+    """The launch puts ``ARCHIVE_DIR/conf`` on the class path, and the JVM
+    rejects an archive built for another class path. A whole archive
+    copied from another ``ARCHIVE_DIR`` under the name it had there must
+    not be mapped: the start builds one of its own."""
+    name = os.path.basename(chosen_archive(monkeypatch, tmp_path / "a"))
+    copied = tmp_path / "b" / name
+    copied.parent.mkdir()
+    # The dynamic-archive magic, then the rest of a header whose 7 region
+    # records are zeroed: every region ends inside the file.
+    header = struct.pack("<I", session._DYNAMIC_MAGIC).ljust(session._HEADER_BYTES, b"\0")
+    copied.write_bytes(header)
+    assert session._complete(str(copied))
+    monkeypatch.setattr(session, "ARCHIVE_DIR", str(copied.parent))
+    options, _ = launch(monkeypatch)
+    assert options.split()[0].startswith("-XX:ArchiveClassesAtExit=")

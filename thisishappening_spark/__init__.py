@@ -7,7 +7,7 @@ execution model: declarative DataFrame/SQL plans optimized by Catalyst and
 shuffle-conscious aggregation and join strategies.
 
 Layout:
-  session     SparkSession factory with scale-tuned defaults
+  session     SparkSession factory and its class-data-sharing archive
   sqlexpr     helpers for building Spark-SQL expression strings
   sources     parquet table readers and the derived tweets view
   functions   expression library (geo predicates, activity weights)

@@ -75,6 +75,7 @@ SIMHASH_BITS = 16
 SHINGLE_N = 3  # word n-gram length of every shingle
 # Stop-shingle cap of jaccard_pairs: a shingle in more documents is dropped.
 MAX_SHINGLE_DF = 100
+JACCARD_THRESHOLD = 0.5  # least trigram Jaccard of a jaccard_pairs pair
 
 
 def normalize_text(col: Column) -> Column:
@@ -145,7 +146,7 @@ def doc_shingles(docs: DataFrame) -> DataFrame:
 # sf0.1 tokens, but 7.5 % of ~9·10⁵ distinct word-trigram shingles over a
 # Zipf(s=1) vocabulary, because every shingle that starts with the most
 # frequent word shares its prefix. Splitting hot buckets is open
-# (ROADMAP item 5).
+# (ROADMAP item 6).
 DICT_BUCKET_CHARS = 4
 
 
@@ -293,8 +294,9 @@ def minhash_lsh_pairs(docs: DataFrame, max_bucket_df: int | None = None) -> Data
     )
 
 
-def jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Exact trigram Jaccard similarity for pairs sharing ≥1 shingle.
+def jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Pairs sharing ≥1 shingle whose exact trigram Jaccard similarity is
+    at least ``JACCARD_THRESHOLD``.
 
     Inverted-index join (key = shingle), then |A∩B| via group-count and
     |A∪B| = |A| + |B| − |A∩B|. The Jaccard value is an exact ratio of two
@@ -347,7 +349,7 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
             "CAST(n_inter AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_inter)"
             " AS jaccard",
         )
-        .filter(f"jaccard >= {float(threshold)!r}D")
+        .filter(f"jaccard >= {JACCARD_THRESHOLD!r}D")
     )
 
 

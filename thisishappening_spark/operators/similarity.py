@@ -7,7 +7,7 @@ Two tiers, per the training-pipeline brief:
   ``zip_with``/``aggregate`` column expression — whole-stage-codegen
   JVM-side, no Python, no explode. Per (query, candidate) pair the work is
   one fused array pass. The only shuffle is the final top-k aggregation,
-  which moves k rows per query.
+  which moves ``TOP_K`` rows per query.
 - **LSH-bucketed ANN** (the scale path): random-hyperplane signatures put
   each vector into a bucket; only bucket-mates are scored. Candidate
   generation is an equi-join on the signature, so comparisons scale with
@@ -50,6 +50,7 @@ EMB_DIM = 64  # length of every embedding vector
 # at the query's own bucket and every bucket one bit away.
 LSH_TABLES = 8
 PLANES_PER_TABLE = 4
+TOP_K = 3  # neighbors kept per query vector
 
 
 def as_double_vec(col: str) -> Column:
@@ -81,9 +82,9 @@ def _vectors(emb: DataFrame, query_ids: list[int]) -> tuple[DataFrame, DataFrame
     return base, q
 
 
-def _score_topk(pairs: DataFrame, k: int) -> DataFrame:
+def _score_topk(pairs: DataFrame) -> DataFrame:
     """Score (query_id, vid, v, n2, qv, qn2) pairs by cosine, rounded to
-    6 dp, and keep each query's top k by (cos desc, neighbor_id), a
+    6 dp, and keep each query's top ``TOP_K`` by (cos desc, neighbor_id), a
     deterministic tie-break."""
     scored = pairs.selectExpr(
         "query_id",
@@ -96,17 +97,17 @@ def _score_topk(pairs: DataFrame, k: int) -> DataFrame:
         "cos_sim",
         "row_number() OVER (PARTITION BY query_id "
         "ORDER BY cos_sim DESC, neighbor_id) AS rank",
-    ).filter(f"rank <= {k}")
+    ).filter(f"rank <= {TOP_K}")
 
 
-def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
-    """Top-k cosine neighbors for each query vector (excluding self).
+def cosine_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+    """Top-``TOP_K`` cosine neighbors for each query vector (excluding self).
 
     Output: (query_id, neighbor_id, cos_sim, rank). Queries are broadcast
     (tiny side) into a nested-loop join, so the corpus scan never shuffles.
     """
     base, q = _vectors(emb, query_ids)
-    return _score_topk(base.join(F.broadcast(q), F.col("vid") != F.col("query_id")), k)
+    return _score_topk(base.join(F.broadcast(q), F.col("vid") != F.col("query_id")))
 
 
 def _lattice_matrix(n_planes: int, dim: int):
@@ -148,8 +149,8 @@ def lsh_buckets_udf():
     return buckets
 
 
-def ann_lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
-    """Approximate top-k via multi-table sign-LSH: score only candidates
+def ann_lsh_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+    """Approximate top-``TOP_K`` via multi-table sign-LSH: score only candidates
     that share a bucket with the query in ≥1 of ``LSH_TABLES`` tables
     (expanded by the probes one bit away per table), then exact-rerank
     with the same cosine as the brute-force path.
@@ -195,4 +196,4 @@ def ann_lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
     uniq = cand.groupBy("query_id", "vid").agg(
         F.first("v").alias("v"), F.first("n2").alias("n2")
     )
-    return _score_topk(uniq.join(F.broadcast(qtab), "query_id"), k)
+    return _score_topk(uniq.join(F.broadcast(qtab), "query_id"))

@@ -218,7 +218,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 30 pairs (1.29 and 1.42 s against 1.87 and 2.38 s).
     """
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.jaccard_pairs(docs, threshold=0.5)
+    return dedup.jaccard_pairs(docs)
 
 
 @query(
@@ -323,7 +323,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and 0.32 s without).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    df = similarity.cosine_topk(emb, COSINE_QUERY_IDS, k=3)
+    df = similarity.cosine_topk(emb, COSINE_QUERY_IDS)
     return df.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -361,7 +361,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm_ops.py.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ann_lsh_topk(emb, COSINE_QUERY_IDS, k=3)
+    return similarity.ann_lsh_topk(emb, COSINE_QUERY_IDS)
 
 
 # ---------------------------------------------------------------------------

@@ -1,22 +1,26 @@
 """SparkSession factory.
 
-Local test harness runs ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-config here is chosen to also hold on a real multi-executor cluster at
-~100 TB scale:
+``get_spark`` sets only what changes a plan or a measured number, one
+reason each; everything else is Spark 4.1.2's default, which already
+turns on AQE (partition coalescing, skew-join splitting, join-strategy
+switches at run time) and parquet filter pushdown. ``extra_conf``
+overrides any setting here, the master and shuffle partitions included.
 
-- AQE on (runtime coalescing, skew-join splitting, dynamic join strategy
-  switches) — at 100 TB static shuffle-partition counts are always wrong.
-- shuffle partitions default to cores locally; at cluster scale AQE's
-  coalesce makes the initial number mostly a ceiling. ``extra_conf``
-  overrides any setting here, the master and shuffle partitions included.
-  A one-row-group ``events`` table plans no shuffle at all:
-  ``sources/tables.py`` loads it as one partition, so these settings do
-  not reach the per-tweet requests that read it.
-- Arrow enabled so the few pandas-UDF operators batch through Arrow rather
-  than pickling rows.
+- Master ``local[$SPARK_GRAFT_CPUS]`` (default 32), and as many shuffle
+  partitions as cores instead of Spark's 200: AQE coalesces partitions
+  only after a shuffle has written them, so the initial count is how
+  many blocks every map task writes. A one-row-group ``events`` table
+  plans no shuffle at all: ``sources/tables.py`` loads it as one
+  partition, so this setting does not reach the per-tweet requests that
+  read it.
 - UTC session timezone: the reference stores naive-UTC timestamps and
   re-attaches tzinfo on read (reference data_base.py:141); we normalize at
-  the session level instead.
+  the session level instead, and ``sources/tables.py`` relies on it to
+  cast ``TIMESTAMP_NTZ`` to ``TIMESTAMP`` without moving a value.
+- Driver memory ``$SPARK_GRAFT_DRIVER_MEM`` (default 16g): in local mode
+  every task runs inside the driver JVM, so this heap is all the
+  execution memory there is; Spark's default is 1g.
+- No web UI: a local session needs no Jetty server or port.
 - Generated-code cache sized to the registry's working set
   (``CODEGEN_CACHE_ENTRIES``). Spark's whole-stage codegen compiles each
   generated Java source once with Janino and caches the class in an LRU
@@ -32,6 +36,13 @@ config here is chosen to also hold on a real multi-executor cluster at
   and the cache is JVM-wide, so a vanilla session built elsewhere (such as
   one a caller hands to ``__spark_entry__``) keeps Spark's 100 entries.
 
+Left at Spark's default on purpose: Arrow conversion
+(``spark.sql.execution.arrow.pyspark.enabled`` acts only on ``toPandas``
+and on ``createDataFrame`` from pandas, which nothing here calls; pandas
+UDFs batch through Arrow regardless) and
+``spark.sql.legacy.parquet.nanosAsLong``, which ``sources/tables.py`` sets
+from the parquet footer on whatever session it reads with.
+
 Class-data-sharing archive
 --------------------------
 Most of a cold ``get_spark`` is the driver JVM loading, parsing and
@@ -43,7 +54,10 @@ anything different through it.
 
 - Where: ``ARCHIVE_DIR`` (``.jvm/`` at the repository root, git-ignored),
   one file named by a hash of the path, size and mtime of every
-  ``$SPARK_HOME/jars/*.jar`` and of ``$JAVA_HOME/lib/modules``.
+  ``$SPARK_HOME/jars/*.jar`` and of ``$JAVA_HOME/lib/modules``, and of the
+  path of ``ARCHIVE_DIR/conf``, which the launch puts on the class path.
+  The JVM rejects an archive built for another class path, so a checkout
+  copied or moved with its ``.jvm/`` builds an archive of its own once.
 - When it is built: a start that finds no whole archive under the
   current name removes every archive in ``ARCHIVE_DIR`` and adds
   ``-XX:ArchiveClassesAtExit``, so the JVM writes an archive of every class
@@ -106,29 +120,9 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # events.parquet carries TIMESTAMP(NANOS); read as long (tables.py)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        # Let the planner pick shuffled-hash join where its size bounds hold
-        # (optimization guide §3.1: no sort on either side, faster than
-        # sort-merge when a per-partition build side fits). No local plan
-        # changes at bench SFs (every eligible join already broadcasts) —
-        # this is the cluster-scale default for the fact-fact joins.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        # AQE coalesce target (guide §2.2/§9): post-shuffle partitions in the
-        # hundreds-of-MB range instead of the 64 MB default. Scale-adaptive,
-        # not core-count-derived; at bench SFs every shuffle is below either
-        # threshold so local plans (and the driver's low-core run) are
-        # unaffected.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
@@ -178,6 +172,7 @@ def _archive_env() -> dict[str, str]:
         os.makedirs(empty_conf, exist_ok=True)
     except OSError:
         return {}
+    digest.update(f"{empty_conf}\n".encode())
     if not os.access(ARCHIVE_DIR, os.W_OK):
         return {}
     archive = os.path.join(ARCHIVE_DIR, f"spark-{digest.hexdigest()[:16]}.jsa")

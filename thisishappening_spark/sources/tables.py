@@ -49,10 +49,7 @@ def load_table(
     full pass of the table through one round-robin exchange."""
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     key = f"{path}::fan_out" if fan_out else path
-    try:
-        per_session = _RELATION_CACHE.setdefault(spark, {})
-    except TypeError:  # a SparkSession proxy that cannot be weakly referenced
-        per_session = {}
+    per_session = _RELATION_CACHE.setdefault(spark, {})
     df = per_session.get(key)
     if df is None:
         df = per_session.get(path)
@@ -185,41 +182,27 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def invalidate_relation_cache(
-    spark: SparkSession | None = None, path: str | None = None
-) -> None:
-    """Drop cached relations so the next ``load_table`` re-lists and
-    re-resolves the path. CATALOG-LIKE STALENESS SEMANTICS (documented per
-    ADVICE r21): the relation cache pins each path's file listing and
-    schema for the lifetime of the session, exactly as a catalog table
-    would — data appended, overwritten or deleted at the same path
-    mid-session is invisible (or raises on read) until invalidated. Call
-    this after mutating a table's files in a long-lived session.
+def invalidate_relation_cache(spark: SparkSession, path: str) -> None:
+    """Drop ``spark``'s cached relations under ``path`` so the next
+    ``load_table`` re-lists and re-resolves them. CATALOG-LIKE STALENESS
+    SEMANTICS (documented per ADVICE r21): the relation cache pins each
+    path's file listing and schema for the lifetime of the session, exactly
+    as a catalog table would — data appended, overwritten or deleted at the
+    same path mid-session is invisible (or raises on read) until
+    invalidated. Call this after mutating a table's files in a long-lived
+    session.
 
-    ``spark=None`` clears every session's entries; ``path=None`` clears
-    every path for the given session. ``path`` may name the table file/dir
-    itself or the sf_dir the table was loaded from (both resolve by
-    absolute path: the path itself and everything under it, never a
-    sibling such as ``sf0.10`` for ``sf0.1``). Also refreshes Spark's own
-    per-path file-index cache via ``catalog.refreshByPath`` so the re-read
-    re-lists.
+    ``path`` may name the table file/dir itself or the sf_dir the table was
+    loaded from (both resolve by absolute path: the path itself and
+    everything under it, never a sibling such as ``sf0.10`` for
+    ``sf0.1``). Also refreshes Spark's own per-path file-index cache via
+    ``catalog.refreshByPath`` so the re-read re-lists.
     """
-    sessions = [spark] if spark is not None else list(_RELATION_CACHE.keys())
-    for s in sessions:
-        per_session = _RELATION_CACHE.get(s)
-        if not per_session:
-            continue
-        if path is None:
-            per_session.clear()
-            continue
-        abs_path = os.path.abspath(path)
-        under = os.path.join(abs_path, "")  # a sibling sharing the prefix is not under it
-        for key in list(per_session):
-            table = key.split("::")[0]
-            if table == abs_path or table.startswith(under):
-                del per_session[key]
-        try:
-            s.catalog.refreshByPath(abs_path)
-        except Exception:
-            pass  # a stopped session has nothing to refresh
-
+    per_session = _RELATION_CACHE.get(spark, {})
+    abs_path = os.path.abspath(path)
+    under = os.path.join(abs_path, "")  # a sibling sharing the prefix is not under it
+    for key in list(per_session):
+        table = key.split("::")[0]
+        if table == abs_path or table.startswith(under):
+            del per_session[key]
+    spark.catalog.refreshByPath(abs_path)

@@ -74,8 +74,9 @@ def load_tweets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pushdown note: predicates on derived columns evaluate post-scan —
     Catalyst cannot invert e.g. `-71.2 + (event_id % 400) * 0.001 >= west`
-    into an `event_id` scan predicate. That is fine for this test
-    scaffolding view (sf0.01); the real ingest path stores materialized
-    columns so filters push to the parquet scan directly."""
+    into an `event_id` scan predicate. Nothing stores the derived columns,
+    so a filter on one reads every row of the (column-pruned) events
+    scan; only filters on `events`' own columns reach the parquet
+    reader."""
     ev = load_table(spark, sf_dir, "events")
     return ev.selectExpr(*[f"{expr} AS {name}" for name, expr in TWEET_DERIVATION])

@@ -129,6 +129,20 @@ def test_doc_fingerprint_identical_texts_collide(spark):
     assert fp[4] is None
 
 
+def test_doc_fingerprint_skips_null_text(spark):
+    """A document with NULL text has no fingerprint row, as in the oracle,
+    while an empty text keeps its row with a NULL fingerprint."""
+    from thisishappening_spark.operators.textstats import doc_fingerprint
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, None), (3, "")],
+        "doc_id bigint, text string",
+    )
+    fp = {r["doc_id"]: r["fingerprint"] for r in doc_fingerprint(docs).collect()}
+    assert sorted(fp) == [1, 3]
+    assert fp[1] is not None and fp[3] is None
+
+
 def test_dedup_ops_leave_no_cache_behind(spark, sf_dir):
     """jaccard_pairs / minhash_lsh_pairs rely on exchange reuse, not
     persist; after the call returns, the session-level cache must be empty

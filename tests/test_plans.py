@@ -2,8 +2,8 @@
 stay fixed (no global sort on the unordered recent_tweets path, no
 nested-loop join in the sliding-window count), plus shapes checked on the
 executed (final AQE) plan of registry queries: no shuffle after a
-one-row-group events scan, and the exchanges kept when events has more
-row groups."""
+one-row-group events scan, the exchanges kept when events has more row
+groups, and token ids taken in the row with no dictionary join."""
 
 from __future__ import annotations
 
@@ -15,6 +15,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from thisishappening_spark.functions.geo import BoundingBox
+from thisishappening_spark.operators.dedup import doc_shingles, ranked_dictionary
 from thisishappening_spark.plans.recent_tweets import recent_tweets
 from thisishappening_spark.sources.tables import _scan_row_groups, load_table
 from thisishappening_spark.sources.tweets_view import load_tweets
@@ -72,13 +73,41 @@ def test_ann_dedup_keys_on_ids_not_vectors(spark, sf_dir):
     assert "knownfloatingpointnormalized" not in plan, plan
 
 
-@pytest.mark.parametrize("name", ["q_simhash", "q_minhash_lsh_pairs", "q_doc_fingerprint"])
+def _tokens(docs):
+    return docs.selectExpr("explode(split(text, ' ')) AS k")
+
+
+# The keys each query ranked before its ids became md5 hashes.
+DICTIONARY_KEYS = {
+    "q_simhash": _tokens,
+    "q_minhash_lsh_pairs": lambda docs: doc_shingles(docs).selectExpr("shingle AS k"),
+    "q_doc_fingerprint": _tokens,
+}
+
+
+@pytest.mark.parametrize("name", sorted(DICTIONARY_KEYS))
 def test_dictionary_rank_reuses_bucket_exchange(spark, sf_dir, name):
-    """The bucket offsets come from the same bucket exchange as the
-    per-bucket rank: the final plan reads it back as a ReusedExchange
-    instead of scanning and shingling the corpus a second time."""
-    plan = _final_plan(spark, sf_dir, name)
+    """``ranked_dictionary`` over the token or shingle keys ``name`` once
+    ranked: the bucket offsets come from the same bucket exchange as the
+    per-bucket rank, and the final plan reads it back as a ReusedExchange
+    instead of scanning and splitting the corpus a second time."""
+    keys = DICTIONARY_KEYS[name](load_table(spark, sf_dir, "documents"))
+    plan = final_plan(ranked_dictionary(keys, "k", "kid"))
     assert reused_bucket_exchanges(plan) == 1, plan
+
+
+@pytest.mark.parametrize("name", ["q_simhash", "q_minhash_lsh_pairs", "q_doc_fingerprint"])
+def test_token_ids_are_row_local(spark, sf_dir, name):
+    """Token and shingle ids are hashes taken in the row: one documents
+    scan, no dictionary join and no window; the fingerprint, which needs
+    no aggregate either, has no exchange at all."""
+    plan = _final_plan(spark, sf_dir, name)
+    scans = [line for line in plan.splitlines() if "FileScan parquet" in line]
+    assert len(scans) == 1 and "documents.parquet" in scans[0], plan
+    assert "Join" not in plan, plan
+    assert "Window" not in plan, plan
+    if name == "q_doc_fingerprint":
+        assert "Exchange" not in plan, plan
 
 
 def _shuffles(plan: str) -> list[str]:

@@ -25,12 +25,11 @@ Every operator reads a ``documents``-shaped frame: ``doc_id`` and
 oracles also build.
 
 Token ids: MinHash, SimHash (and textstats.doc_fingerprint) number each
-shingle/token by its rank in the sorted distinct dictionary
-(:func:`ranked_dictionary`), and MinHash permutes ids with fixed
-``(a*id + b) % p`` parameters. Every step is plain integer arithmetic, so
-a SQL oracle (DuckDB) reproduces it bit-for-bit. The rank is two-phase —
-a sort partitioned by key prefix plus an offset table of one row per
-prefix bucket — so no key row crosses a single-partition exchange.
+shingle/token by the first 32 bits of its md5 (:func:`token_id`), one
+expression in the row, and MinHash permutes ids with fixed
+``(a*id + b) % p`` parameters. Every step is plain integer arithmetic on
+a hash DuckDB also computes, so a SQL oracle reproduces it bit-for-bit
+with no dictionary, no second corpus scan and no join.
 
 Reference parity note: the reference app has no dedup; this module covers
 the brief's training-pipeline surface (SURVEY.md §2 extension).
@@ -43,8 +42,8 @@ from pyspark.sql import functions as F
 
 # Modulus and fixed (a, b) parameters for the MinHash permutation family
 # h_i(x) = (a_i * x + b_i) % MINHASH_P. Any fixed odd multipliers work; these
-# are arbitrary primes well below 2^31 so a*id stays far from BIGINT overflow
-# (ids are dictionary ranks, far below 2^31).
+# are arbitrary primes below 2^30, and ids are below 2^32, so a*id + b stays
+# below 2^62 (no BIGINT overflow in either engine).
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 MINHASH_PARAMS: list[tuple[int, int]] = [
     (1_000_000_007, 12_345),
@@ -102,37 +101,28 @@ def exact_dedup_groups(docs: DataFrame) -> DataFrame:
 
 
 def doc_shingles(docs: DataFrame) -> DataFrame:
-    """Distinct (doc_id, shingle) pairs: word trigrams over a whitespace
-    split.
+    """Distinct (doc_id, shingle) pairs: word trigrams over a split on
+    ``' '``, joined by ``' '`` (a double space yields an empty token).
 
-    Stays JVM-side: split + transform(sequence) + explode, no Python UDF.
-    The token array is materialized as its own projection first so the
-    element lookups inside the transform lambda read an attribute — with
-    the split inlined, interpreted higher-order eval re-splits the text
-    once per shingle position (~n_tokens× redundant work per row).
-
-    Each shingle is built as ``concat_ws(" ", t[i], t[i+1], t[i+2])``
-    rather than ``array_join(slice(toks, i, 3))``: identical strings
-    (verified element-wise r21), but no per-position array allocation
-    inside the interpreted ``transform`` lambda (higher-order functions
-    are CodegenFallback, so every saved allocation is an interpreted-path
-    saving; guide §4.1 "prefer built-ins", applied inside the lambda).
-
-    The whole shingle expression is ONE parsed SQL string: building it
-    with nested Column operators costs a Py4J round trip per operator
-    (profiled r21: the Column form of this module spent >60% of query
-    *construction* inside py4j send_command), and the bench pays
-    construction on every timed run. Same expression tree either way.
+    One codegen'd ``regexp_extract_all``: at every token start (the text
+    start or just after a space) a lookahead captures the next three
+    tokens, and a start with fewer than three tokens left does not match.
+    A ``transform(sequence(...))`` lambda over the split gives the same
+    rows but is interpreted (higher-order functions are CodegenFallback).
     """
-    base = docs.select("doc_id", F.split(F.col("text"), " ").alias("__toks"))
-    n = SHINGLE_N
-    parts = ", ".join(f"element_at(__toks, i + {j})" for j in range(n))
-    grams = (
-        f"CASE WHEN size(__toks) < {n} THEN CAST(array() AS ARRAY<STRING>) "
-        f"ELSE transform(sequence(1, size(__toks) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts})) END"
+    gram = " ".join(["[^ ]*"] * SHINGLE_N)
+    return docs.selectExpr(
+        "doc_id",
+        f"explode(array_distinct(regexp_extract_all(text, '(?<=^| )(?=({gram}))', 1)))"
+        " AS shingle",
     )
-    return base.select("doc_id", F.expr(f"explode(array_distinct({grams})) AS shingle"))
+
+
+def token_id(col: str) -> str:
+    """SQL for the id of the string ``col``: the first 32 bits of its md5
+    as a BIGINT in [0, 2^32), NULL for NULL. DuckDB computes the same
+    value as ``('0x' || substring(md5(x), 1, 8))::BIGINT``."""
+    return f"CAST(conv(substring(md5({col}), 1, 8), 16, 10) AS BIGINT)"
 
 
 # Bucket width (in characters) for the two-phase dictionary rank. A fixed-
@@ -145,8 +135,7 @@ def doc_shingles(docs: DataFrame) -> DataFrame:
 # 3.4 % of the 27,213 distinct sf0.1 shingles (60 buckets) and 1 of the 31
 # sf0.1 tokens, but 7.5 % of ~9·10⁵ distinct word-trigram shingles over a
 # Zipf(s=1) vocabulary, because every shingle that starts with the most
-# frequent word shares its prefix. Splitting hot buckets is open
-# (ROADMAP item 6).
+# frequent word shares its prefix.
 DICT_BUCKET_CHARS = 4
 
 
@@ -154,6 +143,11 @@ def ranked_dictionary(keys: DataFrame, key_col: str, id_col: str) -> DataFrame:
     """(key, id) with id = 1-based rank of the key among the distinct keys
     in sorted order — the same value ``row_number() OVER (ORDER BY key)``
     assigns, WITHOUT a single-partition sort of the dictionary.
+
+    No package code calls it: token ids are :func:`token_id` hashes. It is
+    kept, with ``DICT_BUCKET_CHARS``, for the tests in
+    tests/test_ranked_dictionary.py, as ``load_table(fan_out)`` is for its
+    own.
 
     A row_number over a Window with no PARTITION BY would be a
     single-partition Exchange + Sort of every distinct key. Instead, two
@@ -199,12 +193,11 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
 
     One aggregate over the exploded shingles computes all K mins at once
     (map-side partial min per component), so the shuffle carries K ints per
-    document regardless of document size. Shingle ids are dictionary
-    ranks (:func:`ranked_dictionary`), which the SQL oracle reproduces.
+    document regardless of document size. Shingle ids are :func:`token_id`
+    hashes taken in the shingle projection, which the SQL oracle
+    reproduces.
     """
-    shingles = doc_shingles(docs)
-    sids = ranked_dictionary(shingles, "shingle", "sid")
-    ids = shingles.join(sids, "shingle").select("doc_id", "sid")
+    ids = doc_shingles(docs).selectExpr("doc_id", f"{token_id('shingle')} AS sid")
     # One parsed string per component instead of ~8 Py4J round trips each
     # (same expression: CAST(a AS BIGINT) * sid + b, then % p).
     aggs = [
@@ -357,17 +350,19 @@ def simhash(docs: DataFrame) -> DataFrame:
     """Per-document SimHash fingerprint (SIMHASH_BITS bits) over unigram
     tokens weighted by occurrence count.
 
-    Bit j of token t's pseudo-hash is parity of ((a_j·id(t)+b_j) mod p);
+    Bit j of token t's pseudo-hash is parity of ((a_j·id(t)+b_j) mod p),
+    with id(t) the :func:`token_id` hash taken in the token projection;
     the fingerprint sets bit j when the weighted majority of token bits is
     1. One groupBy(doc) computes all bit-majorities at once. Near-dup
     candidates then share a fingerprint nibble at the same position
     (pigeonhole over Hamming distance ≤ 3 for 16 bits / 4 nibbles).
     """
-    toks = docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
-    ids = toks.join(ranked_dictionary(toks, "tok", "tid"), "tok").select("doc_id", "tid")
+    ids = docs.selectExpr("doc_id", "explode(split(text, ' ')) AS tok").selectExpr(
+        "doc_id", f"{token_id('tok')} AS tid"
+    )
     params = MINHASH_PARAMS[:SIMHASH_BITS]
-    # Parsed-string form of the same expressions (see doc_shingles note):
-    # the Column form of these 16 majorities + the fingerprint fold was
+    # Parsed-string form of the same expressions: the Column form of
+    # these 16 majorities + the fingerprint fold was
     # ~2800 Py4J round trips per construction.
     bit_sums = [
         F.expr(

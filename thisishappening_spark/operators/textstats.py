@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from thisishappening_spark.operators.dedup import ranked_dictionary
+from thisishappening_spark.operators.dedup import token_id
 from thisishappening_spark.sqlexpr import in_list, sql_str
 
 # Minimal English function-word list for the stopword-ratio heuristic.
@@ -138,30 +138,26 @@ def lang_id(docs: DataFrame) -> DataFrame:
 
 def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprint: min over token-trigram window
-    hashes h = (tid1·31² + tid2·31 + tid3) mod p.
+    hashes h = (tid1·31² + tid2·31 + tid3) mod p, for every document whose
+    text is not NULL.
 
-    tid is the rank of the token in the sorted distinct-token dictionary
-    (:func:`~thisishappening_spark.operators.dedup.ranked_dictionary`, the
-    same ids dedup.simhash uses): engine-portable integer arithmetic the
-    DuckDB oracle reproduces bit-for-bit.
+    tid is the :func:`~thisishappening_spark.operators.dedup.token_id` hash
+    of the token (the ids dedup.simhash uses): engine-portable integer
+    arithmetic the DuckDB oracle reproduces bit-for-bit. The ids and the
+    window hashes are computed in the row, so the plan has no shuffle.
 
     The min-of-window-hashes is the 1-fingerprint special case of
     winnowing.
     """
-    toks = docs.select("doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok"))
-    ids = toks.join(ranked_dictionary(toks, "tok", "tid"), "tok").select(
-        "doc_id", "pos", "tid"
-    )
-    seq = ids.groupBy("doc_id").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(pos, tid))), s -> s.tid)"
-            " AS tids"
-        )
+    # tids is its own projection, so the window lambda reads an attribute
+    # instead of re-hashing the tokens once per window position.
+    seq = docs.filter("text IS NOT NULL").selectExpr(
+        "doc_id", f"transform(split(text, ' '), t -> {token_id('t')}) AS tids"
     )
     w = (
         "CASE WHEN size(tids) < 3 THEN CAST(array() AS ARRAY<BIGINT>) "
         "ELSE transform(sequence(1, size(tids) - 2), "
-        "i -> (CAST(element_at(tids, i) AS BIGINT) * 961 "
+        "i -> (element_at(tids, i) * 961 "
         f"+ element_at(tids, i + 1) * 31 + element_at(tids, i + 2)) % {FP_P}) END"
     )
     return seq.select(

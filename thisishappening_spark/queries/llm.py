@@ -4,11 +4,12 @@ SimHash), similarity search (brute-force cosine top-k + LSH ANN), and text
 analysis (stats, quality, language ID, fingerprints).
 
 Every oracle reproduces the Spark arithmetic exactly (see registry.py):
-integer dictionary IDs + fixed ``(a·x+b) mod p`` permutations make the
-hash family engine-portable, and the ANN hyperplanes come from one integer
-formula; ratios divide BIGINTs; dot products and norms fold each row's
-array left to right in IEEE double, in the same order as Spark's
-``aggregate``, so both engines return the same bits.
+md5-derived integer token ids (``dedup.token_id``) + fixed ``(a·x+b) mod
+p`` permutations make the hash family engine-portable, and the ANN
+hyperplanes come from one integer formula; ratios divide BIGINTs; dot
+products and norms fold each row's array left to right in IEEE double, in
+the same order as Spark's ``aggregate``, so both engines return the same
+bits.
 
 The operators live in ``operators/dedup.py`` / ``operators/similarity.py``
 / ``operators/textstats.py`` with the 100 TB shuffle story per docstring.
@@ -58,13 +59,11 @@ sh AS (
 )
 """
 
-_SHINGLE_DICT_CTE = """
-dict AS (
-  SELECT shingle, row_number() OVER (ORDER BY shingle) AS sid
-  FROM (SELECT DISTINCT shingle FROM sh)
-),
-ids AS (SELECT doc_id, sid FROM sh JOIN dict USING (shingle))
-"""
+
+def _token_id(x: str) -> str:
+    """DuckDB form of ``dedup.token_id``: the first 32 bits of md5(x)."""
+    return f"('0x' || substring(md5({x}), 1, 8))::BIGINT"
+
 
 _MH_MINS = ",\n         ".join(
     f"MIN(({a} * sid + {b}) % {MINHASH_P}) AS mh{i}"
@@ -225,7 +224,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_minhash_lsh_pairs",
     f"""
     WITH {_SHINGLES_CTE.strip()},
-    {_SHINGLE_DICT_CTE.strip()},
+    ids AS (SELECT doc_id, {_token_id("shingle")} AS sid FROM sh),
     mh AS (
       SELECT doc_id,
          {_MH_MINS}
@@ -251,11 +250,8 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature-estimated Jaccard.
 
     Scale: candidates come from grouping on (band, band_key) — never an
-    all-pairs comparison.
-
-    No fan-out: the plan traverses the shingle subtree twice (ids and
-    dictionary sides), so a round-robin exchange ahead of it is paid twice
-    (interleaved A/B medians 8.67 s with it, 3.57 s without).
+    all-pairs comparison. Shingle ids are hashes taken in the shingle
+    projection, so the documents are scanned and shingled once.
     """
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(docs)
@@ -267,11 +263,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH toks AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
     ),
-    dict AS (
-      SELECT tok, row_number() OVER (ORDER BY tok) AS tid
-      FROM (SELECT DISTINCT tok FROM toks)
-    ),
-    ids AS (SELECT doc_id, tid FROM toks JOIN dict USING (tok)),
+    ids AS (SELECT doc_id, {_token_id("tok")} AS tid FROM toks),
     vs AS (
       SELECT doc_id,
          {_SIMHASH_SUMS}
@@ -483,12 +475,7 @@ def q_lang_id_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks AS (
       SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS pos FROM toks0
     ),
-    tt AS (SELECT doc_id, pos, t[pos] AS tok FROM toks),
-    dict AS (
-      SELECT tok, row_number() OVER (ORDER BY tok) AS tid
-      FROM (SELECT DISTINCT tok FROM tt)
-    ),
-    ids AS (SELECT doc_id, pos, tid FROM tt JOIN dict USING (tok)),
+    ids AS (SELECT doc_id, pos, {_token_id("t[pos]")} AS tid FROM toks),
     seqs AS (SELECT doc_id, list(tid ORDER BY pos) AS tids FROM ids GROUP BY doc_id)
     SELECT doc_id,
            CAST(list_min(list_transform(
@@ -502,7 +489,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash document fingerprint (min over token-trigram window
     hashes — the 1-fingerprint special case of winnowing).
 
-    Scale: per-doc array math after one explode/collect round-trip.
+    Scale: per-doc array math in the scan's projection; no shuffle.
     """
     docs = load_table(spark, sf_dir, "documents")
     return textstats.doc_fingerprint(docs)

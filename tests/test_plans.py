@@ -3,7 +3,8 @@ stay fixed (no global sort on the unordered recent_tweets path, no
 nested-loop join in the sliding-window count), plus shapes checked on the
 executed (final AQE) plan of registry queries: no shuffle after a
 one-row-group events scan, the exchanges kept when events has more row
-groups, and token ids taken in the row with no dictionary join."""
+groups, token ids taken in the row with no dictionary join, and the
+status projection folded into a local scan that runs no job."""
 
 from __future__ import annotations
 
@@ -71,6 +72,26 @@ def test_ann_dedup_keys_on_ids_not_vectors(spark, sf_dir):
     is normalized per collision row as a grouping key."""
     plan = _final_plan(spark, sf_dir, "q_ann_lsh_topk")
     assert "knownfloatingpointnormalized" not in plan, plan
+
+
+def test_status_projection_is_folded_into_a_local_scan(spark, sf_dir):
+    """Catalyst evaluates the VALUES relation and the ``from_json``
+    projection above it while planning: the executed plan is one
+    ``LocalTableScan``, and ``collect()`` returns its rows without a job."""
+    from thisishappening_spark.queries import REGISTRY
+    from thisishappening_spark.queries.tweets import RAW_STATUSES
+
+    df = REGISTRY["q_status_projection"].fn(spark, sf_dir)
+    plan = executed_plan(df)
+    assert plan.startswith("LocalTableScan") and "\n" not in plan.strip(), plan
+    sc = spark.sparkContext
+    group = "test-status-projection-jobs"
+    sc.setJobGroup(group, "q_status_projection collect")
+    try:
+        assert len(df.collect()) == len(RAW_STATUSES)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def _tokens(docs):

@@ -50,7 +50,6 @@ STATUS_SCHEMA = T.StructType(
         T.StructField("is_quote_status", T.BooleanType()),
         T.StructField("in_reply_to_status_id_str", T.StringType()),
         T.StructField("possibly_sensitive", T.BooleanType()),
-        T.StructField("truncated", T.BooleanType()),
         T.StructField(
             "user",
             T.StructType(
@@ -177,5 +176,4 @@ def project_status(df: DataFrame) -> DataFrame:
         "s.quoted_status.text AS quoted_text",
         "s.user.friends_count AS friends_count",
         "s.user.followers_count AS followers_count",
-        "s.truncated AS truncated",
     )

@@ -105,6 +105,8 @@ def cosine_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
 
     Output: (query_id, neighbor_id, cos_sim, rank). Queries are broadcast
     (tiny side) into a nested-loop join, so the corpus scan never shuffles.
+    The hint is for corpora at scale: without CBO Spark sizes the filtered
+    query side as the whole corpus, above the broadcast threshold.
     """
     base, q = _vectors(emb, query_ids)
     return _score_topk(base.join(F.broadcast(q), F.col("vid") != F.col("query_id")))
@@ -166,6 +168,8 @@ def ann_lsh_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
     are genuinely close (p → 1), the same index is both high-recall and
     selective. The pytest harness measures recall against
     :func:`cosine_topk`.
+
+    Both joins broadcast the query side by hint, as :func:`cosine_topk`.
 
     Candidates are deduped on (query_id, vid) BEFORE the exact rerank, so a
     pair that collides in m of the probed buckets is scored once, not m

@@ -1,9 +1,9 @@
 """Text-analysis operators over the ``documents`` table: token counting,
 quality scoring, heuristic language ID, and rolling-hash fingerprints.
 
-All hot-path logic is column expressions (split / filter / transform /
-aggregate) inside whole-stage codegen — no Python UDFs. Ratios are exact
-divisions of BIGINT counts, so differential oracles need no quantization.
+All logic is built-in column expressions (split / size / filter /
+transform) — no Python UDFs. Ratios are exact divisions of integer
+counts, so differential oracles need no quantization.
 
 These cover the training-pipeline text-analysis surface of the brief
 (language-ID heuristic, quality scoring, token counting, document
@@ -72,14 +72,13 @@ def doc_quality(docs: DataFrame) -> DataFrame:
 
     Metrics follow the usual corpus-filter recipe: token count bounds,
     mean token length bounds, stopword-ratio ceiling. One projection over
-    the scan; no shuffle.
+    the scan; no shuffle. The ``n_tok - 1`` single-space separators are
+    the only characters outside tokens, so the token lengths sum to
+    ``length(text) - n_tok + 1``.
     """
     t = "split(text, ' ')"
     n_tok = f"size({t})"
-    mean_len = (
-        f"CAST(aggregate({t}, CAST(0 AS BIGINT), (acc, x) -> acc + length(x)) "
-        f"AS DOUBLE) / {n_tok}"
-    )
+    mean_len = f"CAST(length(text) - {n_tok} + 1 AS DOUBLE) / {n_tok}"
     sw = stopword_ratio(t, EN_STOPWORDS)
     passed = (
         f"{n_tok} >= 10 AND {n_tok} <= 400 AND ({mean_len}) >= 2.0D "

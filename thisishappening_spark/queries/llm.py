@@ -314,9 +314,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.36 s without) and saved no wall time (0.41 and 0.34 s with it, 0.40
     and 0.32 s without).
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    df = similarity.cosine_topk(emb, COSINE_QUERY_IDS)
-    return df.withColumn("rank", F.col("rank").cast("int"))
+    return similarity.cosine_topk(load_table(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS)
 
 
 @query(

@@ -138,9 +138,9 @@ def q03_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q05_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way join with broadcast dims (SURVEY §2.3).
+    """TPC-H Q5 shape: 6-way join (SURVEY §2.3).
 
-    Scale notes: region/nation/supplier are broadcast (F.broadcast) so the
+    Scale notes: Spark broadcasts region/nation/supplier by size, so the
     only shuffle joins are the fact-fact ones; final groupBy key space is
     ≤|nation| so the agg shuffle is trivial.
     """
@@ -150,9 +150,9 @@ def q05_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'"
     )
     li = load_table(spark, sf_dir, "lineitem")
-    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
-    n = F.broadcast(load_table(spark, sf_dir, "nation"))
-    r = F.broadcast(load_table(spark, sf_dir, "region").filter("r_name = 'ASIA'"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter("r_name = 'ASIA'")
     return (
         c.join(o, F.expr("c_custkey = o_custkey"))
         .join(li, F.expr("l_orderkey = o_orderkey"))
@@ -449,8 +449,8 @@ def q_collect_sorted_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter("event_type = 'signup'")
     return ev.groupBy("user_id").agg(
         F.expr(
-            "concat_ws(',', transform(sort_array(collect_list(event_id), false), "
-            "x -> CAST(x AS STRING))) AS ids"
+            "concat_ws(',', CAST(sort_array(collect_list(event_id), false) "
+            "AS ARRAY<STRING>)) AS ids"
         )
     )
 
@@ -564,12 +564,14 @@ def q_json_props_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_retention_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 delete-older-than retention predicate (reference
-    data_base.py:430-462) — the would-be-deleted set, as partition-prunable
-    timestamp comparison against a scalar subquery."""
+    data_base.py:430-462) — the would-be-deleted set. The cutoff is a cross
+    join with a one-row aggregate: a ``.scalar()`` value compiles into the
+    generated Java like a literal, so every new ``max(ts)`` would compile
+    again, and ``max(ts) OVER ()`` puts every row in one partition."""
     ev = load_table(spark, sf_dir, "events")
     cutoff = ev.agg((F.max("ts") - F.expr("INTERVAL 7 DAYS")).alias("cutoff"))
     return (
-        ev.join(F.broadcast(cutoff))
+        ev.join(cutoff)
         .filter(F.col("ts") < F.col("cutoff"))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_expired"))

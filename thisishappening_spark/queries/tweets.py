@@ -412,13 +412,12 @@ def q_status_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     portably oracle-expressible)."""
     from thisishappening_spark.operators.ingest import project_status
 
-    # JVM-side literal relation: a Python-side createDataFrame local
-    # relation costs a Py4J round-trip + pickle serialization per run
-    # (measured 4.4 s round 2); an inline VALUES plan is parsed and folded
-    # entirely JVM-side. coalesce(1) keeps the no-op write single-task.
+    # An inline VALUES relation is parsed JVM-side, with no Python-side
+    # rows to pickle. Catalyst folds it and the projections above it into
+    # one LocalTableScan while planning, so collect() runs no Spark job.
     values_sql = ", ".join("('" + s.replace("'", "''") + "')" for s in RAW_STATUSES)
     raw = spark.sql(f"SELECT raw FROM VALUES {values_sql} AS t(raw)")
-    return project_status(raw).coalesce(1).select(
+    return project_status(raw).select(
         "status_id_str",
         "user_screen_name",
         "user_id_str",

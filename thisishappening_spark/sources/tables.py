@@ -127,14 +127,14 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     timestamp[us] in others, so handle every dtype the reader can surface:
 
     - TIMESTAMP(NANOS): Spark's reader rejects it (PARQUET_TYPE_ILLEGAL)
-      unless nanos are read as long; floor-truncate to a microsecond
-      timestamp (the same truncation DuckDB applies casting TIMESTAMP_NS
-      to TIMESTAMP).
-    - timestamp[us] without timezone: Spark reads TIMESTAMP_NTZ. The
-      session timezone is pinned UTC (session.py), so casting to TIMESTAMP
-      is value-preserving and keeps every downstream `unix_micros`/tz
-      expression valid.
-    - plain TIMESTAMP: used as-is.
+      unless nanos are read as long; floor-truncate the BIGINT to a
+      microsecond timestamp (the same truncation DuckDB applies casting
+      TIMESTAMP_NS to TIMESTAMP).
+    - anything else is cast to TIMESTAMP. timestamp[us] without timezone
+      reads as TIMESTAMP_NTZ; the session timezone is pinned UTC
+      (session.py), so the cast is value-preserving and keeps every
+      downstream `unix_micros`/tz expression valid. On a TIMESTAMP column
+      the cast is a no-op that Catalyst removes.
 
     `ts_ns` keeps nanosecond resolution for deterministic orderings in the
     bigint branch; otherwise it is microsecond-derived (sub-microsecond
@@ -170,16 +170,12 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     if _scan_row_groups(path, 2) < 2:
         df = df.coalesce(1)
-    ts_dtype = dict(df.dtypes).get("ts")
-    if ts_dtype == "timestamp_ntz":
-        # Session tz is pinned UTC, so NTZ→TIMESTAMP is value-preserving.
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        ts_dtype = "timestamp"
-    if ts_dtype != "bigint":  # reader surfaced a (possibly cast) timestamp
-        return df.withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000))
-    return df.withColumn("ts_ns", F.col("ts")).withColumn(
-        "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-    )
+    if dict(df.dtypes).get("ts") == "bigint":
+        return df.withColumn("ts_ns", F.col("ts")).withColumn(
+            "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
+        )
+    df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df.withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000))
 
 
 def invalidate_relation_cache(spark: SparkSession, path: str) -> None:

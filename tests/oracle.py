@@ -66,11 +66,13 @@ def compare(spark, sf_dir: str, name: str, rel_tol: float = 1e-9) -> None:
     from thisishappening_spark.queries import REGISTRY
 
     spec = REGISTRY[name]
-    sdf = spec.fn(spark, sf_dir)
-    spark_rows = [r.asDict() for r in sdf.collect()]
-
     con = duckdb_conn(sf_dir)
-    cur = con.sql(spec.oracle)
+    assert_same_rows(name, spec.fn(spark, sf_dir), con.sql(spec.oracle), rel_tol)
+
+
+def assert_same_rows(name: str, sdf, cur, rel_tol: float = 1e-9) -> None:
+    """Compare a Spark DataFrame's rows with a DuckDB relation's."""
+    spark_rows = [r.asDict() for r in sdf.collect()]
     cols = [c.lower() for c in cur.columns]
     duck_rows = [dict(zip(cols, row)) for row in cur.fetchall()]
 

@@ -105,3 +105,26 @@ def test_body_precedence(spark):
     df = spark.createDataFrame([(c,) for c, _ in cases], "raw string")
     rows = project_status(df).collect()
     assert [r.tweet_body for r in rows] == [want for _, want in cases]
+
+
+def test_status_projection_reads_an_apostrophe_like_its_oracle(spark):
+    """q_status_projection and its oracle read the same rendering of the
+    raw statuses, so a status holding ``'`` parses alike on both engines."""
+    import duckdb
+
+    from thisishappening_spark.queries.tweets import (
+        RAW_STATUSES,
+        STATUS_PROJECTION_SQL,
+        project_statuses,
+        values_sql,
+    )
+
+    from tests.oracle import assert_same_rows
+
+    statuses = RAW_STATUSES + [
+        _status(id_str="5002", text="it's O'Brien's '' park", user={"screen_name": "o'hara"})
+    ]
+    got = project_statuses(spark, statuses)
+    want = duckdb.sql(STATUS_PROJECTION_SQL.format(values=values_sql(statuses)))
+    assert_same_rows("q_status_projection", got, want)
+    assert got.filter("status_id_str = '5002'").first()["tweet_body"] == "it's O'Brien's '' park"

@@ -189,6 +189,40 @@ def test_hyperplane_buckets_diverse(spark, sf_dir):
     )
 
 
+def test_bucket_udf_matches_oracle_buckets(spark, sf_dir):
+    """The bucket UDF gives every (vec_id, tbl) the bucket that
+    q_ann_lsh_topk's DuckDB oracle computes, so the oracle checks the
+    index itself and not only the rows it leads to. Prints the smallest
+    |projection|: the margin by which no sign bit can differ between the
+    engines' summation orders."""
+    from thisishappening_spark.operators.similarity import (
+        LSH_TABLES,
+        PLANES_PER_TABLE,
+        as_double_vec,
+        lsh_buckets_udf,
+    )
+    from thisishappening_spark.queries.llm import _ANN_BUCKETS, _HP_DOT
+    from thisishappening_spark.sources.tables import load_table
+
+    from tests.oracle import duckdb_conn
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = emb.select("vec_id", lsh_buckets_udf()(as_double_vec("embedding")).alias("b"))
+    got = {(r["vec_id"], t): b for r in rows.collect() for t, b in enumerate(r["b"])}
+    con = duckdb_conn(sf_dir)
+    want = {
+        (v, t): b
+        for v, t, b in con.sql(f"WITH {_ANN_BUCKETS} SELECT vec_id, tbl, bucket FROM buckets").fetchall()
+    }
+    assert len(want) == LSH_TABLES * emb.count()
+    assert got == want
+    (smallest,) = con.sql(
+        f"SELECT min(list_min(list_transform(range(0, {PLANES_PER_TABLE}), j -> abs({_HP_DOT}))))"
+        f" FROM embeddings, (SELECT unnest(range(0, {LSH_TABLES})) AS tbl)"
+    ).fetchone()
+    print(f"smallest |projection| on {sf_dir}: {smallest:.3e}")
+
+
 def test_ann_rows_shape(spark, sf_dir):
     """Pin q_ann_lsh_topk's column order, which the oracle comparison
     (keyed by column name) does not check."""

@@ -41,14 +41,14 @@ def test_recent_tweets_unordered_has_no_sort(spark, sf_dir):
         timestamp=dt.datetime(2024, 1, 10, 12),
         hours=48,
         bounding_box=BBOX,
-        ordered=False,
     )
     assert "Sort" not in executed_plan(df)
 
 
 def test_recent_tweets_ordered_keeps_o1_sort(spark, sf_dir):
-    tw = load_tweets(spark, sf_dir)
-    df = recent_tweets(tw, timestamp=dt.datetime(2024, 1, 10, 12), hours=48)
+    from thisishappening_spark.queries import REGISTRY
+
+    df = REGISTRY["q_recent_tweets_stack"].fn(spark, sf_dir)
     assert "Sort" in executed_plan(df)
 
 

@@ -3,9 +3,10 @@ builds once (session.py, "Class-data-sharing archive").
 
 Each JVM here runs in its own Python process whose ``session.ARCHIVE_DIR``
 points at a temporary directory, so the checkout's archive is never
-touched. The module starts four JVMs: one that writes an archive, one that
-maps it, one over a truncated copy and one with another class path. The
-other tests stop at the launch decision and start none.
+touched. The module starts three JVMs: one that writes an archive over a
+truncated one planted under its name, one that maps it and one with
+another class path. The other tests stop at the launch decision and start
+none.
 """
 
 from __future__ import annotations
@@ -56,18 +57,33 @@ def identity(path: str) -> tuple[int, int]:
     return st.st_ino, st.st_mtime_ns
 
 
+def plant_truncated(path) -> None:
+    """Write a dynamic-archive header whose first region ends past the end
+    of the file, as in an archive cut short."""
+    header = bytearray(session._HEADER_BYTES)
+    struct.pack_into("<I", header, 0, session._DYNAMIC_MAGIC)
+    struct.pack_into("<Q8xQ", header, 16 + 24, session._HEADER_BYTES, 1 << 20)
+    with open(path, "wb") as f:
+        f.write(header + bytes(1 << 10))
+
+
 @pytest.fixture(scope="module")
 def built(tmp_path_factory):
-    """An archive directory after the start that wrote its archive, and
-    that start's process."""
+    """An archive directory after the start that wrote its archive, that
+    start's process, the truncated archive planted under the name the
+    start chose, and whether that archive read as whole before the start."""
     directory = tmp_path_factory.mktemp("jvm")
-    return str(directory), start(directory)
+    with pytest.MonkeyPatch.context() as mp:
+        planted = chosen_archive(mp, directory)
+    plant_truncated(planted)
+    planted_whole = session._complete(planted)
+    return str(directory), start(directory), planted, planted_whole
 
 
 def test_building_start_keeps_jvm_logs_off_stdout(built):
     """The JVM that writes the archive logs hundreds of CDS warnings as it
     exits; the caller's stdout must hold only what the script printed."""
-    directory, proc = built
+    directory, proc, *_ = built
     assert proc.stdout == "10\n"
     assert "[warning][cds]" in proc.stderr
     assert session._complete(archive_in(directory))
@@ -77,7 +93,7 @@ def test_later_start_maps_the_archive(built, tmp_path):
     """A start after the building one loads Spark's classes from the
     archive, also with a caller's own extraJavaOptions, and writes no new
     archive."""
-    directory, _ = built
+    directory, *_ = built
     archive = archive_in(directory)
     before = identity(archive)
     log = tmp_path / "classes.log"
@@ -89,23 +105,23 @@ def test_later_start_maps_the_archive(built, tmp_path):
     assert identity(archive) == before
 
 
-def test_truncated_archive_is_rebuilt(built, tmp_path, monkeypatch):
+def test_truncated_archive_is_rebuilt(built):
     """JDK 17 maps a truncated dynamic archive and dies of SIGBUS, so
-    get_spark must not hand one to the JVM: it builds a new one instead."""
-    archive = archive_in(built[0])
-    truncated = chosen_archive(monkeypatch, tmp_path)
-    with open(archive, "rb") as f, open(truncated, "wb") as out:
-        out.write(f.read(os.path.getsize(archive) // 2))
-    assert not session._complete(str(truncated))
-    assert start(tmp_path).stdout == "10\n"
-    assert session._complete(str(truncated))
+    get_spark must not hand one to the JVM: it builds a new one instead.
+    The module's building start ran over the truncated archive planted
+    under its name."""
+    directory, proc, planted, planted_whole = built
+    assert not planted_whole
+    assert proc.stdout == "10\n"
+    assert archive_in(directory) == planted
+    assert session._complete(planted)
 
 
 def test_archive_for_another_class_path_falls_back(built, tmp_path):
     """A class path the archive was not built for makes the JVM reject it
     and start normally (-Xshare:auto), with its one warning on stderr; the
     archive is left as it is."""
-    directory, _ = built
+    directory, *_ = built
     archive = archive_in(directory)
     before = identity(archive)
     jar = tmp_path / "extra.jar"

@@ -142,3 +142,21 @@ def test_invalidate_relation_cache_keeps_sibling_sharing_the_prefix(spark, sf_di
     assert load_table(spark, str(tmp_path / "sf0.10"), "documents") is sibling, (
         "invalidating sf0.1 dropped the cached sf0.10 relation"
     )
+
+
+def test_invalidate_relation_cache_keeps_directory_named_with_separator(spark, sf_dir, tmp_path):
+    """A directory whose name extends the invalidated one by ``::`` (sf and
+    sf::x) is a sibling, not the same table: its relation stays cached."""
+    from thisishappening_spark.sources.tables import invalidate_relation_cache
+
+    base = load_table(spark, sf_dir, "documents")
+    for d in ("sf", "sf::x"):
+        base.limit(3).write.mode("overwrite").parquet(str(tmp_path / d / "documents.parquet"))
+    target = load_table(spark, str(tmp_path / "sf"), "documents")
+    sibling = load_table(spark, str(tmp_path / "sf::x"), "documents")
+
+    invalidate_relation_cache(spark, str(tmp_path / "sf"))
+    assert load_table(spark, str(tmp_path / "sf"), "documents") is not target
+    assert load_table(spark, str(tmp_path / "sf::x"), "documents") is sibling, (
+        "invalidating sf dropped the cached sf::x relation"
+    )

@@ -23,9 +23,8 @@ class BoundingBox:
 
 def inbounds_closed(lon: str, lat: str, bbox: BoundingBox) -> str:
     """P1: closed-interval bbox containment (reference data_utils.py:43-46).
-    Takes column names / returns a SQL expression string (r21 convention,
-    see sqlexpr.py); ``flit`` keeps the bounds typed DOUBLE exactly like
-    the former ``F.lit(float)``."""
+    Takes column names and returns a SQL expression string (sqlexpr.py);
+    ``flit`` types the bounds DOUBLE."""
     from thisishappening_spark.sqlexpr import flit
 
     return (
@@ -53,10 +52,8 @@ def polygon_ring_centroid(ring: str) -> tuple[str, str]:
     closing vertex, exactly like the reference's `np.mean` over the raw ring
     (reference tweet_utils.py:107-121).
 
-    Takes/returns SQL expression strings (not Columns) so the ingest
-    projection can compose the whole 23-field select as one parsed string —
-    the Column-operator form cost ~40 Py4J round trips per call, paid on
-    every bench-timed query construction (r21)."""
+    Takes and returns SQL expression strings (sqlexpr.py), so the ingest
+    projection composes its whole select as one parsed string."""
 
     def mean(idx: int) -> str:
         return (

@@ -28,9 +28,8 @@ from thisishappening_spark.sqlexpr import flit, ident, sql_str
 
 
 def compute_weight(weight: str, x: str, factor: float | None) -> str:
-    """F16: w / exp(x·factor) (reference data_utils.py:86-88). SQL-string
-    form (r21 convention, sqlexpr.py — the Column build of the weight
-    chain cost ~400 Py4J round trips per construction)."""
+    """F16: w / exp(x·factor) (reference data_utils.py:86-88), as a SQL
+    string (sqlexpr.py)."""
     return f"({weight}) / exp(({x}) * {flit(factor or 0.0)})"
 
 

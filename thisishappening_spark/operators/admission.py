@@ -77,10 +77,7 @@ def _ignore_words_pattern(words: tuple[str, ...]) -> str:
 def admission_check_exprs(df: DataFrame, cfg: AdmissionConfig) -> dict[str, str]:
     """Each named predicate over ``df`` as a SQL expression string, keyed
     like the reference's checks dict (tweet_utils.py:291-305). True = keep.
-
-    String form (r21 convention, sqlexpr.py): the Column-operator build of
-    this stack cost ~800 Py4J round trips per construction; the strings
-    produce the identical expression trees in one parse."""
+    SQL strings, as sqlexpr.py describes."""
     lon, lat = "longitude", "latitude"
     checks: dict[str, str] = {}
 
@@ -110,7 +107,7 @@ def admission_check_exprs(df: DataFrame, cfg: AdmissionConfig) -> dict[str, str]
 
     # P5 valid_location: coords OR whitelisted place type (tweet_utils.py:247-250).
     # in_list compiles an empty whitelist to FALSE (isin([]) semantics) —
-    # a bare `IN ()` is a ParseException (ADVICE r21).
+    # a bare `IN ()` is a ParseException.
     types_pred = in_list("place_type", [sql_str(t) for t in cfg.valid_place_types])
     checks["valid_location"] = f"has_coords OR {types_pred}"
 

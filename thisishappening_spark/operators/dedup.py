@@ -198,10 +198,9 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     reproduces.
     """
     ids = doc_shingles(docs).selectExpr("doc_id", f"{token_id('shingle')} AS sid")
-    # One parsed string per component instead of ~8 Py4J round trips each
-    # (same expression: CAST(a AS BIGINT) * sid + b, then % p).
+    # sid is BIGINT, so a * sid is BIGINT arithmetic.
     aggs = [
-        F.expr(f"min((CAST({a} AS BIGINT) * sid + {b}) % {MINHASH_P}) AS mh{i}")
+        F.expr(f"min(({a} * sid + {b}) % {MINHASH_P}) AS mh{i}")
         for i, (a, b) in enumerate(MINHASH_PARAMS)
     ]
     return ids.groupBy("doc_id").agg(*aggs)
@@ -361,13 +360,8 @@ def simhash(docs: DataFrame) -> DataFrame:
         "doc_id", f"{token_id('tok')} AS tid"
     )
     params = MINHASH_PARAMS[:SIMHASH_BITS]
-    # Parsed-string form of the same expressions: the Column form of
-    # these 16 majorities + the fingerprint fold was
-    # ~2800 Py4J round trips per construction.
     bit_sums = [
-        F.expr(
-            f"sum(((CAST({a} AS BIGINT) * tid + {b}) % {MINHASH_P} % 2) * 2 - 1) AS v{j}"
-        )
+        F.expr(f"sum((({a} * tid + {b}) % {MINHASH_P} % 2) * 2 - 1) AS v{j}")
         for j, (a, b) in enumerate(params)
     ]
     vs = ids.groupBy("doc_id").agg(*bit_sums)

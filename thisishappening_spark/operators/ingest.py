@@ -11,7 +11,7 @@ prunes unreferenced fields inside Jackson.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -27,11 +27,9 @@ CREATED_AT_FORMAT = "MMM dd HH:mm:ss xx yyyy"
 def parse_created_at(col: str) -> str:
     """F1: parse "%a %b %d %H:%M:%S +0000 %Y" (reference tweet_utils.py:
     314-319). The day-of-week token is redundant with the date; slicing it
-    keeps the parse on Spark's strict parser instead of LEGACY mode.
-
-    Takes/returns SQL expression strings (as do the sibling helpers): the
-    Column-operator form of the full 23-field projection cost ~1500 Py4J
-    round trips per construction (profiled r21), the parsed form one."""
+    keeps the parse on Spark's strict parser instead of LEGACY mode. Takes
+    and returns SQL expression strings, as do the sibling helpers
+    (sqlexpr.py)."""
     return f"to_timestamp(substring({col}, 5, 26), '{CREATED_AT_FORMAT}')"
 
 # Nested raw-status schema — only the fields any operator reads (SURVEY
@@ -63,12 +61,7 @@ STATUS_SCHEMA = T.StructType(
         ),
         T.StructField(
             "coordinates",
-            T.StructType(
-                [
-                    T.StructField("type", T.StringType()),
-                    T.StructField("coordinates", T.ArrayType(T.DoubleType())),
-                ]
-            ),
+            T.StructType([T.StructField("coordinates", T.ArrayType(T.DoubleType()))]),
         ),
         T.StructField(
             "quoted_status",
@@ -88,13 +81,10 @@ STATUS_SCHEMA = T.StructType(
                         "bounding_box",
                         T.StructType(
                             [
-                                T.StructField("type", T.StringType()),
                                 T.StructField(
                                     "coordinates",
-                                    T.ArrayType(
-                                        T.ArrayType(T.ArrayType(T.DoubleType()))
-                                    ),
-                                ),
+                                    T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))),
+                                )
                             ]
                         ),
                     ),
@@ -143,14 +133,8 @@ def project_status(df: DataFrame) -> DataFrame:
     the 19 TweetInfo fields (deleted_at always NULL at ingest,
     data_base.py:254).
 
-    The projection is expressed as ONE ``selectExpr`` over a pre-parsed
-    struct column: the Column-operator form of these 23 fields (getField
-    chains, CASE branches, centroid folds) cost ~1500 Py4J round trips
-    per *construction* (profiled r21 — query construction is timed by the
-    bench on every run); the parsed-string form is one round trip. The
-    expression tree, and therefore the result, is unchanged: same typed
-    from_json, same coalesce/CASE/centroid semantics (F1-F3, P14 — see
-    the helpers above, which now build SQL expression strings)."""
+    The projection is ONE ``selectExpr`` over the parsed struct column,
+    built from the SQL strings of the helpers above (F1-F3, P14)."""
     lon, lat, has_coords = lon_lat("s")
     return df.select(F.from_json(F.col("raw"), STATUS_SCHEMA).alias("s")).selectExpr(
         "s.id_str AS status_id_str",

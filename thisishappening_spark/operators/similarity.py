@@ -30,7 +30,7 @@ square roots (correctly rounded IEEE ops) and rounds to 6 dp.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,15 +52,20 @@ LSH_TABLES = 8
 PLANES_PER_TABLE = 4
 TOP_K = 3  # neighbors kept per query vector
 
+# The lattice as a (dim × planes) float64 matrix: column p, row i is the
+# component of plane p, dim i above. int64 arithmetic is exact here (the
+# largest seed·HP_MULT is about 5.4e12, far below 2^63), so the matrix is
+# the same anywhere.
+_LATTICE = (
+    (np.arange(LSH_TABLES * PLANES_PER_TABLE * EMB_DIM, dtype=np.int64) * HP_MULT + HP_C)
+    % HP_M / HP_M - 0.5
+).reshape(LSH_TABLES * PLANES_PER_TABLE, EMB_DIM).T
+
 
 def as_double_vec(col: str) -> Column:
     """array<float> → array<double> so arithmetic runs in IEEE double on
-    every engine (float math widens differently between engines).
-
-    Takes a column NAME and returns one parsed expression — this module's
-    helpers are SQL-string builders because the Column-operator form of
-    the scoring pipeline cost ~1250 Py4J round trips per construction
-    (profiled r21) and the bench times construction on every run."""
+    every engine (float math widens differently between engines). Takes a
+    column name; this module's helpers build SQL strings (sqlexpr.py)."""
     return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
 
 
@@ -112,41 +117,29 @@ def cosine_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
     return _score_topk(base.join(F.broadcast(q), F.col("vid") != F.col("query_id")))
 
 
-def _lattice_matrix(n_planes: int, dim: int):
-    """The deterministic hyperplane lattice as an (n_planes, dim) float64
-    matrix: component (p, i) = ((seed·KNUTH + C) mod M)/M − 0.5 with
-    seed = p·dim + i. int64 arithmetic is exact here (max seed·KNUTH ≈
-    5.4e12 ≪ 2^63), so the matrix is reproducible anywhere."""
-    seeds = np.arange(n_planes * dim, dtype=np.int64)
-    comp = ((seeds * HP_MULT + HP_C) % HP_M) / HP_M - 0.5
-    return comp.reshape(n_planes, dim)
-
-
 def lsh_buckets_udf():
-    """Arrow-batched pandas UDF: vector → array of ``LSH_TABLES`` bucket
-    ids (one ``PLANES_PER_TABLE``-bit bucket per table). Table t uses
-    global planes [t·k, (t+1)·k) of the deterministic lattice.
+    """Arrow UDF: an ``EMB_DIM``-long ``array<double>`` vector → its
+    ``LSH_TABLES`` bucket ids. Table t's bucket packs the sign bits of
+    lattice planes [t·k, (t+1)·k), k = ``PLANES_PER_TABLE``, plane t·k + j
+    as bit j.
 
-    Dense (batch × dim) @ (dim × planes) is exactly what numpy/BLAS is
-    for: one matmul per Arrow batch replaces 32 per-row expression
-    evaluations. This is the sanctioned Pandas-UDF use — built-in column
-    expressions can express the projection but at a 32×dim-term
-    expression tree that bloats Catalyst and janino (measured 42 s vs
-    <2 s on the same input). No shuffle: the buckets ride along with the
-    scan.
+    Each Arrow batch is one (batch × dim) @ (dim × planes) matmul in numpy
+    over the batch's flattened values, returned as a list array without
+    a per-row Python object. The buckets ride along with the scan: no
+    shuffle. The SQL higher-order-function forms measured slower (ROADMAP
+    item 6).
     """
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    H = _lattice_matrix(LSH_TABLES * PLANES_PER_TABLE, EMB_DIM).T  # dim × planes
     weights = 1 << np.arange(PLANES_PER_TABLE, dtype=np.int64)
 
-    @pandas_udf("array<int>")
-    def buckets(vs: pd.Series) -> pd.Series:
-        mat = np.vstack(vs.to_numpy())  # batch × dim
-        proj = mat @ H  # batch × (tables·k)
-        bits = (proj > 0).astype(np.int64)
-        bk = (bits.reshape(len(vs), LSH_TABLES, PLANES_PER_TABLE) * weights).sum(axis=2)
-        return pd.Series(list(bk.astype("int32")))
+    @arrow_udf("array<int>")
+    def buckets(vs: pa.Array) -> pa.Array:
+        n = len(vs)
+        bits = vs.flatten().to_numpy().reshape(n, EMB_DIM) @ _LATTICE > 0
+        bk = (bits.reshape(n, LSH_TABLES, PLANES_PER_TABLE) * weights).sum(axis=2)
+        offsets = np.arange(0, (n + 1) * LSH_TABLES, LSH_TABLES, dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, bk.astype(np.int32).ravel())
 
     return buckets
 

@@ -58,10 +58,7 @@ def word_token_count(col: Column) -> Column:
 
 def stopword_ratio(tok_col: str, stopwords: list[str]) -> str:
     """Fraction of tokens that are function words — exact BIGINT/BIGINT
-    division. SQL-string form over a token-array expression: the Column-
-    operator form of this module cost ~1900 Py4J round trips per
-    construction (profiled r21 — the bench times construction every run);
-    the parsed strings build the identical expression trees."""
+    division, as a SQL string over a token-array expression."""
     hits = f"size(filter({tok_col}, t -> {_is_word('t', stopwords)}))"
     return f"CAST({hits} AS DOUBLE) / size({tok_col})"
 

@@ -3,7 +3,9 @@
 `get_recent_tweets` (reference data_base.py:307-382) is called 4× per
 arriving tweet. The builder here composes its exact predicate stack (Q1-Q6
 in SURVEY.md §2.2) onto a tweets-shaped DataFrame (time column
-``created_at``) and lets Catalyst push every filter to the scan.
+``created_at``) as one filter and lets Catalyst push it to the scan. It
+does not sort: the reference's newest-first order (O1) is the caller's to
+apply.
 
 Scale notes: every query carries a time bound (Q1), which on a
 date-partitioned table becomes partition pruning — the 100 TB plan reads
@@ -16,7 +18,6 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from thisishappening_spark.functions.geo import BoundingBox, inbounds_half_open
 from thisishappening_spark.sqlexpr import in_list, sql_str
@@ -25,9 +26,9 @@ from thisishappening_spark.sqlexpr import in_list, sql_str
 def _ts_lit(t: dt.datetime) -> str:
     """A datetime as a TIMESTAMP literal — same value F.lit(datetime)
     produced under the pinned-UTC session. Aware datetimes are converted
-    to their UTC wall time first (ADVICE r21): formatting the naive field
-    values of a non-UTC aware datetime would silently shift the window by
-    the offset, where F.lit converted correctly."""
+    to their UTC wall time first: formatting the naive field values of a
+    non-UTC aware datetime would silently shift the window by the offset,
+    where F.lit converted correctly."""
     if t.tzinfo is not None:
         t = t.astimezone(dt.timezone.utc).replace(tzinfo=None)
     return f"TIMESTAMP '{t:%Y-%m-%d %H:%M:%S.%f}'"
@@ -43,15 +44,11 @@ def recent_tweets(
     place_type_or_coords: bool = True,
     include_quote_status: bool = True,
     include_reply_status: bool = True,
-    ordered: bool = True,
 ) -> DataFrame:
-    """Mirror of get_recent_tweets (reference data_base.py:307-382),
-    newest-first (O1) when ``ordered``.
-
-    ``ordered=False`` skips the O1 sort for pipeline consumers
-    (weighting, window counting) that don't need order — the unconditional
-    global range-partition sort would otherwise dominate the hot path at
-    scale. The user-facing query keeps the reference's newest-first default.
+    """The rows get_recent_tweets (reference data_base.py:307-382) returns,
+    unsorted: a caller that needs them newest-first applies O1
+    (``orderBy(F.desc("created_at"))``) itself, and one that aggregates or
+    windows them pays no global sort.
 
     Predicate semantics preserved exactly:
     - Q2 bbox is HALF-OPEN (`>= west AND < east AND >= south AND < north`,
@@ -65,9 +62,7 @@ def recent_tweets(
       sets it.
     """
     # Q1: closed sliding interval [timestamp - hours, timestamp]
-    # (data_base.py:334-342). Predicates are SQL strings (r21 convention,
-    # sqlexpr.py): the Column build of this plan cost ~400 Py4J round
-    # trips per construction.
+    # (data_base.py:334-342). Predicates are SQL strings (sqlexpr.py).
     start = timestamp - dt.timedelta(hours=hours)
     conds = [f"created_at >= {_ts_lit(start)} AND created_at <= {_ts_lit(timestamp)}"]
 
@@ -76,7 +71,7 @@ def recent_tweets(
 
     if place_type is not None:
         # in_list renders an empty list as FALSE (isin([]) semantics) —
-        # `IN ()` is a ParseException (ADVICE r21).
+        # `IN ()` is a ParseException.
         types_pred = in_list("place_type", [sql_str(t) for t in place_type])
     hc = "TRUE" if has_coords else "FALSE"
     if place_type_or_coords and place_type is not None and has_coords is not None:
@@ -94,6 +89,5 @@ def recent_tweets(
         conds.append("NOT (is_reply_status <=> TRUE)")
     conds.append("deleted_at IS NULL")
 
-    df = tweets.filter(" AND ".join(f"({c})" for c in conds))
-    return df.orderBy(F.desc("created_at")) if ordered else df
+    return tweets.filter(" AND ".join(f"({c})" for c in conds))
 

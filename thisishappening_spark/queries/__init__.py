@@ -4,7 +4,7 @@ cross-engine determinism rules each entry follows)."""
 
 from __future__ import annotations
 
-from thisishappening_spark.registry import REGISTRY, QuerySpec, query  # noqa: F401
+from thisishappening_spark.registry import REGISTRY  # noqa: F401
 
 # Import for registration side effects (order = rough SURVEY.md §2 order).
 from thisishappening_spark.queries import relational  # noqa: E402,F401

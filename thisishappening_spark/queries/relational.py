@@ -54,8 +54,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, not rows. Filter and 7-column projection push to parquet.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # Parsed strings, one round trip per aggregate instead of ~570 for the
-    # Column-operator form (r21 construction profile). Charge is scale 6.
+    # Charge is scale 6.
     charge = f"{_REVENUE} * {units('1 + l_tax', 2)}"
 
     return (
@@ -228,8 +227,8 @@ def q_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("event_type").agg(
         F.expr("count(1) AS n_events"),
         F.expr("count(DISTINCT user_id) AS n_users"),
-        F.expr("CAST(min(value) AS DOUBLE) AS min_value"),
-        F.expr("CAST(max(value) AS DOUBLE) AS max_value"),
+        F.expr("min(value) AS min_value"),
+        F.expr("max(value) AS max_value"),
         F.expr(f"{dsum('value')} AS sum_value"),
     )
 
@@ -398,7 +397,7 @@ def q_topk_events_by_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.orderBy(F.desc("value"), F.asc("event_id"))
-        .select("event_id", "user_id", "event_type", F.col("value").cast("double").alias("value"))
+        .select("event_id", "user_id", "event_type", "value")
         .limit(5)
     )
 

@@ -103,7 +103,8 @@ def q_recent_tweets_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1-Q6: the full get_recent_tweets predicate stack (reference
     data_base.py:307-382): closed sliding time window, HALF-OPEN bbox
     (deliberately different from P1), place-type-OR-coords disjunction,
-    IS-NOT-TRUE quote/reply exclusions (NULLs kept), deleted IS NULL."""
+    IS-NOT-TRUE quote/reply exclusions (NULLs kept), deleted IS NULL, in
+    the reference's newest-first order (O1)."""
     from thisishappening_spark.plans.recent_tweets import recent_tweets
 
     tw = load_tweets(spark, sf_dir)
@@ -116,7 +117,9 @@ def q_recent_tweets_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
         has_coords=True,
         include_quote_status=False,
         include_reply_status=False,
-    ).select("id", "status_id_str", "place_type", "has_coords", "created_at")
+    ).orderBy(F.desc("created_at")).select(
+        "id", "status_id_str", "place_type", "has_coords", "created_at"
+    )
 
 
 @query(
@@ -153,10 +156,8 @@ def q_count_tweets_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row reduce."""
     tw = load_tweets(spark, sf_dir)
 
-    # Parsed-string form of the same filter + conditional counts (the
-    # Column form cost ~720 Py4J round trips per construction, r21); the
-    # strings deliberately mirror the oracle SQL above, with the Q2
-    # half-open bbox of recent_tweets.
+    # The strings mirror the oracle SQL above, with the Q2 half-open bbox
+    # of recent_tweets.
     def win(start: str, end: str) -> str:
         return (
             f"count(CASE WHEN created_at >= TIMESTAMP '{start}' "
@@ -368,11 +369,17 @@ RAW_STATUSES: list[str] = [
     ]
 ]
 
-_VALUES_SQL = ", ".join(f"('{s}')" for s in RAW_STATUSES)
 
-@query(
-    "q_status_projection",
-    f"""
+def values_sql(statuses: list[str]) -> str:
+    """The statuses as a SQL VALUES list of single-quoted literals, each
+    ``'`` doubled: Spark and DuckDB both read ``''`` as one quote. (Spark
+    also reads backslash escapes, which DuckDB keeps: no backslash may
+    reach here.)"""
+    return ", ".join("('" + s.replace("'", "''") + "')" for s in statuses)
+
+
+# q_status_projection's DuckDB oracle over the VALUES list ``{values}``.
+STATUS_PROJECTION_SQL = """
     SELECT json_extract_string(raw, '$.id_str') AS status_id_str,
            json_extract_string(raw, '$.user.screen_name') AS user_screen_name,
            json_extract_string(raw, '$.user.id_str') AS user_id_str,
@@ -401,22 +408,29 @@ _VALUES_SQL = ", ".join(f"('{s}')" for s in RAW_STATUSES)
            CAST(json_extract(raw, '$.user.friends_count') AS BIGINT) AS friends_count,
            CAST(json_extract(raw, '$.user.followers_count') AS BIGINT)
                AS followers_count
-    FROM (VALUES {_VALUES_SQL}) t(raw)
-    """,
-)
+    FROM (VALUES {values}) t(raw)
+    """
+
+
+@query("q_status_projection", STATUS_PROJECTION_SQL.format(values=values_sql(RAW_STATUSES)))
 def q_status_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4+F1+F2: the 19-field get_tweet_info projection over raw status
     JSON (reference tweet_utils.py:137-178), typed from_json + to_timestamp
     on the Twitter date format. The F3 place-centroid fallback for lon/lat
     is exercised in tests/test_ingest.py (JSON-array averaging isn't
     portably oracle-expressible)."""
+    return project_statuses(spark, RAW_STATUSES)
+
+
+def project_statuses(spark: SparkSession, statuses: list[str]) -> DataFrame:
+    """q_status_projection's columns for ``statuses``, read from the same
+    VALUES list as its oracle."""
     from thisishappening_spark.operators.ingest import project_status
 
     # An inline VALUES relation is parsed JVM-side, with no Python-side
     # rows to pickle. Catalyst folds it and the projections above it into
     # one LocalTableScan while planning, so collect() runs no Spark job.
-    values_sql = ", ".join("('" + s.replace("'", "''") + "')" for s in RAW_STATUSES)
-    raw = spark.sql(f"SELECT raw FROM VALUES {values_sql} AS t(raw)")
+    raw = spark.sql(f"SELECT raw FROM VALUES {values_sql(statuses)} AS t(raw)")
     return project_status(raw).select(
         "status_id_str",
         "user_screen_name",

@@ -38,8 +38,8 @@ overrides any setting here, the master and shuffle partitions included.
 
 Left at Spark's default on purpose: Arrow conversion
 (``spark.sql.execution.arrow.pyspark.enabled`` acts only on ``toPandas``
-and on ``createDataFrame`` from pandas, which nothing here calls; pandas
-UDFs batch through Arrow regardless) and
+and on ``createDataFrame`` from pandas, which nothing here calls; the
+Arrow UDF batches through Arrow regardless) and
 ``spark.sql.legacy.parquet.nanosAsLong``, which ``sources/tables.py`` sets
 from the parquet footer on whatever session it reads with.
 

@@ -1,3 +1,1 @@
-from thisishappening_spark.sources.tables import load_table
-
-__all__ = ["load_table"]
+"""Table readers: parquet tables and the tweets view."""

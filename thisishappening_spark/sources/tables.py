@@ -33,8 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 # *relation* (file list + schema, an unexecuted plan) is reused — no rows are
 # cached or persisted; every action still scans the parquet input. Keyed
 # weakly per SparkSession so a stopped session drops its entries, and by
-# absolute path so different scale-factor dirs never collide.
-_RELATION_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
+# (absolute path, fan_out) so different scale-factor dirs never collide.
+_RELATION_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, bool], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
 
@@ -48,19 +48,18 @@ def load_table(
     per-row work sits directly on the scan, because the redistribution is a
     full pass of the table through one round-robin exchange."""
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    key = f"{path}::fan_out" if fan_out else path
     per_session = _RELATION_CACHE.setdefault(spark, {})
-    df = per_session.get(key)
+    df = per_session.get((path, fan_out))
     if df is None:
-        df = per_session.get(path)
+        df = per_session.get((path, False))
         if df is None:
             df = (
                 _load_events(spark, path) if name == "events" else spark.read.parquet(path)
             )
-            per_session[path] = df
+            per_session[(path, False)] = df
         if fan_out:
             df = _fan_out_narrow_scan(spark, path, df)
-            per_session[key] = df
+            per_session[(path, True)] = df
     return df
 
 
@@ -181,12 +180,11 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
 def invalidate_relation_cache(spark: SparkSession, path: str) -> None:
     """Drop ``spark``'s cached relations under ``path`` so the next
     ``load_table`` re-lists and re-resolves them. CATALOG-LIKE STALENESS
-    SEMANTICS (documented per ADVICE r21): the relation cache pins each
-    path's file listing and schema for the lifetime of the session, exactly
-    as a catalog table would — data appended, overwritten or deleted at the
-    same path mid-session is invisible (or raises on read) until
-    invalidated. Call this after mutating a table's files in a long-lived
-    session.
+    SEMANTICS: the relation cache pins each path's file listing and schema
+    for the lifetime of the session, exactly as a catalog table would —
+    data appended, overwritten or deleted at the same path mid-session is
+    invisible (or raises on read) until invalidated. Call this after
+    mutating a table's files in a long-lived session.
 
     ``path`` may name the table file/dir itself or the sf_dir the table was
     loaded from (both resolve by absolute path: the path itself and
@@ -198,7 +196,6 @@ def invalidate_relation_cache(spark: SparkSession, path: str) -> None:
     abs_path = os.path.abspath(path)
     under = os.path.join(abs_path, "")  # a sibling sharing the prefix is not under it
     for key in list(per_session):
-        table = key.split("::")[0]
-        if table == abs_path or table.startswith(under):
+        if key[0] == abs_path or key[0].startswith(under):
             del per_session[key]
     spark.catalog.refreshByPath(abs_path)

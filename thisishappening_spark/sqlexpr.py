@@ -1,13 +1,13 @@
 """Helpers for building Spark-SQL expression *strings*.
 
-r21 convention: hot operators build repetitive expression families as
-parsed SQL strings (one Py4J round trip via ``F.expr``/``selectExpr``)
-instead of nested Column operators (one round trip per operator, profiled
-at 60-80% of query-construction time — which the bench pays on every
-timed run). The strings must produce the exact expression tree the Column
-form did, so literals are rendered with explicit types: ``flit`` for
-DOUBLE (Column ``F.lit(float)``), ``sql_str`` for string literals with
-Spark's backslash escaping.
+The package's convention: operators, functions and queries build their
+expressions as SQL strings, parsed once by ``F.expr``/``selectExpr``/
+``filter``, rather than as nested Column operators, each of which is a
+separate Py4J call while the DataFrame is built; a request builds its
+DataFrame on every run, so building it is part of the request's cost.
+Literals are rendered with explicit types so a string parses to the tree
+the Column form would build: ``flit`` for DOUBLE (``F.lit(float)``),
+``sql_str`` for string literals with Spark's backslash escaping.
 """
 
 from __future__ import annotations

@@ -1,6 +1,7 @@
-"""Unit tests for the S4 ingest projection paths the oracle can't cover:
-the F3 place-polygon centroid fallback and F1 date parsing edge cases
-(reference tweet_utils.py:107-121, :314-319)."""
+"""Unit tests for the S4 ingest projection: the F3 place-polygon centroid
+fallback, F1 date parsing and F2 body precedence edge cases (reference
+tweet_utils.py:95-121, :314-319), and statuses that q_status_projection's
+oracle must read alike (quotes, backslashes, a polygon and no point)."""
 
 from __future__ import annotations
 
@@ -128,3 +129,27 @@ def test_status_projection_reads_an_apostrophe_like_its_oracle(spark):
     want = duckdb.sql(STATUS_PROJECTION_SQL.format(values=values_sql(statuses)))
     assert_same_rows("q_status_projection", got, want)
     assert got.filter("status_id_str = '5002'").first()["tweet_body"] == "it's O'Brien's '' park"
+
+
+def test_status_projection_reads_a_backslash_like_its_oracle(spark):
+    """A status whose JSON holds ``\\"`` and ``\\\\`` reaches Spark with no
+    backslash escape to read, so both engines parse it alike; its place
+    polygon and missing point also take the F3 centroid fallback on both,
+    as the same left fold, so the coordinates match bit for bit."""
+    import duckdb
+
+    from thisishappening_spark.queries.tweets import (
+        RAW_STATUSES,
+        STATUS_PROJECTION_SQL,
+        project_statuses,
+        values_sql,
+    )
+
+    text = 'say "hi" \\ back'
+    statuses = RAW_STATUSES + [_status(id_str="5003", text=text)]
+    cols = ["status_id_str", "tweet_body", "longitude", "latitude"]
+    got = [tuple(r) for r in project_statuses(spark, statuses).select(cols).collect()]
+    oracle = STATUS_PROJECTION_SQL.format(values=values_sql(statuses))
+    want = duckdb.sql(f"SELECT {', '.join(cols)} FROM ({oracle})").fetchall()
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    assert {r[0]: r[1] for r in got}["5003"] == text

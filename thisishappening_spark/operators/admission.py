@@ -1,5 +1,5 @@
 """Admission filter — the reference's 13-predicate `check_tweet`
-(reference tweet_utils.py:181-311) as one composable Spark ``Column``.
+(reference tweet_utils.py:181-311) as one composable SQL predicate string.
 
 Every predicate is a pure JVM-side expression (no UDFs), so the whole
 conjunction participates in whole-stage codegen and — where it touches

@@ -37,7 +37,7 @@ the brief's training-pipeline surface (SURVEY.md §2 extension).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Modulus and fixed (a, b) parameters for the MinHash permutation family
@@ -77,26 +77,21 @@ MAX_SHINGLE_DF = 100
 JACCARD_THRESHOLD = 0.5  # least trigram Jaccard of a jaccard_pairs pair
 
 
-def normalize_text(col: Column) -> Column:
-    """Whitespace-collapse + trim + lowercase — the canonical form exact
-    dedup hashes. Mirrors the usual normalize step of corpus dedup."""
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-
-
 def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup: one row per distinct normalized text with the surviving
-    doc id (min id = keep-first) and the group size.
+    doc id (min id = keep-first) and the group size. The text is normalized
+    the usual corpus-dedup way: whitespace runs collapsed, trimmed,
+    lowercased.
 
     Scale: the shuffle key is the md5 hex (32 chars/doc); text never
     shuffles. Map-side partial aggregation applies to both min and count.
     """
+    # Spark reads the literal's backslash escape: the regex is \s+.
+    norm = r"lower(trim(regexp_replace(text, '\\s+', ' ')))"
     return (
-        docs.select(F.md5(normalize_text(F.col("text"))).alias("text_hash"), "doc_id")
+        docs.selectExpr(f"md5({norm}) AS text_hash", "doc_id")
         .groupBy("text_hash")
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("n_docs"),
-        )
+        .agg(F.expr("min(doc_id) AS keep_doc_id"), F.expr("count(1) AS n_docs"))
     )
 
 
@@ -264,11 +259,11 @@ def minhash_lsh_pairs(docs: DataFrame, max_bucket_df: int | None = None) -> Data
     bands = _band_table(sigs)
     buckets = (
         bands.groupBy("band", "band_key")
-        .agg(F.collect_list(F.struct("doc_id", "sig")).alias("ms"))
-        .filter(F.size("ms") >= 2)
+        .agg(F.expr("collect_list(struct(doc_id, sig)) AS ms"))
+        .filter("size(ms) >= 2")
     )
     if max_bucket_df is not None:
-        buckets = buckets.filter(F.size("ms") <= max_bucket_df)
+        buckets = buckets.filter(f"size(ms) <= {max_bucket_df}")
     matches = (
         "aggregate(zip_with(a.sig, b.sig, "
         "(x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, t) -> acc + t)"

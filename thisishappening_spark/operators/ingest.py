@@ -12,8 +12,6 @@ prunes unreferenced fields inside Jackson.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from thisishappening_spark.functions.geo import polygon_ring_centroid
 
@@ -32,66 +30,20 @@ def parse_created_at(col: str) -> str:
     (sqlexpr.py)."""
     return f"to_timestamp(substring({col}, 5, 26), '{CREATED_AT_FORMAT}')"
 
-# Nested raw-status schema — only the fields any operator reads (SURVEY
-# §1.1). The polygon is array<array<array<double>>> (ring of [lon,lat]).
-STATUS_SCHEMA = T.StructType(
-    [
-        T.StructField("id_str", T.StringType()),
-        T.StructField("created_at", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("full_text", T.StringType()),
-        T.StructField(
-            "extended_tweet",
-            T.StructType([T.StructField("full_text", T.StringType())]),
-        ),
-        T.StructField("lang", T.StringType()),
-        T.StructField("is_quote_status", T.BooleanType()),
-        T.StructField("in_reply_to_status_id_str", T.StringType()),
-        T.StructField("possibly_sensitive", T.BooleanType()),
-        T.StructField(
-            "user",
-            T.StructType(
-                [
-                    T.StructField("screen_name", T.StringType()),
-                    T.StructField("id_str", T.StringType()),
-                    T.StructField("friends_count", T.LongType()),
-                    T.StructField("followers_count", T.LongType()),
-                ]
-            ),
-        ),
-        T.StructField(
-            "coordinates",
-            T.StructType([T.StructField("coordinates", T.ArrayType(T.DoubleType()))]),
-        ),
-        T.StructField(
-            "quoted_status",
-            T.StructType([T.StructField("text", T.StringType())]),
-        ),
-        T.StructField(
-            "place",
-            T.StructType(
-                [
-                    T.StructField("id", T.StringType()),
-                    T.StructField("name", T.StringType()),
-                    T.StructField("full_name", T.StringType()),
-                    T.StructField("country", T.StringType()),
-                    T.StructField("country_code", T.StringType()),
-                    T.StructField("place_type", T.StringType()),
-                    T.StructField(
-                        "bounding_box",
-                        T.StructType(
-                            [
-                                T.StructField(
-                                    "coordinates",
-                                    T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))),
-                                )
-                            ]
-                        ),
-                    ),
-                ]
-            ),
-        ),
-    ]
+# Raw-status schema as a DDL type string — only the fields any operator
+# reads (SURVEY §1.1). The polygon is array<array<array<double>>> (ring of
+# [lon,lat]).
+STATUS_DDL = (
+    "struct<id_str:string,created_at:string,text:string,full_text:string,"
+    "extended_tweet:struct<full_text:string>,lang:string,is_quote_status:boolean,"
+    "in_reply_to_status_id_str:string,possibly_sensitive:boolean,"
+    "user:struct<screen_name:string,id_str:string,friends_count:bigint,"
+    "followers_count:bigint>,"
+    "coordinates:struct<coordinates:array<double>>,"
+    "quoted_status:struct<text:string>,"
+    "place:struct<id:string,name:string,full_name:string,country:string,"
+    "country_code:string,place_type:string,"
+    "bounding_box:struct<coordinates:array<array<array<double>>>>>>"
 )
 
 
@@ -129,14 +81,15 @@ def lon_lat(s: str) -> tuple[str, str, str]:
 
 def project_status(df: DataFrame) -> DataFrame:
     """get_tweet_info as one typed projection (reference tweet_utils.py:
-    137-178) of the raw status JSON string column ``raw``. Output schema =
-    the 19 TweetInfo fields (deleted_at always NULL at ingest,
-    data_base.py:254).
+    137-178) of the raw status JSON string column ``raw``. Output: the 19
+    TweetInfo fields (deleted_at always NULL at ingest, data_base.py:254)
+    and the three admission-only extras, 22 columns.
 
-    The projection is ONE ``selectExpr`` over the parsed struct column,
-    built from the SQL strings of the helpers above (F1-F3, P14)."""
+    ``from_json`` parses ``raw`` once with :data:`STATUS_DDL`; the
+    projection is ONE ``selectExpr`` over the parsed struct column, built
+    from the SQL strings of the helpers above (F1-F3, P14)."""
     lon, lat, has_coords = lon_lat("s")
-    return df.select(F.from_json(F.col("raw"), STATUS_SCHEMA).alias("s")).selectExpr(
+    return df.selectExpr(f"from_json(raw, '{STATUS_DDL}') AS s").selectExpr(
         "s.id_str AS status_id_str",
         "s.user.screen_name AS user_screen_name",
         "s.user.id_str AS user_id_str",

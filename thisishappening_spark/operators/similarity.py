@@ -34,6 +34,8 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from thisishappening_spark.sqlexpr import in_list
+
 # Deterministic pseudo-random hyperplane component for plane p, dim i:
 # seed = p*dim + i, comp = ((seed * HP_MULT + HP_C) mod HP_M) / HP_M - 0.5.
 # The multiplier is Knuth's multiplicative-hash constant (2654435761 = odd
@@ -62,11 +64,17 @@ _LATTICE = (
 ).reshape(LSH_TABLES * PLANES_PER_TABLE, EMB_DIM).T
 
 
-def as_double_vec(col: str) -> Column:
+def double_vec(col: str) -> str:
     """array<float> → array<double> so arithmetic runs in IEEE double on
     every engine (float math widens differently between engines). Takes a
-    column name; this module's helpers build SQL strings (sqlexpr.py)."""
-    return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
+    column name and returns a SQL string, as this module's helpers do
+    (sqlexpr.py)."""
+    return f"transform({col}, x -> CAST(x AS DOUBLE))"
+
+
+def as_double_vec(col: str) -> Column:
+    """:func:`double_vec` as a Column, the argument a UDF call takes."""
+    return F.expr(double_vec(col))
 
 
 def dot(a: str, b: str) -> str:
@@ -79,9 +87,9 @@ def dot(a: str, b: str) -> str:
 def _vectors(emb: DataFrame, query_ids: list[int]) -> tuple[DataFrame, DataFrame]:
     """The corpus as (vid, v, n2), each vector in double with its squared
     norm, and the query vectors among it as (query_id, qv, qn2)."""
-    v = emb.select(F.col("vec_id").alias("vid"), as_double_vec("embedding").alias("v"))
-    base = v.select("vid", "v", F.expr(f"{dot('v', 'v')} AS n2"))
-    q = base.filter(F.col("vid").isin(query_ids)).selectExpr(
+    v = emb.selectExpr("vec_id AS vid", f"{double_vec('embedding')} AS v")
+    base = v.selectExpr("vid", "v", f"{dot('v', 'v')} AS n2")
+    q = base.filter(in_list("vid", [str(i) for i in query_ids])).selectExpr(
         "vid AS query_id", "v AS qv", "n2 AS qn2"
     )
     return base, q
@@ -114,7 +122,7 @@ def cosine_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
     query side as the whole corpus, above the broadcast threshold.
     """
     base, q = _vectors(emb, query_ids)
-    return _score_topk(base.join(F.broadcast(q), F.col("vid") != F.col("query_id")))
+    return _score_topk(base.join(F.broadcast(q), F.expr("vid != query_id")))
 
 
 def lsh_buckets_udf():
@@ -178,10 +186,10 @@ def ann_lsh_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
     base, qtab = _vectors(emb, query_ids)
     buckets = lsh_buckets_udf()
     ent = base.select(
-        "vid", "v", "n2", F.posexplode(buckets(F.col("v"))).alias("tbl", "bucket")
+        "vid", "v", "n2", F.posexplode(buckets("v")).alias("tbl", "bucket")
     )
     probes = ["bucket"] + [f"bucket ^ {1 << j}" for j in range(PLANES_PER_TABLE)]
-    q = ent.filter(F.col("vid").isin(query_ids)).selectExpr(
+    q = ent.filter(in_list("vid", [str(i) for i in query_ids])).selectExpr(
         "vid AS query_id",
         "tbl AS q_tbl",
         f"explode(array({', '.join(probes)})) AS probe_bucket",
@@ -190,7 +198,5 @@ def ann_lsh_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
         F.broadcast(q),
         F.expr("tbl = q_tbl AND bucket = probe_bucket AND vid != query_id"),
     )
-    uniq = cand.groupBy("query_id", "vid").agg(
-        F.first("v").alias("v"), F.first("n2").alias("n2")
-    )
+    uniq = cand.groupBy("query_id", "vid").agg(F.expr("first(v) AS v"), F.expr("first(n2) AS n2"))
     return _score_topk(uniq.join(F.broadcast(qtab), "query_id"))

@@ -13,7 +13,7 @@ operator reads a ``documents``-shaped frame: ``doc_id`` and ``text``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from thisishappening_spark.operators.dedup import token_id
@@ -42,18 +42,6 @@ FP_P = 2_147_483_647  # fingerprint modulus (2^31-1)
 
 def _is_word(col: str, words: list[str]) -> str:
     return in_list(col, [sql_str(w) for w in words])
-
-
-def tokens(col: Column) -> Column:
-    """Whitespace tokenization (the documents table is single-space
-    separated; real corpora would regex-split first)."""
-    return F.split(col, " ")
-
-
-def word_token_count(col: Column) -> Column:
-    """BPE-ish token proxy: count of maximal [a-z0-9]+ runs, lowercase.
-    Uses regexp_count so the scan never materializes the match array."""
-    return F.regexp_count(F.lower(col), F.lit("[a-z0-9]+"))
 
 
 def stopword_ratio(tok_col: str, stopwords: list[str]) -> str:
@@ -97,12 +85,12 @@ def lang_id(docs: DataFrame) -> DataFrame:
     (en < es < fr by construction below).
 
     Plan shape: explode the tokens once and count hits per language with
-    conditional sums (``isin`` against a literal set compiles to an InSet
+    conditional sums (``IN`` against a literal list compiles to an InSet
     inside whole-stage codegen), then a single shuffle of four BIGINTs per
     document. The earlier formulation — three higher-order ``filter``
     lambdas per row — fell out of codegen and re-tokenized each row ~7×.
     """
-    toks = docs.select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
+    toks = docs.selectExpr("doc_id", "explode(split(lower(text), ' ')) AS tok")
     hits = toks.groupBy("doc_id").agg(
         *[
             F.expr(
@@ -129,7 +117,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
         f"WHEN score_{code} = {best} THEN '{code}'"
         for code in ("en", "es", "fr")
     ) + " END"
-    return scored.selectExpr("doc_id", f"{pred} AS pred_lang", "score_en")
+    return scored.selectExpr("doc_id", f"{pred} AS pred_lang")
 
 
 def doc_fingerprint(docs: DataFrame) -> DataFrame:

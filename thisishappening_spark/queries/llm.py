@@ -379,17 +379,19 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus stats by (lang, source): doc/char/token counts — whitespace
-    tokens and regex word tokens (BPE-ish proxy via regexp_count).
+    tokens (the table is single-space separated) and regex word tokens, the
+    maximal ``[a-z0-9]+`` runs of the lowercased text (a BPE-ish proxy;
+    ``regexp_count`` never materializes the match array).
 
     Scale: pure scan + small-key aggregate; all-integer outputs need no
     quantization.
     """
     docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.sum(F.size(textstats.tokens(F.col("text")))).alias("sum_ws_tokens"),
-        F.sum(textstats.word_token_count(F.col("text"))).alias("sum_word_tokens"),
+        F.expr("count(1) AS n_docs"),
+        F.expr("sum(n_chars) AS sum_chars"),
+        F.expr("sum(size(split(text, ' '))) AS sum_ws_tokens"),
+        F.expr("sum(regexp_count(lower(text), '[a-z0-9]+')) AS sum_word_tokens"),
     )
 
 
@@ -425,8 +427,8 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     q = textstats.doc_quality(docs)
     return q.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("quality_pass"), 1).otherwise(0)).alias("n_pass"),
+        F.expr("count(1) AS n_docs"),
+        F.expr("sum(CASE WHEN quality_pass THEN 1 ELSE 0 END) AS n_pass"),
     )
 
 
@@ -468,7 +470,7 @@ def q_lang_id_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     p = textstats.lang_id(docs)
-    return p.groupBy("pred_lang").agg(F.count(F.lit(1)).alias("n_docs"))
+    return p.groupBy("pred_lang").agg(F.expr("count(1) AS n_docs"))
 
 
 @query(

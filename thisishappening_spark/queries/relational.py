@@ -110,7 +110,7 @@ def q03_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.join(o, F.expr("c_custkey = o_custkey"))
         .join(li, F.expr("l_orderkey = o_orderkey"))
-        .groupBy("o_orderkey", F.col("o_orderdate").cast("date").alias("orderdate"))
+        .groupBy("o_orderkey", F.expr("CAST(o_orderdate AS DATE) AS orderdate"))
         .agg(F.expr(f"{isum(_REVENUE, 4)} AS revenue"))
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
         .limit(10)
@@ -176,11 +176,11 @@ def q05_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_semi_join_bigticket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (J4-style evidence lookup, SURVEY §2.3)."""
     o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 49)
+    li = load_table(spark, sf_dir, "lineitem").filter("l_quantity >= 49")
     return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
+        o.join(li, F.expr("o_orderkey = l_orderkey"), "left_semi")
         .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
+        .agg(F.expr("count(1) AS n_orders"))
     )
 
 
@@ -199,12 +199,12 @@ def q_anti_join_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame
     """Left-anti join (Q12 ID-list-delete complement, SURVEY §2.2)."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("2000-01-01 00:00:00").cast("timestamp")
+        "o_orderdate >= TIMESTAMP '2000-01-01 00:00:00'"
     )
     return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
+        c.join(o, F.expr("c_custkey = o_custkey"), "left_anti")
         .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
+        .agg(F.expr("count(1) AS n_customers"))
     )
 
 
@@ -244,8 +244,8 @@ def q_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_setop_click_not_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set operation (SURVEY §2.7): EXCEPT DISTINCT."""
     ev = load_table(spark, sf_dir, "events")
-    clickers = ev.filter(F.col("event_type") == "click").select("user_id")
-    buyers = ev.filter(F.col("event_type") == "purchase").select("user_id")
+    clickers = ev.filter("event_type = 'click'").select("user_id")
+    buyers = ev.filter("event_type = 'purchase'").select("user_id")
     return clickers.subtract(buyers)  # EXCEPT DISTINCT semantics
 
 
@@ -268,7 +268,7 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.expr(f"{dsum('l_extendedprice')} AS sum_price"),
-        F.count(F.lit(1)).alias("n_rows"),
+        F.expr("count(1) AS n_rows"),
     )
 
 
@@ -367,7 +367,7 @@ def q_decay_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return weighted.groupBy("user_id").agg(
         F.expr(f"{qsum('weight')} AS total_weight"),
-        F.count(F.lit(1)).alias("n_events"),
+        F.expr("count(1) AS n_events"),
     )
 
 
@@ -548,8 +548,7 @@ def q_json_props_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines to int64 so the driver's type-sensitive value-hash matches.
     """
     ev = load_table(spark, sf_dir, "events")
-    props = F.from_json(F.col("props"), "k BIGINT")
-    return ev.groupBy("event_type").agg(F.sum(props.getField("k")).alias("sum_k"))
+    return ev.groupBy("event_type").agg(F.expr("sum(from_json(props, 'k BIGINT').k) AS sum_k"))
 
 
 @query(
@@ -568,12 +567,12 @@ def q_retention_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated Java like a literal, so every new ``max(ts)`` would compile
     again, and ``max(ts) OVER ()`` puts every row in one partition."""
     ev = load_table(spark, sf_dir, "events")
-    cutoff = ev.agg((F.max("ts") - F.expr("INTERVAL 7 DAYS")).alias("cutoff"))
+    cutoff = ev.agg(F.expr("max(ts) - INTERVAL 7 DAYS AS cutoff"))
     return (
         ev.join(cutoff)
-        .filter(F.col("ts") < F.col("cutoff"))
+        .filter("ts < cutoff")
         .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_expired"))
+        .agg(F.expr("count(1) AS n_expired"))
     )
 
 
@@ -592,6 +591,6 @@ def q_local_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     use from_utc_timestamp.
     """
     ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        (F.col("ts") - F.expr("INTERVAL 5 HOURS")).cast("date").alias("local_day")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    return ev.groupBy(F.expr("CAST(ts - INTERVAL 5 HOURS AS DATE) AS local_day")).agg(
+        F.expr("count(1) AS n")
+    )

@@ -73,9 +73,7 @@ def q_admission_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_followers_count=10,
     )
     tw = load_tweets(spark, sf_dir)
-    return admit(tw, cfg).groupBy("place_type").agg(
-        F.count(F.lit(1)).alias("n_admitted")
-    )
+    return admit(tw, cfg).groupBy("place_type").agg(F.expr("count(1) AS n_admitted"))
 
 
 # ---------------------------------------------------------------------------
@@ -206,7 +204,7 @@ def q_place_type_and_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
             place_type_or_coords=False,
         )
         .groupBy("place_type")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.expr("count(1) AS n"))
     )
 
 
@@ -224,9 +222,9 @@ def q_in_or_null_place_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped by a nullable key."""
     tw = load_tweets(spark, sf_dir)
     return (
-        tw.filter(F.col("place_type").isin("poi", "city") | F.col("place_type").isNull())
+        tw.filter("place_type IN ('poi', 'city') OR place_type IS NULL")
         .groupBy("tweet_language")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.expr("count(1) AS n"))
     )
 
 
@@ -243,7 +241,7 @@ def q_pk_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a parquet min/max-pruned scan — only row groups whose id range covers
     the key are read."""
     tw = load_tweets(spark, sf_dir)
-    return tw.filter(F.col("id") == F.lit(4242)).select(
+    return tw.filter("id = 4242").select(
         "id", "status_id_str", "user_screen_name", "place_name", "created_at"
     )
 
@@ -293,7 +291,7 @@ def q_weighted_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return weighted.groupBy("place_type").agg(
         F.expr(f"{qsum('weight')} AS total_weight"),
-        F.count(F.lit(1)).alias("n"),
+        F.expr("count(1) AS n"),
     )
 
 
@@ -372,19 +370,40 @@ RAW_STATUSES: list[str] = [
 
 def values_sql(statuses: list[str]) -> str:
     """The statuses as a SQL VALUES list of single-quoted literals, each
-    ``'`` doubled: Spark and DuckDB both read ``''`` as one quote. (Spark
-    also reads backslash escapes, which DuckDB keeps: no backslash may
-    reach here.)"""
-    return ", ".join("('" + s.replace("'", "''") + "')" for s in statuses)
+    ``'`` doubled: Spark and DuckDB both read ``''`` as one quote. Spark
+    reads backslash escapes in a literal and DuckDB does not, so each
+    ``\\`` leaves the literal as ``chr(92)``, which both engines concatenate
+    alike (``||``) and fold into the VALUES row."""
+    return ", ".join(
+        "('" + s.replace("'", "''").replace("\\", "' || chr(92) || '") + "')"
+        for s in statuses
+    )
+
+
+# The point and the first place-polygon ring of a raw status, in DuckDB.
+_POINT = "CAST(json_extract(raw, '$.coordinates.coordinates') AS DOUBLE[])"
+_RING = "CAST(json_extract(raw, '$.place.bounding_box.coordinates[0]') AS DOUBLE[][])"
+
+
+def _lon_lat_sql(i: int) -> str:
+    """DuckDB form of F3 (``ingest.lon_lat``) for coordinate ``i``: the
+    point's, else the ring's mean as the same left fold as
+    ``geo.polygon_ring_centroid``, so both engines return the same bits."""
+    return (
+        f"CASE WHEN {_POINT} IS NOT NULL THEN {_POINT}[{i + 1}] "
+        f"WHEN {_RING} IS NOT NULL THEN list_reduce(list_transform({_RING}, "
+        f"v -> v[{i + 1}]), (a, y) -> a + y) / len({_RING}) END"
+    )
 
 
 # q_status_projection's DuckDB oracle over the VALUES list ``{values}``.
-STATUS_PROJECTION_SQL = """
+STATUS_PROJECTION_SQL = f"""
     SELECT json_extract_string(raw, '$.id_str') AS status_id_str,
            json_extract_string(raw, '$.user.screen_name') AS user_screen_name,
            json_extract_string(raw, '$.user.id_str') AS user_id_str,
            strptime(replace(json_extract_string(raw, '$.created_at'), ' +0000', ''),
                     '%a %b %d %H:%M:%S %Y') AS created_at,
+           CAST(NULL AS TIMESTAMP) AS deleted_at,
            coalesce(json_extract_string(raw, '$.extended_tweet.full_text'),
                     json_extract_string(raw, '$.full_text'),
                     json_extract_string(raw, '$.text'), '') AS tweet_body,
@@ -395,63 +414,36 @@ STATUS_PROJECTION_SQL = """
            CAST(json_extract(raw, '$.possibly_sensitive') AS BOOLEAN)
                AS possibly_sensitive,
            json_extract(raw, '$.coordinates.coordinates') IS NOT NULL AS has_coords,
-           CAST(json_extract(raw, '$.coordinates.coordinates[0]') AS DOUBLE)
-               AS longitude,
-           CAST(json_extract(raw, '$.coordinates.coordinates[1]') AS DOUBLE)
-               AS latitude,
+           {_lon_lat_sql(0)} AS longitude,
+           {_lon_lat_sql(1)} AS latitude,
            json_extract_string(raw, '$.place.id') AS place_id,
            json_extract_string(raw, '$.place.name') AS place_name,
            json_extract_string(raw, '$.place.full_name') AS place_full_name,
            json_extract_string(raw, '$.place.country') AS place_country,
            json_extract_string(raw, '$.place.country_code') AS place_country_code,
            json_extract_string(raw, '$.place.place_type') AS place_type,
+           json_extract_string(raw, '$.quoted_status.text') AS quoted_text,
            CAST(json_extract(raw, '$.user.friends_count') AS BIGINT) AS friends_count,
            CAST(json_extract(raw, '$.user.followers_count') AS BIGINT)
                AS followers_count
-    FROM (VALUES {values}) t(raw)
+    FROM (VALUES {{values}}) t(raw)
     """
 
 
 @query("q_status_projection", STATUS_PROJECTION_SQL.format(values=values_sql(RAW_STATUSES)))
 def q_status_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S4+F1+F2: the 19-field get_tweet_info projection over raw status
-    JSON (reference tweet_utils.py:137-178), typed from_json + to_timestamp
-    on the Twitter date format. The F3 place-centroid fallback for lon/lat
-    is exercised in tests/test_ingest.py (JSON-array averaging isn't
-    portably oracle-expressible)."""
+    """S4+F1-F3: the get_tweet_info projection over raw status JSON
+    (reference tweet_utils.py:137-178) — ``ingest.project_status``'s 22
+    columns, the F3 place-centroid fallback included."""
     return project_statuses(spark, RAW_STATUSES)
 
 
 def project_statuses(spark: SparkSession, statuses: list[str]) -> DataFrame:
-    """q_status_projection's columns for ``statuses``, read from the same
-    VALUES list as its oracle."""
+    """``ingest.project_status`` over ``statuses``, read from the same
+    VALUES list as q_status_projection's oracle."""
     from thisishappening_spark.operators.ingest import project_status
 
     # An inline VALUES relation is parsed JVM-side, with no Python-side
-    # rows to pickle. Catalyst folds it and the projections above it into
+    # rows to pickle. Catalyst folds it and the projection above it into
     # one LocalTableScan while planning, so collect() runs no Spark job.
-    raw = spark.sql(f"SELECT raw FROM VALUES {values_sql(statuses)} AS t(raw)")
-    return project_status(raw).select(
-        "status_id_str",
-        "user_screen_name",
-        "user_id_str",
-        "created_at",
-        "tweet_body",
-        "tweet_language",
-        "is_quote_status",
-        "is_reply_status",
-        "possibly_sensitive",
-        "has_coords",
-        # point coords only (centroid fallback covered in pytest): null when
-        # the status has no point coordinates, matching the oracle columns
-        F.when(F.col("has_coords"), F.col("longitude")).alias("longitude"),
-        F.when(F.col("has_coords"), F.col("latitude")).alias("latitude"),
-        "place_id",
-        "place_name",
-        "place_full_name",
-        "place_country",
-        "place_country_code",
-        "place_type",
-        "friends_count",
-        "followers_count",
-    )
+    return project_status(spark.sql(f"SELECT raw FROM VALUES {values_sql(statuses)} AS t(raw)"))

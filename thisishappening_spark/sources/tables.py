@@ -12,9 +12,8 @@ tables.
 A one-task events scan is planned as one partition (``_load_events``), so
 the per-tweet requests above it run without a hash shuffle that AQE would
 only coalesce back into one partition; a table at scale keeps its
-exchanges. Only ``events`` takes this rule: the ``documents`` dedup plans
-rely on their bucket exchanges (``test_dictionary_rank_reuses_bucket_exchange``)
-and the n-gram Jaccard join cost more CPU on one task.
+exchanges. Only ``events`` takes this rule: on one task the ``documents``
+n-gram Jaccard join measured more CPU.
 """
 
 from __future__ import annotations

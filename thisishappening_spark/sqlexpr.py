@@ -7,7 +7,18 @@ separate Py4J call while the DataFrame is built; a request builds its
 DataFrame on every run, so building it is part of the request's cost.
 Literals are rendered with explicit types so a string parses to the tree
 the Column form would build: ``flit`` for DOUBLE (``F.lit(float)``),
-``sql_str`` for string literals with Spark's backslash escaping.
+``sql_str`` for string literals with Spark's backslash escaping. Where an
+API takes only Columns (``agg``, ``groupBy`` keys, join conditions), the
+string is wrapped in ``F.expr``; a raw status schema is a DDL type string
+too (``ingest.STATUS_DDL``).
+
+A Column stays in three places, where no string form exists:
+
+- sort keys, ``orderBy(F.desc(...), F.asc(...))``: ``F.expr("x DESC")``
+  parses as ``x AS DESC``, an alias, and sorts ascending without an error;
+- the Arrow UDF's call and the ``posexplode`` of its result
+  (``similarity.ann_lsh_topk``);
+- the ``F.broadcast`` join hints.
 """
 
 from __future__ import annotations

@@ -33,10 +33,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warmup: force JVM init, parquet footer reads, codegen compilation.
-    # r21: warm up through the same noop sink the timed runs use — .count()
-    # lets the optimizer prune the aggregate's value columns (guide §1.4),
-    # so the warmup never compiled the codegen the timed runs execute.
-    # Timed methodology (median of N noop-sink runs per query) unchanged.
+    # Warm up through the same noop sink the timed runs use: .count() lets
+    # the optimizer prune the aggregate's value columns, so it would not
+    # compile the generated code the timed runs execute.
     REGISTRY["q01_pricing_summary"].fn(spark, SF_DIR).write.format("noop").mode(
         "overwrite"
     ).save()

@@ -1,12 +1,11 @@
-"""Plan text for shape assertions, taken from what Spark executed."""
+"""Plan text for shape assertions, taken from what Spark executed. Every
+plan-shape test reads its plan through :func:`final_plan`: AQE re-plans a
+query while it runs (stage by stage, reusing exchanges and coalescing
+partitions as it goes), so only the plan after execution shows what ran."""
 
 from __future__ import annotations
 
 import re
-
-
-def executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def final_plan(df) -> str:
@@ -16,7 +15,7 @@ def final_plan(df) -> str:
     scan under a ``TakeOrderedAndProject``) ran as it is and is returned
     whole."""
     df.collect()
-    plan = executed_plan(df)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     if "AdaptiveSparkPlan" not in plan:
         return plan
     assert "isFinalPlan=true" in plan, plan

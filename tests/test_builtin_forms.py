@@ -1,9 +1,10 @@
 """Built-in expressions that replaced interpreted lambdas must return the
 rows of the lambda forms they replaced, which are kept here as references:
 ``doc_quality``'s mean token length is ``(length(text) - n_tok + 1) /
-n_tok`` instead of an ``aggregate`` over the split tokens, and
+n_tok`` instead of an ``aggregate`` over the split tokens,
 ``q_collect_sorted_ids`` casts its id array to ``ARRAY<STRING>`` instead of
-a ``transform`` of each element."""
+a ``transform`` of each element, and ``similarity.double_vec`` widens an
+embedding with ``CAST(… AS ARRAY<DOUBLE>)`` instead of a ``transform``."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from thisishappening_spark.operators.similarity import double_vec
 from thisishappening_spark.operators.textstats import doc_quality
 from thisishappening_spark.queries import REGISTRY
 from thisishappening_spark.sources.tables import load_table
@@ -109,3 +111,51 @@ def test_id_cast_matches_transform_form_on_test_data(spark, sf_dir):
     got = _cast_ids(spark, sf_dir)
     assert got
     assert got == _transform_ids(load_table(spark, sf_dir, "events"))
+
+
+TRANSFORM_DOUBLE_VEC = "transform(embedding, x -> CAST(x AS DOUBLE))"
+
+FLOAT_MAX = 3.4028234663852886e38
+FLOAT_SUBNORMALS = [2.0**-149, -(2.0**-149), 2.0**-127]
+EDGE_VECS = [
+    [float("nan"), 0.0, -0.0, float("inf"), float("-inf")],
+    FLOAT_SUBNORMALS + [FLOAT_MAX, -FLOAT_MAX, 1.0, -0.1],
+    [0.5, None, -2.5],
+    [],
+    None,
+]
+
+
+def _hex_vecs(emb: DataFrame) -> tuple[list, list]:
+    """(vec_id, each element as ``float.hex``) from ``double_vec`` and from
+    the ``transform`` form, both sorted by vec_id: ``float.hex`` tells
+    -0.0 from 0.0 and prints every bit of the mantissa."""
+    rows = emb.selectExpr(
+        "vec_id", f"{double_vec('embedding')} AS got", f"{TRANSFORM_DOUBLE_VEC} AS want"
+    ).collect()
+
+    def hexes(v):
+        return None if v is None else [None if x is None else x.hex() for x in v]
+
+    got = sorted((r.vec_id, hexes(r.got)) for r in rows)
+    want = sorted((r.vec_id, hexes(r.want)) for r in rows)
+    return got, want
+
+
+def test_double_vec_cast_matches_transform_form_on_edge_floats(spark):
+    emb = spark.createDataFrame(
+        list(enumerate(EDGE_VECS)), "vec_id bigint, embedding array<float>"
+    )
+    got, want = _hex_vecs(emb)
+    assert got == want
+    by_id = dict(got)
+    assert by_id[0] == ["nan", "0x0.0p+0", "-0x0.0p+0", "inf", "-inf"]
+    assert by_id[1][:4] == [x.hex() for x in FLOAT_SUBNORMALS + [FLOAT_MAX]]
+    assert by_id[2][1] is None
+    assert by_id[3] == [] and by_id[4] is None
+
+
+def test_double_vec_cast_matches_transform_form_on_test_data(spark, sf_dir):
+    got, want = _hex_vecs(load_table(spark, sf_dir, "embeddings"))
+    assert got
+    assert got == want

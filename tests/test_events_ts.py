@@ -2,8 +2,9 @@
 (which Spark reads as TIMESTAMP_NTZ) and as UTC-adjusted microseconds.
 ``load_table`` must turn each into the same ``ts``/``ts_ns`` columns, both
 in the session ``get_spark`` builds and in a new session of it with
-``nanosAsLong`` set off. Neither starts with it on, so ``_load_events``
-switches it on itself in both when the footer declares nanos."""
+``nanosAsLong`` set off. ``_load_events`` reads a nanos ``ts`` as BIGINT
+through a user schema taken from the parquet footer, so neither session
+needs the setting on, and the load leaves it as it found it."""
 
 from __future__ import annotations
 
@@ -55,3 +56,5 @@ def test_events_ts_encodings_load_alike(spark, tmp_path, vanilla):
         ).collect()
         assert [(r.event_id, r.us) for r in rows] == want, kind
         assert [r.ts_ns for r in rows] == [us * 1000 for _, us in want], kind
+        if vanilla and kind == "nanos":
+            assert session.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"

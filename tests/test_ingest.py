@@ -153,3 +153,46 @@ def test_status_projection_reads_a_backslash_like_its_oracle(spark):
     want = duckdb.sql(f"SELECT {', '.join(cols)} FROM ({oracle})").fetchall()
     assert sorted(got, key=repr) == sorted(want, key=repr)
     assert {r[0]: r[1] for r in got}["5003"] == text
+
+
+def test_status_projection_reads_an_empty_ring_as_nan(spark):
+    """A place ring with no vertex has NaN coordinates on both engines, as
+    the reference's ``np.mean`` of nothing, instead of failing the batch
+    (a division by zero in Spark, an empty ``list_reduce`` in DuckDB).
+    NaN lies outside every bounding box, so admission with one drops the
+    row on both engines."""
+    import math
+
+    import duckdb
+
+    from thisishappening_spark.functions.geo import BoundingBox
+    from thisishappening_spark.operators.admission import AdmissionConfig, admit
+    from thisishappening_spark.queries.tweets import (
+        RAW_STATUSES,
+        STATUS_PROJECTION_SQL,
+        project_statuses,
+        values_sql,
+    )
+
+    from tests.oracle import assert_same_rows
+
+    empty = dict(PLACE, bounding_box={"type": "Polygon", "coordinates": [[]]})
+    statuses = RAW_STATUSES + [_status(id_str="5004", place=empty)]
+    got = project_statuses(spark, statuses)
+    oracle = STATUS_PROJECTION_SQL.format(values=values_sql(statuses))
+    assert_same_rows("q_status_projection", got, duckdb.sql(oracle))
+    row = got.filter("status_id_str = '5004'").first()
+    assert math.isnan(row.longitude) and math.isnan(row.latitude)
+
+    world = BoundingBox(west=-180.0, south=-90.0, east=180.0, north=90.0)
+
+    def admitted(cfg):
+        return {r.status_id_str for r in admit(got, cfg).select("status_id_str").collect()}
+
+    assert "5004" in admitted(AdmissionConfig())
+    assert "5004" not in admitted(AdmissionConfig(bounding_box=world))
+    in_world = duckdb.sql(
+        f"SELECT status_id_str FROM ({oracle}) WHERE longitude >= -180 AND "
+        "longitude <= 180 AND latitude >= -90 AND latitude <= 90"
+    ).fetchall()
+    assert ("5004",) not in in_world

@@ -6,9 +6,11 @@ lattice diversity — plus plan guards on the dedup and ANN operators."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 
+from tests.executed_plans import final_plan
 from tests.oracle import compare
 
 DIFF_QUERIES = [
@@ -245,18 +247,18 @@ def test_ngram_jaccard_reuses_postings_exchange(spark, sf_dir):
     groupBy(shingle) postings subtree and relies on exchange reuse so the
     shingle lineage runs once per action. The reuse fires at AQE stage
     materialization (the pre-execution plan shows three copies), so assert
-    on the EXECUTED plan — a Spark upgrade that breaks reuse triples the
-    most expensive subtree and must fail here."""
+    on the final plan that the shingle exchange itself is read back as a
+    ReusedExchange (the per-doc sizes broadcast is reused too, which says
+    nothing about the postings) — a Spark upgrade that breaks reuse
+    triples the most expensive subtree and must fail here."""
     from thisishappening_spark.operators.dedup import jaccard_pairs
     from thisishappening_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    df = jaccard_pairs(docs)
-    df.collect()  # materialize so the AQE final plan (with reuse) exists
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan, (
+    plan = final_plan(jaccard_pairs(docs))
+    assert re.search(r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(shingle#", plan), (
         "groupBy(shingle) postings exchange no longer reused — "
-        "shingle lineage now recomputes per consumer"
+        "shingle lineage now recomputes per consumer\n" + plan
     )
 
 
@@ -286,21 +288,16 @@ def test_ann_dedups_candidates_before_rerank(spark, sf_dir):
     projection (the zip_with dot) therefore sits ABOVE the distinct
     HashAggregate; if scoring moves back below the dedup this ordering
     flips. Also pin: the bucket UDF evaluates once per side (2 Arrow
-    nodes), never more (guide §4.4 duplication)."""
+    nodes), never more."""
     from thisishappening_spark.operators.similarity import ann_lsh_topk
     from thisishappening_spark.queries.llm import COSINE_QUERY_IDS
     from thisishappening_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    df = ann_lsh_topk(emb, COSINE_QUERY_IDS)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # AQE's toString prints the final plan followed by the initial plan —
-    # assert on the final (executed) section only.
-    plan = plan.split("== Initial Plan ==")[0]
+    plan = final_plan(ann_lsh_topk(emb, COSINE_QUERY_IDS))
     assert plan.count("ArrowEvalPython") <= 2, "bucket UDF evaluated >2x"
-    # r22: the dedup is a first()-aggregate keyed on (query_id, vid) and
-    # may plan as Sort/Hash/ObjectHashAggregate depending on AQE sizing.
+    # The dedup is a first()-aggregate keyed on (query_id, vid) and may
+    # plan as Sort/Hash/ObjectHashAggregate depending on AQE sizing.
     assert "zip_with" in plan and "Aggregate" in plan
     assert plan.index("zip_with") < plan.index("Aggregate"), (
         "exact rerank runs below the candidate dedup — every bucket "

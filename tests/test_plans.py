@@ -1,10 +1,9 @@
-"""Physical-plan assertions: the shapes VERDICT flagged as perf-weak must
-stay fixed (no global sort on the unordered recent_tweets path, no
-nested-loop join in the sliding-window count), plus shapes checked on the
-executed (final AQE) plan of registry queries: no shuffle after a
-one-row-group events scan, the exchanges kept when events has more row
-groups, token ids taken in the row with no dictionary join, and the
-status projection folded into a local scan that runs no job."""
+"""Physical-plan assertions, each on the executed (final AQE) plan: no
+global sort on the unordered recent_tweets path and the O1 sort kept on
+the ordered one, no nested-loop join in the sliding-window count, no
+shuffle after a one-row-group events scan, the exchanges kept when events
+has more row groups, token ids taken in the row with no dictionary join,
+and the status projection folded into a local scan that runs no job."""
 
 from __future__ import annotations
 
@@ -21,7 +20,7 @@ from thisishappening_spark.plans.recent_tweets import recent_tweets
 from thisishappening_spark.sources.tables import _scan_row_groups, load_table
 from thisishappening_spark.sources.tweets_view import load_tweets
 
-from tests.executed_plans import executed_plan, final_plan, reused_bucket_exchanges
+from tests.executed_plans import final_plan, reused_bucket_exchanges
 from tests.oracle import compare
 
 BBOX = BoundingBox(west=-71.15, south=42.25, east=-70.95, north=42.45)
@@ -42,21 +41,15 @@ def test_recent_tweets_unordered_has_no_sort(spark, sf_dir):
         hours=48,
         bounding_box=BBOX,
     )
-    assert "Sort" not in executed_plan(df)
+    assert "Sort" not in final_plan(df)
 
 
 def test_recent_tweets_ordered_keeps_o1_sort(spark, sf_dir):
-    from thisishappening_spark.queries import REGISTRY
-
-    df = REGISTRY["q_recent_tweets_stack"].fn(spark, sf_dir)
-    assert "Sort" in executed_plan(df)
+    assert "Sort" in _final_plan(spark, sf_dir, "q_recent_tweets_stack")
 
 
 def test_sliding_window_counts_no_nested_loop(spark, sf_dir):
-    from thisishappening_spark.queries import REGISTRY
-
-    df = REGISTRY["q_sliding_window_counts"].fn(spark, sf_dir)
-    assert "NestedLoop" not in executed_plan(df)
+    assert "NestedLoop" not in _final_plan(spark, sf_dir, "q_sliding_window_counts")
 
 
 def test_sliding_window_counts_scans_events_once(spark, sf_dir):
@@ -82,7 +75,7 @@ def test_status_projection_is_folded_into_a_local_scan(spark, sf_dir):
     from thisishappening_spark.queries.tweets import RAW_STATUSES
 
     df = REGISTRY["q_status_projection"].fn(spark, sf_dir)
-    plan = executed_plan(df)
+    plan = final_plan(df)
     assert plan.startswith("LocalTableScan") and "\n" not in plan.strip(), plan
     sc = spark.sparkContext
     group = "test-status-projection-jobs"
@@ -186,7 +179,7 @@ def test_multi_row_group_events_keep_their_exchanges(spark, sf_dir, tmp_path):
     )
     assert pq.ParquetFile(os.path.join(other, "events.parquet")).num_row_groups >= 2
 
-    assert "Coalesce" not in executed_plan(load_table(spark, other, "events"))
+    assert "Coalesce" not in final_plan(load_table(spark, other, "events"))
     assert "Exchange hashpartitioning" in _final_plan(spark, other, "q_weighted_activity")
     for name in SCALE_PATH_QUERIES:
         compare(spark, other, name)

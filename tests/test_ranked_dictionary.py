@@ -1,7 +1,7 @@
-"""Two-phase bucketed dictionary rank (r22, VERDICT item 4): must assign
-exactly the ids the old single-partition ``row_number() OVER (ORDER BY
-key)`` assigned, while keeping the big sort partitioned (no
-single-partition Exchange of the dictionary keys in the benched path)."""
+"""Two-phase bucketed dictionary rank: must assign exactly the ids a
+single-partition ``row_number() OVER (ORDER BY key)`` assigns, while
+keeping the big sort partitioned (no single-partition Exchange of the
+dictionary keys)."""
 
 from __future__ import annotations
 

@@ -1,4 +1,4 @@
-"""Focused tests for the r21 SQL-expression-string helpers (sqlexpr.py).
+"""Focused tests for the SQL-expression-string helpers (sqlexpr.py).
 
 The whole point of the string convention is that a rendered literal must
 parse back to the exact expression the Column form built — same value AND
@@ -67,9 +67,8 @@ def test_in_list_empty_is_false_not_parse_error(spark):
 
 
 def test_admission_empty_place_types_compiles(spark):
-    """valid_place_types=() previously rendered 'IN ()' — a ParseException
-    (ADVICE r21). It must compile to isin([]) semantics: keep only rows
-    with coordinates."""
+    """valid_place_types=() must not render 'IN ()', a ParseException. It
+    must compile to isin([]) semantics: keep only rows with coordinates."""
     from thisishappening_spark.operators.admission import AdmissionConfig, admit
 
     df = spark.createDataFrame(

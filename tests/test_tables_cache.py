@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from thisishappening_spark.sources.tables import _RELATION_CACHE, load_table
 
+from tests.executed_plans import final_plan
+
 
 def test_load_table_reuses_relation_within_session(spark, sf_dir):
     a = load_table(spark, sf_dir, "documents")
@@ -43,9 +45,9 @@ def test_fan_out_redistributes_narrow_scan_same_rows(spark, sf_dir):
     base = load_table(spark, sf_dir, "documents")
     fanned = load_table(spark, sf_dir, "documents", fan_out=True)
     assert fanned is not base
-    assert "RoundRobinPartitioning" in fanned._jdf.queryExecution().analyzed().toString() or (
-        "Repartition" in fanned._jdf.queryExecution().analyzed().toString()
-    )
+    n = spark.sparkContext.defaultParallelism
+    plan = final_plan(fanned)
+    assert f"Exchange RoundRobinPartitioning({n})," in plan, plan
     assert {tuple(r) for r in fanned.collect()} == {tuple(r) for r in base.collect()}
     # cached separately from the plain relation, and reused on re-call
     assert load_table(spark, sf_dir, "documents", fan_out=True) is fanned
@@ -60,15 +62,15 @@ def test_fan_out_is_noop_when_row_groups_cover_parallelism(spark, sf_dir, tmp_pa
     # many files => many row groups (>= one per file)
     base.repartition(n).write.mode("overwrite").parquet(f"{other}/documents.parquet")
     fanned = load_table(spark, other, "documents", fan_out=True)
-    plan = fanned._jdf.queryExecution().analyzed().toString()
-    assert "Repartition" not in plan, "wide layout must not be redistributed"
+    plan = final_plan(fanned)
+    assert "RoundRobinPartitioning" not in plan, "wide layout must not be redistributed"
 
 
 def test_scan_row_groups_short_circuits_on_file_count(tmp_path, monkeypatch):
     """A table with >= threshold parquet files must be classified 'wide'
-    from the file count ALONE — zero footer reads (VERDICT r21 item 2:
-    at 100 TB a fan-out table has thousands of files and a per-file
-    driver-side footer scan is itself the scale hazard)."""
+    from the file count ALONE — zero footer reads: at 100 TB a fan-out
+    table has thousands of files, and a per-file driver-side footer scan
+    would itself be the scale hazard."""
     import pyarrow.parquet as pq
 
     from thisishappening_spark.sources.tables import _scan_row_groups
@@ -88,8 +90,8 @@ def test_scan_row_groups_short_circuits_on_file_count(tmp_path, monkeypatch):
 
 def test_scan_row_groups_counts_nested_layouts(spark, sf_dir, tmp_path):
     """A partitioned/nested layout (files under subdirectories) must be
-    counted recursively — r21's top-level listing returned 0 and fanned
-    out a production-shaped input (ADVICE r21)."""
+    counted recursively: a top-level listing finds no file there, counts
+    0 row groups and would fan out a production-shaped input."""
     from thisishappening_spark.sources.tables import _scan_row_groups
 
     base = load_table(spark, sf_dir, "documents")
@@ -109,8 +111,8 @@ def test_scan_row_groups_noops_on_non_posix_paths():
 
 
 def test_invalidate_relation_cache_picks_up_rewritten_data(spark, sf_dir, tmp_path):
-    """The cache pins the file listing per path (catalog-like staleness,
-    ADVICE r21); invalidate_relation_cache must make the next load re-list."""
+    """The cache pins the file listing per path (catalog-like staleness);
+    invalidate_relation_cache must make the next load re-list."""
     from thisishappening_spark.sources.tables import invalidate_relation_cache
 
     other = str(tmp_path / "sfMut")

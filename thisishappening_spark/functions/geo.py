@@ -50,15 +50,18 @@ def polygon_ring_centroid(ring: str) -> tuple[str, str]:
     """F3: arithmetic-mean centroid of a polygon ring given as
     array<array<double>> of [lon, lat] vertices — including any duplicated
     closing vertex, exactly like the reference's `np.mean` over the raw ring
-    (reference tweet_utils.py:107-121).
+    (reference tweet_utils.py:107-121). An empty ring has NaN coordinates,
+    as `np.mean` of nothing does, instead of failing the batch on a
+    division by zero.
 
     Takes and returns SQL expression strings (sqlexpr.py), so the ingest
     projection composes its whole select as one parsed string."""
 
     def mean(idx: int) -> str:
         return (
-            f"aggregate(transform({ring}, v -> v[{idx}]), CAST(0 AS DOUBLE), "
-            f"(acc, x) -> acc + x) / CAST(size({ring}) AS DOUBLE)"
+            f"CASE WHEN size({ring}) = 0 THEN CAST('NaN' AS DOUBLE) "
+            f"ELSE aggregate(transform({ring}, v -> v[{idx}]), CAST(0 AS DOUBLE), "
+            f"(acc, x) -> acc + x) / CAST(size({ring}) AS DOUBLE) END"
         )
 
     return mean(0), mean(1)

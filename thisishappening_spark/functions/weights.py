@@ -65,7 +65,7 @@ def with_activity_weight(
     insertion order; a distributed engine needs an explicit key).
     """
     # Caller-supplied column names interpolate into parsed SQL: quote them
-    # so names needing backticks keep working (same attribute as F.col()).
+    # so names needing backticks keep working (same attribute as ``col()``).
     user_col, time_col = ident(user_col), ident(time_col)
     order_cols = tuple(ident(o) for o in order_cols)
 

@@ -147,7 +147,7 @@ def ranked_dictionary(keys: DataFrame, key_col: str, id_col: str) -> DataFrame:
     A row_number over a Window with no PARTITION BY would be a
     single-partition Exchange + Sort of every distinct key. Instead, two
     phases parallelize the sort and shuffle only metadata for the
-    cross-partition fix-up (guide §2.2/§2.5):
+    cross-partition fix-up:
 
     1. bucket = first ``DICT_BUCKET_CHARS`` chars of the key (order-
        preserving, deterministic — unlike range partitioning, whose
@@ -204,9 +204,9 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
 def _band_table(signatures: DataFrame) -> DataFrame:
     """One scan of the signatures → (doc_id, sig array, band, band_key).
 
-    A single ``explode`` of the per-row array of band structs replaces the
-    old LSH_BANDS-way union, so the (possibly expensive) signature lineage
-    is traversed once per action rather than once per band. The full
+    A single ``explode`` of the per-row array of band structs, so the
+    (possibly expensive) signature lineage is traversed once per action
+    rather than once per band, as a union of LSH_BANDS scans would. The full
     signature rides along as an array so downstream pair scoring needs no
     join back to the signatures.
     """

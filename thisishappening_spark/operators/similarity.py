@@ -66,10 +66,11 @@ _LATTICE = (
 
 def double_vec(col: str) -> str:
     """array<float> → array<double> so arithmetic runs in IEEE double on
-    every engine (float math widens differently between engines). Takes a
-    column name and returns a SQL string, as this module's helpers do
-    (sqlexpr.py)."""
-    return f"transform({col}, x -> CAST(x AS DOUBLE))"
+    every engine (float math widens differently between engines). Widening
+    a float to a double is exact, so one built-in cast gives the bits an
+    element-wise ``transform`` lambda would. Takes a column name and
+    returns a SQL string, as this module's helpers do (sqlexpr.py)."""
+    return f"CAST({col} AS ARRAY<DOUBLE>)"
 
 
 def as_double_vec(col: str) -> Column:

@@ -24,7 +24,7 @@ from thisishappening_spark.sqlexpr import in_list, sql_str
 
 
 def _ts_lit(t: dt.datetime) -> str:
-    """A datetime as a TIMESTAMP literal — same value F.lit(datetime)
+    """A datetime as a TIMESTAMP literal — same value ``lit(datetime)``
     produced under the pinned-UTC session. Aware datetimes are converted
     to their UTC wall time first: formatting the naive field values of a
     non-UTC aware datetime would silently shift the window by the offset,

@@ -388,9 +388,11 @@ _RING = "CAST(json_extract(raw, '$.place.bounding_box.coordinates[0]') AS DOUBLE
 def _lon_lat_sql(i: int) -> str:
     """DuckDB form of F3 (``ingest.lon_lat``) for coordinate ``i``: the
     point's, else the ring's mean as the same left fold as
-    ``geo.polygon_ring_centroid``, so both engines return the same bits."""
+    ``geo.polygon_ring_centroid``, so both engines return the same bits;
+    NaN for an empty ring, whose ``list_reduce`` this CASE never runs."""
     return (
         f"CASE WHEN {_POINT} IS NOT NULL THEN {_POINT}[{i + 1}] "
+        f"WHEN len({_RING}) = 0 THEN 'NaN'::DOUBLE "
         f"WHEN {_RING} IS NOT NULL THEN list_reduce(list_transform({_RING}, "
         f"v -> v[{i + 1}]), (a, y) -> a + y) / len({_RING}) END"
     )

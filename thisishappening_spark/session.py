@@ -40,8 +40,9 @@ Left at Spark's default on purpose: Arrow conversion
 (``spark.sql.execution.arrow.pyspark.enabled`` acts only on ``toPandas``
 and on ``createDataFrame`` from pandas, which nothing here calls; the
 Arrow UDF batches through Arrow regardless) and
-``spark.sql.legacy.parquet.nanosAsLong``, which ``sources/tables.py`` sets
-from the parquet footer on whatever session it reads with.
+``spark.sql.legacy.parquet.nanosAsLong``: ``sources/tables.py`` reads a
+nanos ``ts`` as BIGINT through a user schema taken from the parquet
+footer, which needs no setting and changes no session it reads with.
 
 Class-data-sharing archive
 --------------------------

@@ -23,16 +23,16 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Session-scoped relation cache: resolving `spark.read.parquet(path)` pays
-# driver-side file listing + parquet schema inference on EVERY call (measured
-# 0.15-0.5 s per call at sf0.1 — the dominant share of the per-query floor,
-# paid 3×38 times per bench run). A catalog-backed table resolves once and
-# reuses the relation; this cache gives path-based reads the same behavior
-# (optimization guide §6 "file listing ... is cached per session"). Only the
-# *relation* (file list + schema, an unexecuted plan) is reused — no rows are
-# cached or persisted; every action still scans the parquet input. Keyed
-# weakly per SparkSession so a stopped session drops its entries, and by
-# (absolute path, fan_out) so different scale-factor dirs never collide.
+from thisishappening_spark.sqlexpr import ident
+
+# Session-scoped relation cache: resolving `spark.read.parquet(path)` lists
+# the files and infers the parquet schema on the driver on every call, a
+# per-request cost a catalog table pays once. This cache gives path-based
+# reads the same behavior. Only the *relation* (file list + schema, an
+# unexecuted plan) is reused — no rows are cached or persisted; every action
+# still scans the parquet input. Keyed weakly per SparkSession so a stopped
+# session drops its entries, and by (absolute path, fan_out) so different
+# scale-factor dirs never collide.
 _RELATION_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, bool], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
@@ -104,14 +104,14 @@ def _scan_row_groups(path: str, threshold: int) -> int:
 def _fan_out_narrow_scan(spark: SparkSession, path: str, df: DataFrame) -> DataFrame:
     """Round-robin-redistribute a scan whose parquet layout serializes it.
 
-    The guide's input-skew rule (§2.5 "one huge unsplittable file …
-    otherwise repartition immediately after the read") applied to row
-    groups: a file with fewer row groups than the session has cores cannot
-    scan in parallel, so everything fused into the scan stage (interpreted
-    higher-order transforms, decimal arithmetic, map-side partials) runs
-    on the narrow task set too. Scale-adaptive by construction: the target
-    is ``defaultParallelism`` (cores locally, cluster cores at scale — NOT
-    a constant), and a production-sized input with ≥ that many row groups
+    An input-skew rule (repartition right after reading an input that
+    cannot be split) applied to row groups: a file with fewer row groups
+    than the session has cores cannot scan in parallel, so everything
+    fused into the scan stage (interpreted higher-order transforms,
+    decimal arithmetic, map-side partials) runs on the narrow task set
+    too. Scale-adaptive by construction: the target is
+    ``defaultParallelism`` (cores locally, cluster cores at scale — NOT a
+    constant), and a production-sized input with ≥ that many row groups
     is returned untouched, so at 100 TB this is a no-op and the exchange
     only ever exists where the input layout was the bottleneck."""
     parallelism = spark.sparkContext.defaultParallelism
@@ -122,12 +122,16 @@ def _fan_out_narrow_scan(spark: SparkSession, path: str, df: DataFrame) -> DataF
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
     """events.ts has shipped as parquet TIMESTAMP(NANOS) in some rounds and
-    timestamp[us] in others, so handle every dtype the reader can surface:
+    timestamp[us] in others. Every decision is taken from the parquet
+    footer's arrow schema (a driver-side pyarrow read, no Spark job), so
+    the caller's session is read with and never changed:
 
-    - TIMESTAMP(NANOS): Spark's reader rejects it (PARQUET_TYPE_ILLEGAL)
-      unless nanos are read as long; floor-truncate the BIGINT to a
-      microsecond timestamp (the same truncation DuckDB applies casting
-      TIMESTAMP_NS to TIMESTAMP).
+    - TIMESTAMP(NANOS), or nanoseconds as a plain int64: Spark's reader
+      rejects a nanos timestamp (PARQUET_TYPE_ILLEGAL) unless it reads it
+      as a long, which it does under a user schema that declares ``ts``
+      BIGINT. The BIGINT is floor-truncated to a microsecond timestamp
+      (the same truncation DuckDB applies casting TIMESTAMP_NS to
+      TIMESTAMP).
     - anything else is cast to TIMESTAMP. timestamp[us] without timezone
       reads as TIMESTAMP_NTZ; the session timezone is pinned UTC
       (session.py), so the cast is value-preserving and keeps every
@@ -137,13 +141,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     `ts_ns` keeps nanosecond resolution for deterministic orderings in the
     bigint branch; otherwise it is microsecond-derived (sub-microsecond
     digits zero) — still a strictly monotone ordering key for this data.
-
-    The legacy conf is only flipped when the footer actually declares a
-    nanos timestamp (checked driver-side via the pyarrow footer — no Spark
-    job, no failed-task noise), so a session whose reader handles it is
-    never mutated. It must then stay set for the lifetime of the scan —
-    Spark consults it at execution, not just plan time, so
-    restore-after-read would break the returned DataFrame.
+    ``ts`` keeps its place among the columns and ``ts_ns`` comes last.
 
     A table of fewer than 2 row groups is read by one task anyway, so the
     scan is returned as ``coalesce(1)``: ``CoalesceExec(1)`` reports
@@ -156,24 +154,27 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     listing: no request pays a footer read, and a table rewritten with
     more row groups is seen only after ``invalidate_relation_cache``.
     """
+    import pyarrow as pa
     import pyarrow.dataset as pa_ds
     import pyarrow.types as pa_types
-    from pyspark.sql import functions as F
 
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        arrow_schema = pa_ds.dataset(path, format="parquet").schema
-        ts_field = arrow_schema.field("ts") if "ts" in arrow_schema.names else None
-        if ts_field is not None and pa_types.is_timestamp(ts_field.type) and ts_field.type.unit == "ns":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    arrow_schema = pa_ds.dataset(path, format="parquet", partitioning="hive").schema
+    ts_type = arrow_schema.field("ts").type
+    if pa_types.is_int64(ts_type) or (pa_types.is_timestamp(ts_type) and ts_type.unit == "ns"):
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        as_long = arrow_schema.set(arrow_schema.get_field_index("ts"), pa.field("ts", pa.int64()))
+        df = spark.read.schema(from_arrow_schema(as_long)).parquet(path)
+        ts, ts_ns = "timestamp_micros(ts DIV 1000)", "ts"
+    else:
+        df = spark.read.parquet(path)
+        ts, ts_ns = "CAST(ts AS TIMESTAMP)", "unix_micros(CAST(ts AS TIMESTAMP)) * 1000"
     if _scan_row_groups(path, 2) < 2:
         df = df.coalesce(1)
-    if dict(df.dtypes).get("ts") == "bigint":
-        return df.withColumn("ts_ns", F.col("ts")).withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-        )
-    df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df.withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000))
+    return df.selectExpr(
+        *(f"{ts} AS ts" if name == "ts" else ident(name) for name in arrow_schema.names),
+        f"{ts_ns} AS ts_ns",
+    )
 
 
 def invalidate_relation_cache(spark: SparkSession, path: str) -> None:

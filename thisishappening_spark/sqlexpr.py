@@ -6,7 +6,7 @@ expressions as SQL strings, parsed once by ``F.expr``/``selectExpr``/
 separate Py4J call while the DataFrame is built; a request builds its
 DataFrame on every run, so building it is part of the request's cost.
 Literals are rendered with explicit types so a string parses to the tree
-the Column form would build: ``flit`` for DOUBLE (``F.lit(float)``),
+the Column form would build: ``flit`` for DOUBLE (``lit(float)``),
 ``sql_str`` for string literals with Spark's backslash escaping. Where an
 API takes only Columns (``agg``, ``groupBy`` keys, join conditions), the
 string is wrapped in ``F.expr``; a raw status schema is a DDL type string
@@ -36,7 +36,7 @@ def ident(name: str) -> str:
     """Backtick-quote a column name for interpolation into parsed SQL
     (embedded backticks escape by doubling, Spark's rule). Caller-supplied
     names (config column bindings) may contain spaces, hyphens or reserved
-    words that ``F.col()`` accepted but a bare interpolation would
+    words that ``col()`` accepted but a bare interpolation would
     mis-parse; the quoted form resolves to the identical attribute."""
     return "`" + name.replace("`", "``") + "`"
 
@@ -50,6 +50,6 @@ def in_list(col: str, rendered: list[str]) -> str:
 
 def flit(x: float) -> str:
     """Render a Python float as a Spark-SQL DOUBLE literal (the ``D``
-    suffix), matching ``F.lit(<float>)`` typing — a bare ``-71.15`` would
+    suffix), matching ``lit(<float>)`` typing — a bare ``-71.15`` would
     parse as DECIMAL(4,2) and change comparison coercions."""
     return f"{float(x)!r}D"

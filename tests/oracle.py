@@ -31,10 +31,19 @@ TABLE_NAMES = [
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table under ``sf_dir``. A
+    directory table is read from the file list the package's loader uses
+    (``sources.tables._table_files``), since DuckDB's ``read_parquet``
+    finds no files in a bare directory."""
+    from thisishappening_spark.sources.tables import _table_files
+
     con = duckdb.connect()
     for t in TABLE_NAMES:
         path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
+        if os.path.isdir(path):
+            files = ", ".join(f"'{f}'" for f in _table_files(path))
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet([{files}])")
+        elif os.path.exists(path):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
 

@@ -170,15 +170,14 @@ def test_hyperplane_buckets_diverse(spark, sf_dir):
     which silently turns ANN into brute force). Tables 0 and 1 of the ANN
     operator's bucket UDF together are the lattice's first 8 planes, so
     bucket[0] + 16 * bucket[1] is the 8-bit sign code of those planes."""
-    from thisishappening_spark.operators.similarity import (
-        as_double_vec,
-        lsh_buckets_udf,
-    )
+    from pyspark.sql import functions as F
+
+    from thisishappening_spark.operators.similarity import double_vec, lsh_buckets_udf
     from thisishappening_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     buckets = (
-        emb.select(lsh_buckets_udf()(as_double_vec("embedding")).alias("b"))
+        emb.select(lsh_buckets_udf()(F.expr(double_vec("embedding"))).alias("b"))
         .selectExpr("b[0] + 16 * b[1] AS bucket")
         .groupBy("bucket")
         .count()
@@ -197,10 +196,12 @@ def test_bucket_udf_matches_oracle_buckets(spark, sf_dir):
     index itself and not only the rows it leads to. Prints the smallest
     |projection|: the margin by which no sign bit can differ between the
     engines' summation orders."""
+    from pyspark.sql import functions as F
+
     from thisishappening_spark.operators.similarity import (
         LSH_TABLES,
         PLANES_PER_TABLE,
-        as_double_vec,
+        double_vec,
         lsh_buckets_udf,
     )
     from thisishappening_spark.queries.llm import _ANN_BUCKETS, _HP_DOT
@@ -209,7 +210,7 @@ def test_bucket_udf_matches_oracle_buckets(spark, sf_dir):
     from tests.oracle import duckdb_conn
 
     emb = load_table(spark, sf_dir, "embeddings")
-    rows = emb.select("vec_id", lsh_buckets_udf()(as_double_vec("embedding")).alias("b"))
+    rows = emb.select("vec_id", lsh_buckets_udf()(F.expr(double_vec("embedding"))).alias("b"))
     got = {(r["vec_id"], t): b for r in rows.collect() for t, b in enumerate(r["b"])}
     con = duckdb_conn(sf_dir)
     want = {
@@ -341,13 +342,15 @@ def test_cosine_fold_matches_duckdb_bit_for_bit(spark, sf_dir):
     oracle's DuckDB fold must return identical bits for every vector's
     squared norm and every query × corpus dot — compared with ==, no
     tolerance."""
+    from pyspark.sql import functions as F
+
     from tests.oracle import duckdb_conn
-    from thisishappening_spark.operators.similarity import as_double_vec, dot
+    from thisishappening_spark.operators.similarity import dot, double_vec
     from thisishappening_spark.queries.llm import COSINE_QUERY_IDS, _emb_dot
     from thisishappening_spark.sources.tables import load_table
 
     v = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_vec("embedding").alias("v")
+        "vec_id", F.expr(double_vec("embedding")).alias("v")
     )
     q = v.filter(v.vec_id.isin(COSINE_QUERY_IDS)).selectExpr(
         "vec_id AS query_id", "v AS qv"

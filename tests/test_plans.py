@@ -183,3 +183,24 @@ def test_multi_row_group_events_keep_their_exchanges(spark, sf_dir, tmp_path):
     assert "Exchange hashpartitioning" in _final_plan(spark, other, "q_weighted_activity")
     for name in SCALE_PATH_QUERIES:
         compare(spark, other, name)
+
+
+def test_suffix_less_events_files_keep_their_exchanges(spark, sf_dir, tmp_path):
+    """events as 4 data files named without a ``.parquet`` suffix (as Hive
+    names them) beside a ``_SUCCESS`` marker: the row-group gate counts
+    the files Spark scans, so the table is a plain scan that keeps its
+    exchanges, and the oracles read the same 4 files."""
+    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    other = tmp_path / "sfNoSuffix"
+    events = other / "events.parquet"
+    events.mkdir(parents=True)
+    step = -(-table.num_rows // 4)
+    for i in range(4):
+        pq.write_table(table.slice(i * step, step), str(events / f"00000{i}_0"))
+    (events / "_SUCCESS").write_bytes(b"")
+
+    assert _scan_row_groups(str(events), 2) == 2
+    assert "Coalesce" not in final_plan(load_table(spark, str(other), "events"))
+    assert "Exchange hashpartitioning" in _final_plan(spark, str(other), "q_weighted_activity")
+    for name in SCALE_PATH_QUERIES:
+        compare(spark, str(other), name)

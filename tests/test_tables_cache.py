@@ -7,6 +7,8 @@ turning into a result cache (which the bench rules forbid)."""
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlparse
+
 from thisishappening_spark.sources.tables import _RELATION_CACHE, load_table
 
 from tests.executed_plans import final_plan
@@ -101,9 +103,35 @@ def test_scan_row_groups_counts_nested_layouts(spark, sf_dir, tmp_path):
     assert _scan_row_groups(str(nested), threshold=2) == 2
 
 
+def test_table_files_match_spark_input_files(spark, tmp_path):
+    """``_table_files`` lists the files Spark scans (``inputFiles()``) on a
+    layout of hive directories, data files with and without a
+    ``.parquet`` suffix, and writers' leftovers that are not parquet:
+    ``_SUCCESS``, a ``.crc`` checksum, a ``_temporary/`` attempt and an
+    ``_``-prefixed subdirectory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from thisishappening_spark.sources.tables import _table_files
+
+    root = tmp_path / "layout.parquet"
+    data = ("lang=en/000000_0", "lang=en/part-0.parquet", "lang=de/000001_0", "lang=de/part-1.parquet")
+    leftovers = ("_SUCCESS", "lang=en/.part-0.parquet.crc", "_temporary/0/part-9.parquet", "lang=de/_delta/x.parquet")
+    for rel in data + leftovers:
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+    for rel in data:
+        pq.write_table(pa.table({"n": [1, 2]}), str(root / rel))
+    for rel in leftovers:
+        (root / rel).write_bytes(b"not parquet")
+
+    scanned = sorted(unquote(urlparse(f).path) for f in spark.read.parquet(str(root)).inputFiles())
+    assert scanned == sorted(str(root / rel) for rel in data)
+    assert sorted(_table_files(str(root))) == scanned
+
+
 def test_scan_row_groups_noops_on_non_posix_paths():
-    """Object-store URIs cannot be os.walk'ed: treat them as wide (no
-    fan-out) instead of crashing or misfiring."""
+    """Object-store URIs are not listed locally: treat them as
+    wide (no fan-out) instead of crashing or misfiring."""
     from thisishappening_spark.sources.tables import _scan_row_groups
 
     assert _scan_row_groups("s3://bucket/table.parquet", threshold=32) == 32

@@ -22,15 +22,14 @@ which admission filters prevent).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from thisishappening_spark.sqlexpr import flit, ident, sql_str
 
 
-def compute_weight(weight: str, x: str, factor: float | None) -> str:
+def compute_weight(weight: str, x: str, factor: float) -> str:
     """F16: w / exp(x·factor) (reference data_utils.py:86-88), as a SQL
     string (sqlexpr.py)."""
-    return f"({weight}) / exp(({x}) * {flit(factor or 0.0)})"
+    return f"({weight}) / exp(({x}) * {flit(factor)})"
 
 
 def coord_key(lon: str, lat: str) -> str:
@@ -98,4 +97,4 @@ def with_activity_weight(
         rank0 = f"row_number() OVER (PARTITION BY {user_col} ORDER BY {order}) - 1"
         w = compute_weight(w, rank0, weight_factor_user)
 
-    return df.withColumn("weight", F.expr(w))
+    return df.selectExpr("*", f"{w} AS weight")

@@ -56,22 +56,10 @@ class AdmissionConfig:
     lat_lon_quirk_compat: bool = False
 
 
-def _ignore_words_pattern(words: tuple[str, ...]) -> str:
-    """Join word regexes into one case-insensitive alternation.
-
-    ACCEPTED DEVIATION (documented, not a bug): the reference matches each
-    pattern against clean_text()-normalized tokens (tweet_utils.py:231-237
-    — after URL removal, ellipsis-truncated-token removal, unidecode
-    transliteration), while this predicate runs over the RAW body. For
-    \\b-wrapped word patterns the two mostly agree (\\b anchors at token
-    edges either way), but (a) a blocked word appearing only inside a URL
-    matches here and not in the reference, (b) a unicode-obfuscated word
-    the reference blocks after transliteration ('errór' → 'error') is
-    admitted here, and (c) ellipsis-truncated tokens the reference drops
-    are matched here. The raw-body predicate is the scan-pushdown-friendly
-    pre-filter; exact parity would need a second-stage filter over
-    clean_text()-normalized tokens, which this package does not build."""
-    return "(?i)(" + "|".join(words) + ")"
+def _any_of(patterns: tuple[str, ...]) -> str:
+    """Join regexes into one case-insensitive alternation, rendered as the
+    SQL string literal an ``RLIKE`` (a substring search) takes."""
+    return sql_str("(?i)(" + "|".join(patterns) + ")")
 
 
 def admission_check_exprs(df: DataFrame, cfg: AdmissionConfig) -> dict[str, str]:
@@ -99,9 +87,21 @@ def admission_check_exprs(df: DataFrame, cfg: AdmissionConfig) -> dict[str, str]
             f"AND {lat} BETWEEN {bbox}.south AND {bbox}.north END"
         )
 
-    # P3/P4 ignore-words over body and quoted text (tweet_utils.py:231-245)
+    # P3/P4 ignore-words over body and quoted text (tweet_utils.py:231-245).
+    # ACCEPTED DEVIATION (documented, not a bug): the reference matches each
+    # pattern against clean_text()-normalized tokens (tweet_utils.py:231-237
+    # — after URL removal, ellipsis-truncated-token removal, unidecode
+    # transliteration), while this predicate runs over the RAW body. For
+    # \b-wrapped word patterns the two mostly agree (\b anchors at token
+    # edges either way), but (a) a blocked word appearing only inside a URL
+    # matches here and not in the reference, (b) a unicode-obfuscated word
+    # the reference blocks after transliteration ('errór' → 'error') is
+    # admitted here, and (c) ellipsis-truncated tokens the reference drops
+    # are matched here. The raw-body predicate is the scan-pushdown-friendly
+    # pre-filter; exact parity would need a second-stage filter over
+    # clean_text()-normalized tokens, which this package does not build.
     if cfg.ignore_words:
-        pat = sql_str(_ignore_words_pattern(cfg.ignore_words))
+        pat = _any_of(cfg.ignore_words)
         checks["tweet_ignore_words"] = f"NOT coalesce(tweet_body, '') RLIKE {pat}"
         checks["quote_tweet_ignore_words"] = f"NOT coalesce(quoted_text, '') RLIKE {pat}"
 
@@ -114,7 +114,7 @@ def admission_check_exprs(df: DataFrame, cfg: AdmissionConfig) -> dict[str, str]
     # P6 screen-name regex blocklist, case-insensitive substring search
     # (tweet_utils.py:252-257)
     if cfg.ignore_user_screen_names:
-        pat = sql_str("(?i)(" + "|".join(cfg.ignore_user_screen_names) + ")")
+        pat = _any_of(cfg.ignore_user_screen_names)
         checks["valid_screen_name"] = f"NOT user_screen_name RLIKE {pat}"
 
     # P7 user-id blocklist (tweet_utils.py:259)

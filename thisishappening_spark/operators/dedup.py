@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from thisishappening_spark.sqlexpr import sql_str
+
 # Modulus and fixed (a, b) parameters for the MinHash permutation family
 # h_i(x) = (a_i * x + b_i) % MINHASH_P. Any fixed odd multipliers work; these
 # are arbitrary primes below 2^30, and ids are below 2^32, so a*id + b stays
@@ -86,8 +88,8 @@ def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     Scale: the shuffle key is the md5 hex (32 chars/doc); text never
     shuffles. Map-side partial aggregation applies to both min and count.
     """
-    # Spark reads the literal's backslash escape: the regex is \s+.
-    norm = r"lower(trim(regexp_replace(text, '\\s+', ' ')))"
+    whitespace = sql_str(r"\s+")
+    norm = f"lower(trim(regexp_replace(text, {whitespace}, ' ')))"
     return (
         docs.selectExpr(f"md5({norm}) AS text_hash", "doc_id")
         .groupBy("text_hash")

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from thisishappening_spark.sqlexpr import in_list
@@ -71,11 +71,6 @@ def double_vec(col: str) -> str:
     element-wise ``transform`` lambda would. Takes a column name and
     returns a SQL string, as this module's helpers do (sqlexpr.py)."""
     return f"CAST({col} AS ARRAY<DOUBLE>)"
-
-
-def as_double_vec(col: str) -> Column:
-    """:func:`double_vec` as a Column, the argument a UDF call takes."""
-    return F.expr(double_vec(col))
 
 
 def dot(a: str, b: str) -> str:

@@ -7,7 +7,8 @@ pruning reach the scan via Catalyst, which replaces the Postgres planner
 (SURVEY.md §4.1). At 100 TB the same code path applies — tables become
 date-partitioned parquet/Delta directories and `spark.read.parquet` picks
 up partition pruning automatically; nothing here assumes single-file
-tables.
+tables. A table's files are the ones ``_table_files`` lists, the set
+Spark scans; the row-group gate and the DuckDB oracle read that list.
 
 A one-task events scan is planned as one partition (``_load_events``), so
 the per-tweet requests above it run without a hash shuffle that AQE would
@@ -62,36 +63,44 @@ def load_table(
     return df
 
 
-def _scan_row_groups(path: str, threshold: int) -> int:
-    """Parquet row-group count across the table's files, CAPPED at
-    ``threshold`` — the row-group count bounds Spark's scan parallelism
-    (a row group is always read by one task), and the caller only asks
-    whether it is below the threshold. Driver-side pyarrow footer reads,
-    no Spark job:
+def _table_files(path: str) -> list[str]:
+    """The data files of the table at ``path``, by pyarrow's dataset
+    discovery: ``path`` itself when it is a file; otherwise every file
+    below it, hive and other subdirectories included, with any suffix,
+    skipping names that start with ``_`` or ``.`` (``_SUCCESS``,
+    checksums, ``_temporary/``, ``_delta_log/``) — the set Spark's file
+    index reads. The empty schema keeps discovery from reading a footer.
+    Raises ``FileNotFoundError`` for a missing path."""
+    import pyarrow as pa
+    import pyarrow.dataset as pa_ds
 
-    - a path with a scheme (``s3://`` …) or that is neither file nor
-      directory returns ``threshold``: an unknown layout is treated as
-      wide, with no fan-out exchange and no single-partition coalesce;
-    - directories are walked recursively (date-partitioned tables nest),
-      and both the walk and the footer reads stop once ``threshold`` is
-      reached (every file has ≥ 1 row group), so a production-sized table
-      costs no footer read at all.
+    return pa_ds.dataset(path, format="parquet", partitioning="hive", schema=pa.schema([])).files
+
+
+def _scan_row_groups(path: str, threshold: int) -> int:
+    """Parquet row-group count across the table's files
+    (:func:`_table_files`), CAPPED at ``threshold`` — the row-group count
+    bounds Spark's scan parallelism (a row group is always read by one
+    task), and the caller only asks whether it is below the threshold.
+    Driver-side pyarrow footer reads, no Spark job:
+
+    - a path with a scheme (``s3://`` …) or a missing path returns
+      ``threshold``: an unknown layout is treated as wide, with no fan-out
+      exchange and no single-partition coalesce;
+    - a table of ≥ ``threshold`` files returns ``threshold`` from the
+      listing alone (every file has ≥ 1 row group), so a production-sized
+      table costs no footer read, and the footer reads stop once
+      ``threshold`` is reached.
     """
     import pyarrow.parquet as pq
 
     if "://" in path:
         return threshold
-    if os.path.isdir(path):
-        files = []
-        for root, _dirs, names in os.walk(path):
-            for name in names:
-                if name.endswith(".parquet"):
-                    files.append(os.path.join(root, name))
-                    if len(files) >= threshold:
-                        return threshold
-    elif os.path.isfile(path):
-        files = [path]
-    else:
+    try:
+        files = _table_files(path)
+    except FileNotFoundError:
+        return threshold
+    if len(files) >= threshold:
         return threshold
     total = 0
     for f in files:
@@ -148,7 +157,8 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     ``SinglePartition``, which satisfies every distribution an aggregate,
     window, sort or join asks for, so no exchange is planned above it,
     while filters and column pruning still reach the scan. A table of ≥ 2
-    row groups or files, or a path ``_scan_row_groups`` cannot inspect (it
+    row groups or data files (any file name ``_table_files`` lists), or a
+    path ``_scan_row_groups`` cannot inspect (a URI or a missing path: it
     returns the threshold), is a plain scan and keeps its exchanges. The
     decision is made once per relation and cached with it like the file
     listing: no request pays a footer read, and a table rewritten with

@@ -31,8 +31,8 @@ TABLE_NAMES = [
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """A DuckDB connection with one view per table under ``sf_dir``. A
-    directory table is read from the file list the package's loader uses
+    """A DuckDB connection with one view per table under ``sf_dir``, each
+    read from the file list the package's loader uses
     (``sources.tables._table_files``), since DuckDB's ``read_parquet``
     finds no files in a bare directory."""
     from thisishappening_spark.sources.tables import _table_files
@@ -40,11 +40,9 @@ def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLE_NAMES:
         path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(path):
+        if os.path.exists(path):
             files = ", ".join(f"'{f}'" for f in _table_files(path))
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet([{files}])")
-        elif os.path.exists(path):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
 
 

@@ -167,6 +167,16 @@ SCALE_PATH_QUERIES = [
 ]
 
 
+def _assert_plain_scale_scan(spark, sf_dir):
+    """``sf_dir``'s events table is loaded as a plain scan: no
+    ``Coalesce``, ``q_weighted_activity`` keeps its hash exchange, and
+    every ``SCALE_PATH_QUERIES`` query matches its oracle."""
+    assert "Coalesce" not in final_plan(load_table(spark, sf_dir, "events"))
+    assert "Exchange hashpartitioning" in _final_plan(spark, sf_dir, "q_weighted_activity")
+    for name in SCALE_PATH_QUERIES:
+        compare(spark, sf_dir, name)
+
+
 def test_multi_row_group_events_keep_their_exchanges(spark, sf_dir, tmp_path):
     """An events table of several row groups (a table at scale) is loaded
     as a plain scan: no ``Coalesce``, the hash exchanges stay, and the
@@ -178,11 +188,7 @@ def test_multi_row_group_events_keep_their_exchanges(spark, sf_dir, tmp_path):
         table, os.path.join(other, "events.parquet"), row_group_size=-(-table.num_rows // 4)
     )
     assert pq.ParquetFile(os.path.join(other, "events.parquet")).num_row_groups >= 2
-
-    assert "Coalesce" not in final_plan(load_table(spark, other, "events"))
-    assert "Exchange hashpartitioning" in _final_plan(spark, other, "q_weighted_activity")
-    for name in SCALE_PATH_QUERIES:
-        compare(spark, other, name)
+    _assert_plain_scale_scan(spark, other)
 
 
 def test_suffix_less_events_files_keep_their_exchanges(spark, sf_dir, tmp_path):
@@ -200,7 +206,4 @@ def test_suffix_less_events_files_keep_their_exchanges(spark, sf_dir, tmp_path):
     (events / "_SUCCESS").write_bytes(b"")
 
     assert _scan_row_groups(str(events), 2) == 2
-    assert "Coalesce" not in final_plan(load_table(spark, str(other), "events"))
-    assert "Exchange hashpartitioning" in _final_plan(spark, str(other), "q_weighted_activity")
-    for name in SCALE_PATH_QUERIES:
-        compare(spark, str(other), name)
+    _assert_plain_scale_scan(spark, str(other))

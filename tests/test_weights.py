@@ -49,3 +49,15 @@ def test_w2_guard_keeps_every_weight(spark):
         lo is not None and la is not None and not (math.isnan(lo) or math.isnan(la))
         for lo, la in blocked
     )
+
+
+def test_activity_weight_replaces_an_existing_weight_column(spark):
+    """A frame that already has a ``weight`` column gets it replaced in
+    place, as the reference's ``tweet['weight'] = …`` does, so ``weight``
+    still resolves."""
+    df = spark.createDataFrame([(5.0, False), (5.0, True)], "weight double, has_coords boolean")
+    got = with_activity_weight(df, weight_factor_no_coords=1.0)
+    assert got.columns == ["weight", "has_coords"]
+    rows = sorted((r.has_coords, r.weight) for r in got.select("has_coords", "weight").collect())
+    assert [c for c, _ in rows] == [False, True] and rows[1][1] == 1.0
+    assert math.isclose(rows[0][1], math.exp(-1.0), rel_tol=1e-15)

@@ -52,10 +52,10 @@ def with_activity_weight(
     time_col: str = "created_at",
     order_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Mirror of set_activity_weight (reference data_utils.py:91-145): adds
-    the ``weight`` column. W2 reads ``longitude``/``latitude`` and W3 reads
-    ``has_coords``, the tweet-record columns; a factor left ``None`` skips
-    its step.
+    """Mirror of set_activity_weight (reference data_utils.py:91-145): sets
+    the ``weight`` column, replacing in place one the input already has.
+    W2 reads ``longitude``/``latitude`` and W3 reads ``has_coords``, the
+    tweet-record columns; a factor left ``None`` skips its step.
 
     `reduce_weight_lon_lat` is a list of ("%.5f"-formatted lon, lat) string
     pairs, matching the reference's config representation (app.py:200-209).
@@ -97,4 +97,7 @@ def with_activity_weight(
         rank0 = f"row_number() OVER (PARTITION BY {user_col} ORDER BY {order}) - 1"
         w = compute_weight(w, rank0, weight_factor_user)
 
-    return df.selectExpr("*", f"{w} AS weight")
+    # Matched without case, as Spark resolves a name.
+    weight = f"{w} AS weight"
+    cols = [weight if c.lower() == "weight" else ident(c) for c in df.columns]
+    return df.selectExpr(*(cols if weight in cols else cols + [weight]))
